@@ -1,0 +1,36 @@
+package perfbench
+
+/** Minimal JSON rendering for the result and span files (maps keep their
+  * insertion order; doubles keep every digit). */
+object Json {
+  def render(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.iterator.map { case (k, x) => quote(k.toString) + ":" + render(x) }
+        .mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.iterator.map(render).mkString("[", ",", "]")
+    case o: Option[_] => o.map(render).getOrElse("null")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case '\n' => b.append("\\n")
+      case '\r' => b.append("\\r")
+      case '\t' => b.append("\\t")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+}
