@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.Partitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws}
 
 import graft.functions.HadoopTextHash
 import graft.operators.Bigrams
@@ -25,10 +25,14 @@ import graft.operators.Bigrams.RecordMode
   * `--hadoop-layout` reproduces the reference cluster runs' exact
   * on-disk layout: 32 (or N) part files placed by Hadoop
   * `Text.hashCode % N` with keys sorted within each partition —
-  * byte-comparable against `bigram_custom8/9`. Implemented with
-  * `repartitionAndSortWithinPartitions`, which is precisely
-  * MapReduce's shuffle contract (hash-partition + per-partition key
-  * sort) expressed as one Spark primitive.
+  * byte-comparable against `bigram_custom8/9`. Implemented as one
+  * Catalyst plan: `repartitionById` on the codegen'd
+  * `HadoopTextHash.hadoopPartition` (a pass-through partition-id
+  * exchange, which AQE does not coalesce), `sortWithinPartitions` on the
+  * key (UnsafeRow string order is Hadoop `Text` byte order) and
+  * `concat_ws` formatting. The lines are written with `saveAsTextFile`
+  * rather than the DataFrame text writer, because the latter skips
+  * empty partitions and MapReduce writes every part file, empty or not.
   */
 object BigramJob {
 
@@ -44,9 +48,9 @@ object BigramJob {
         case "--mode" :: "file" :: t => loop(t, c.copy(mode = RecordMode.WholeFiles), pos)
         case "--mode" :: other => Left(s"--mode expects line|file, got ${other.headOption.getOrElse("<nothing>")}")
         case "--zip" :: t => loop(t, c.copy(zip = true), pos)
-        case "--partitions" :: n :: t if n.forall(_.isDigit) && n.nonEmpty =>
+        case "--partitions" :: n :: t if n.forall(_.isDigit) && n.toIntOption.exists(_ > 0) =>
           loop(t, c.copy(partitions = n.toInt), pos)
-        case "--partitions" :: other => Left(s"--partitions expects a number, got ${other.headOption.getOrElse("<nothing>")}")
+        case "--partitions" :: other => Left(s"--partitions expects a positive 32-bit number, got ${other.headOption.getOrElse("<nothing>")}")
         case "--hadoop-layout" :: t => loop(t, c.copy(hadoopLayout = true), pos)
         // generic conf passthrough — the ToolRunner `-D key=value`
         // contract (`WordCountV2.java:18,26`) in Spark form
@@ -75,18 +79,16 @@ object BigramJob {
     else Bigrams.writeTsv(counts, c.output, c.partitions)
   }
 
-  /** MapReduce-identical sink: HashPartitioner(Text.hashCode) % N,
-    * keys sorted within partitions, `key \t count` lines. */
+  /** MapReduce-identical sink: `Text.hashCode % N` placement, keys
+    * sorted within partitions, `key \t count` lines, all `N` part files. */
   def writeHadoopLayout(counts: DataFrame, outDir: String, nParts: Int): Unit = {
     import counts.sparkSession.implicits._
-    val partitioner = new Partitioner {
-      override val numPartitions: Int = nParts
-      override def getPartition(key: Any): Int =
-        (HadoopTextHash.compute(key.asInstanceOf[String]) & Int.MaxValue) % nParts
-    }
-    counts.as[(String, Long)].rdd
-      .repartitionAndSortWithinPartitions(partitioner)
-      .map { case (k, v) => s"$k\t$v" }
+    val Array(key, count) = counts.columns.map(col)
+    counts
+      .repartitionById(nParts, HadoopTextHash.hadoopPartition(key, nParts))
+      .sortWithinPartitions(key)
+      .select(concat_ws("\t", key, count))
+      .as[String].rdd
       .saveAsTextFile(outDir)
   }
 

@@ -14,9 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * the golden part files in SURVEY.md §8.4: `zu+i → partition 26`,
   * `00eggs+fried → 0`, …).
   *
-  * Only needed when byte-identical golden *file layout* matters; normal
-  * queries compare order-insensitively and use Spark's own Murmur3
-  * shuffle hash.
+  * `hadoopPartition` is the partition-id expression of
+  * `BigramJob.writeHadoopLayout`, the `--hadoop-layout` sink that
+  * reproduces the golden *file layout*; normal queries compare
+  * order-insensitively and use Spark's own Murmur3 shuffle hash.
   */
 object HadoopTextHash {
 
@@ -39,15 +40,6 @@ object HadoopTextHash {
     var h = 1
     var i = 0
     while (i < n) { h = 31 * h + s.getByte(i); i += 1 }
-    h
-  }
-
-  /** Same hash over a JVM String (driver/RDD side). */
-  def compute(s: String): Int = {
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var h = 1
-    var i = 0
-    while (i < bytes.length) { h = 31 * h + bytes(i); i += 1 }
     h
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.BigramJob.Config
 import graft.operators.Bigrams
 import graft.operators.Bigrams.RecordMode
@@ -67,7 +69,7 @@ class GoldenParitySpec extends SparkSpec {
     for ((parts, name) <- Seq((p9, "custom9"), (p8, "custom8"))) {
       var bad = 0
       parts.foreach { case (k, idx) =>
-        if ((graft.functions.HadoopTextHash.compute(k) & Int.MaxValue) % 32 != idx) bad += 1
+        if ((graft.functions.HadoopTextHash.compute(UTF8String.fromString(k)) & Int.MaxValue) % 32 != idx) bad += 1
       }
       assert(bad == 0, s"$name: $bad keys placed off their Text.hashCode partition")
     }
