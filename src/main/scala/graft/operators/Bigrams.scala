@@ -43,10 +43,9 @@ object Bigrams {
     }
 
   /** Read a ZIP corpus as records of the given granularity — via the
-    * DSv2 `zip-entries` source: entry-granular splits planned from
-    * each archive's central directory, per-entry streamed decompress,
-    * no whole-archive buffering (the [[ZipEntries]] binaryFile route
-    * plans one partition per archive and caps archives at 2 GB). */
+    * DSv2 `zip-entries` source ([[graft.sources.v2.ZipEntriesSource]]):
+    * entry-granular splits planned from each archive's central
+    * directory, per-entry decompress, no whole-archive buffering. */
   def readZip(spark: SparkSession, path: String, mode: RecordMode): DataFrame = {
     val text = spark.read.format("zip-entries").load(path)
       .select(decode(col("content"), "UTF-8").as("value"))

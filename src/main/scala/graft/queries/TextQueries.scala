@@ -78,7 +78,7 @@ object TextQueries {
     "t08_zip_roundtrip" -> ((s, dir) => {
       import s.implicits._
       val zipPath = graft.sources.ZipFixtures.docsZip(s, dir)
-      Bigrams.counts(graft.sources.ZipEntries.entryText(s, zipPath))
+      Bigrams.fromZip(s, zipPath, Bigrams.RecordMode.WholeFiles)
         .orderBy($"bigram")
     }),
 

@@ -6,7 +6,6 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.operators.Bigrams
 import graft.operators.Bigrams.RecordMode
-import graft.sources.ZipEntries
 
 class ZipEntriesSpec extends SparkSpec {
   import spark.implicits._
@@ -30,32 +29,20 @@ class ZipEntriesSpec extends SparkSpec {
     f.getAbsolutePath
   }
 
-  test("readArchive: every entry exactly once, order preserved, dirs skipped") {
-    val bytes = makeZip("a.txt" -> "alpha", "b.txt" -> "bravo", "c.txt" -> "")
-    val got = ZipEntries.readArchive(bytes)
-    assert(got.map(_._1) == Seq("a.txt", "b.txt", "c.txt"))
-    assert(got.map(p => new String(p._2, UTF_8)) == Seq("alpha", "bravo", ""))
-  }
-
   test("entries DataFrame: one row per entry (no duplicate-first-entry bug)") {
     val path = writeZipFile("x.txt" -> "one two", "y.txt" -> "three four", "empty.txt" -> "")
-    val df = ZipEntries.entries(spark, path)
-    assert(df.columns.toSeq == Seq("entry_name", "content"))
+    val df = spark.read.format("zip-entries").load(path)
     assert(df.count() == 3)
     val names = df.select("entry_name").as[String].collect().sorted.toSeq
     assert(names == Seq("empty.txt", "x.txt", "y.txt"))
   }
 
-  test("entryText decodes UTF-8; entryLines explodes \\n and \\r\\n") {
-    val path = writeZipFile("a.txt" -> "l1\nl2\r\nl3", "b.txt" -> "solo")
-    val whole = ZipEntries.entryText(spark, path)
-      .as[(String, String)].collect().toMap
-    assert(whole("a.txt") == "l1\nl2\r\nl3")
-    assert(whole("b.txt") == "solo")
-    val lines = ZipEntries.entryLines(spark, path)
-      .as[(String, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    assert(lines("a.txt") == Seq("l1", "l2", "l3"))
-    assert(lines("b.txt") == Seq("solo"))
+  test("readZip decodes UTF-8 entries; Lines explodes \\n and \\r\\n") {
+    val path = writeZipFile("a.txt" -> "l1\nl2\r\nl3 ü", "b.txt" -> "solo")
+    val whole = Bigrams.readZip(spark, path, RecordMode.WholeFiles).as[String].collect()
+    assert(whole.toSeq == Seq("l1\nl2\r\nl3 ü", "solo"))
+    val lines = Bigrams.readZip(spark, path, RecordMode.Lines).as[String].collect()
+    assert(lines.toSeq == Seq("l1", "l2", "l3 ü", "solo"))
   }
 
   test("bigrams from zip: line vs whole-file record granularity") {

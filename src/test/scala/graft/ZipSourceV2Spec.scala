@@ -2,12 +2,64 @@ package graft
 
 import java.io.FileOutputStream
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
 
-import graft.sources.ZipEntries
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.sources.v2.ZipCentral
 
 class ZipSourceV2Spec extends SparkSpec {
   import spark.implicits._
+
+  /** Runs `body` with `spark.sql.files.maxPartitionBytes` — the
+    * source's split byte budget — set to `bytes`, restoring it after. */
+  private def withSplitBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Spark jobs started while `body` runs. A marked sentinel job runs
+    * after it; the listener bus delivers events in order, so once the
+    * sentinel is seen every job `body` started has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).exists(_.getProperty("graft.test.sentinel") != null))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.sentinel", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(true) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(true), "sentinel job never reached the listener")
+      seen.toArray.count(_ == false)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Every entry `ZipInputStream` yields, in archive order, directories
+    * skipped — the reference reading of an archive. */
+  private def streamed(bytes: Array[Byte]): Seq[(String, Seq[Byte])] = {
+    val zis = new ZipInputStream(new java.io.ByteArrayInputStream(bytes), UTF_8)
+    try Iterator.continually(zis.getNextEntry).takeWhile(_ != null)
+      .filterNot(_.isDirectory).map(e => e.getName -> zis.readAllBytes().toSeq).toVector
+    finally zis.close()
+  }
+
+  /** Every entry of `f` read with `ZipCentral.readEntry`, the positioned
+    * per-entry read the slice reader falls back to. */
+  private def positioned(f: java.io.File): Map[String, Seq[Byte]] = {
+    val hp = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+    val in = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).open(hp)
+    try ZipCentral.list(in, f.length()).get.entries
+      .map(e => e.name -> ZipCentral.readEntry(in, e).toSeq).toMap
+    finally in.close()
+  }
 
   private def writeZip(dir: java.io.File, name: String, entries: (String, String)*): String = {
     val f = new java.io.File(dir, name)
@@ -47,38 +99,25 @@ class ZipSourceV2Spec extends SparkSpec {
     assert(df.as[String].collect().sorted.toSeq == Seq("x.txt", "y.txt"))
   }
 
-  test("agrees with the binaryFile+flatMap source") {
-    val v2 = spark.read.format("zip-entries").load(zipA)
-      .select($"entry_name", $"content".cast("string").as("text"))
-      .as[(String, String)].collect().toSet
-    val v1 = ZipEntries.entryText(spark, zipA).as[(String, String)].collect().toSet
-    assert(v2 == v1)
-  }
-
   test("parallel planning above the threshold matches driver-side planning") {
-    // 100 archives > the default threshold (64): planning runs as a
-    // Spark job parsing central directories on executors. Results must
-    // be identical to forced-sequential planning, split-for-split.
+    // 100 archives >= the threshold (64): planning runs as a Spark job
+    // parsing central directories on executors. Fewer than 64 archives
+    // plan on the driver, with no job; both halves of the corpus read
+    // that way must give the same rows as the whole corpus.
     val many = java.nio.file.Files.createTempDirectory("graft-v2zip-many").toFile
-    (0 until 100).foreach { i =>
-      writeZip(many, f"arc_$i%03d.zip",
-        s"doc_${i}_a.txt" -> s"alpha $i content", s"doc_${i}_b.txt" -> s"beta $i")
-    }
-    def readAll(thresh: Int) = spark.read.format("zip-entries")
-      .option("parallelPlanningThreshold", thresh.toString)
-      .load(s"$many/*.zip")
-      .select($"entry_name", $"archive", $"content".cast("string").as("text"))
-      .as[(String, String, String)].collect().toSet
-    val parallel = readAll(1)                 // force the Spark-job path
-    val sequential = readAll(Int.MaxValue)    // force the driver path
-    assert(parallel == sequential)
-    assert(parallel.size == 200)
-    assert(parallel.exists { case (n, _, t) => n == "doc_42_a.txt" && t == "alpha 42 content" })
-    // default threshold (64 <= 100 archives) also takes the parallel
-    // path and plans one split per tiny archive
-    val df = spark.read.format("zip-entries").load(s"$many/*.zip")
-    assert(df.rdd.getNumPartitions == 100)
-    assert(df.count() == 200)
+    val written = (0 until 100).flatMap { i =>
+      val es = Seq(s"doc_${i}_a.txt" -> s"alpha $i content", s"doc_${i}_b.txt" -> s"beta $i")
+      writeZip(many, f"arc_$i%03d.zip", es: _*)
+      es
+    }.toSet
+    def read(glob: String) = spark.read.format("zip-entries").load(s"$many/$glob")
+      .select($"entry_name", $"content".cast("string").as("text"))
+    val whole = read("*.zip")
+    assert(jobsDuring { assert(whole.rdd.getNumPartitions == 100) } >= 1)
+    assert(whole.as[(String, String)].collect().toSet == written)
+    val halves = Seq("arc_0[0-4]?.zip", "arc_0[5-9]?.zip").map(read)
+    assert(jobsDuring { halves.foreach(_.rdd.getNumPartitions) } == 0)
+    assert(halves.flatMap(_.as[(String, String)].collect()).toSet == written)
   }
 
   test("missing path → clear error") {
@@ -88,29 +127,30 @@ class ZipSourceV2Spec extends SparkSpec {
     assert(e.getMessage.contains("no files match") || e.getMessage.contains("nothing-"))
   }
 
-  test("entry-granular splits: maxBytesPerSplit fans one archive out to many partitions") {
+  test("entry-granular splits: a 1-byte budget fans one archive out") {
     val many = writeZip(dir, "many.zip",
       (1 to 10).map(i => (s"e$i.txt", s"payload number $i with some text")): _*)
     // 1-byte budget → one entry per split
-    val df = spark.read.format("zip-entries")
-      .option("maxBytesPerSplit", "1").load(many)
-    assert(df.rdd.getNumPartitions == 10)
+    val sliced = withSplitBytes(1) {
+      val df = spark.read.format("zip-entries").load(many)
+      assert(df.rdd.getNumPartitions == 10)
+      df.select($"entry_name", $"content".cast("string")).as[(String, String)].collect().toMap
+    }
     // unchanged results vs the single-partition plan
-    val sliced = df.select($"entry_name", $"content".cast("string"))
-      .as[(String, String)].collect().toMap
     val whole = spark.read.format("zip-entries").load(many)
       .select($"entry_name", $"content".cast("string"))
       .as[(String, String)].collect().toMap
-    assert(df.rdd.getNumPartitions > spark.read.format("zip-entries").load(many).rdd.getNumPartitions)
+    assert(spark.read.format("zip-entries").load(many).rdd.getNumPartitions == 1)
     assert(sliced == whole && sliced.size == 10)
     assert(sliced("e7.txt") == "payload number 7 with some text")
   }
 
   test("splits report preferredLocations from file block hosts") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val df = spark.read.format("zip-entries").option("maxBytesPerSplit", "1").load(zipA)
-    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-    val parts = scan.inputPartitions
+    val parts = withSplitBytes(1) {
+      val df = spark.read.format("zip-entries").load(zipA)
+      df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get.inputPartitions
+    }
     assert(parts.size == 2)
     // RawLocalFileSystem reports localhost for every block
     assert(parts.forall(_.preferredLocations().contains("localhost")))
@@ -118,7 +158,7 @@ class ZipSourceV2Spec extends SparkSpec {
 
   test("last pack's coalesced range ends at the central directory, not the archive tail") {
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    import graft.sources.v2.{ZipCentral, ZipSlicePartition}
+    import graft.sources.v2.ZipSlicePartition
     val z = writeZip(dir, "cdbound.zip",
       (1 to 6).map(i => (s"p$i.txt", s"payload $i " * 10)): _*)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(z))
@@ -128,17 +168,18 @@ class ZipSourceV2Spec extends SparkSpec {
     val cd = try ZipCentral.list(in, bytes.length.toLong).get.cdOffset finally in.close()
     assert(cd > 0 && cd < bytes.length,
       s"fixture central directory should sit inside the archive (cd=$cd len=${bytes.length})")
-    val df = spark.read.format("zip-entries").option("maxBytesPerSplit", "60").load(z)
-    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
-    val slices = scan.inputPartitions.collect { case p: ZipSlicePartition => p }
+    val (slices, rows) = withSplitBytes(60) {
+      val df = spark.read.format("zip-entries").load(z)
+      val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+      (scan.inputPartitions.collect { case p: ZipSlicePartition => p },
+        df.select($"entry_name", $"content".cast("string")).as[(String, String)].collect().toMap)
+    }
     assert(slices.size > 1, "fixture should plan multiple packs")
     // every pack's range stops before the central directory (ADVICE
     // r12: the old tail bound over-read the whole directory on the
     // last pack), and the content still reads back whole
     assert(slices.map(_.rangeEnd).max == cd,
       s"last pack should end at the central directory ($cd), got ${slices.map(_.rangeEnd).max}")
-    val rows = df.select($"entry_name", $"content".cast("string"))
-      .as[(String, String)].collect().toMap
     assert(rows.size == 6 && rows("p3.txt") == "payload 3 " * 10)
   }
 
@@ -171,9 +212,10 @@ class ZipSourceV2Spec extends SparkSpec {
     val crc = new java.util.zip.CRC32(); crc.update(payload)
     ze.setCrc(crc.getValue)
     zos.putNextEntry(ze); zos.write(payload); zos.closeEntry(); zos.close()
-    val rows = spark.read.format("zip-entries")
-      .option("maxBytesPerSplit", "1").load(f.getAbsolutePath)
-      .select($"entry_name", $"content".cast("string")).as[(String, String)].collect().toMap
+    val rows = withSplitBytes(1) {
+      spark.read.format("zip-entries").load(f.getAbsolutePath)
+        .select($"entry_name", $"content".cast("string")).as[(String, String)].collect().toMap
+    }
     assert(rows == Map("s.txt" -> "uncompressed bytes here"))
   }
 
@@ -196,22 +238,24 @@ class ZipSourceV2Spec extends SparkSpec {
       zos.close()
 
       // force many tiny splits so the seek-inflate path is exercised
-      val got = spark.read.format("zip-entries")
-        .option("maxBytesPerSplit", "1024").load(f.getAbsolutePath)
-        .select($"entry_name", $"content").as[(String, Array[Byte])]
-        .collect().map { case (n, c) => n -> c.toSeq }.toMap
+      val got = withSplitBytes(1024) {
+        spark.read.format("zip-entries").load(f.getAbsolutePath)
+          .select($"entry_name", $"content").as[(String, Array[Byte])]
+          .collect().map { case (n, c) => n -> c.toSeq }.toMap
+      }
       val expected = entries.map { case (n, p) => n -> p.toSeq }.toMap
       assert(got.keySet == expected.keySet, s"trial $trial: entry names differ")
       expected.foreach { case (n, p) =>
         assert(got(n) == p, s"trial $trial: content mismatch for $n")
       }
+      assert(positioned(f) == expected, s"trial $trial: positioned read differs")
     }
   }
 
   test("coalesced range read (default) equals the per-entry positioned path") {
-    // the default content path fetches each split's whole byte range in
-    // ONE ranged read and inflates out of the buffer; forcing
-    // coalescedContentRead=false must produce byte-identical rows
+    // the content path fetches each split's whole byte range in ONE
+    // ranged read and inflates out of the buffer; the positioned
+    // per-entry read, ZipCentral.readEntry, must give identical bytes
     val f = new java.io.File(dir, "coal.zip")
     val zos = new ZipOutputStream(new FileOutputStream(f), UTF_8)
     val rnd = new scala.util.Random(20260815L)
@@ -225,20 +269,16 @@ class ZipSourceV2Spec extends SparkSpec {
       zos.putNextEntry(new ZipEntry(n)); zos.write(p); zos.closeEntry()
     }
     zos.close()
-    def readAll(coalesced: Boolean) = spark.read.format("zip-entries")
-      .option("maxBytesPerSplit", "8192")
-      .option("coalescedContentRead", coalesced.toString)
-      .load(f.getAbsolutePath)
-      .select($"entry_name", $"content").as[(String, Array[Byte])]
-      .collect().map { case (n, c) => n -> c.toSeq }.toMap
-    val viaBuffer = readAll(coalesced = true)
-    val viaSeeks = readAll(coalesced = false)
-    assert(viaBuffer.size == 30 && viaBuffer == viaSeeks)
+    val viaBuffer = withSplitBytes(8192) {
+      spark.read.format("zip-entries").load(f.getAbsolutePath)
+        .select($"entry_name", $"content").as[(String, Array[Byte])]
+        .collect().map { case (n, c) => n -> c.toSeq }.toMap
+    }
+    assert(viaBuffer.size == 30 && viaBuffer == positioned(f))
     assert(viaBuffer == entries.map { case (n, p) => n -> p.toSeq }.toMap)
   }
 
   test("readEntryFrom: reads from a covering buffer, None outside it") {
-    import graft.sources.v2.ZipCentral
     val path = writeZip(dir, "rf.zip",
       "a.txt" -> "alpha payload", "b.txt" -> "beta payload longer")
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
@@ -271,11 +311,51 @@ class ZipSourceV2Spec extends SparkSpec {
     // tiny entries: the per-split ENTRY cap (default 65536) bounds task
     // descriptor size — 66000 entries → 2 splits, not 1
     assert(df.rdd.getNumPartitions == 2)
-    assert(spark.read.format("zip-entries").option("maxEntriesPerSplit", "10000")
-      .load(f.getAbsolutePath).rdd.getNumPartitions == 7)
     // spot-check content through the sliced reader
     val sample = df.filter($"entry_name" === "d/27")
       .select($"content".cast("string")).as[String].head()
     assert(sample == ('a' + 1).toChar.toString)
+  }
+
+  test("hidden files (_SUCCESS, dot-files) in an archive directory are skipped") {
+    val d = java.nio.file.Files.createTempDirectory("graft-v2zip-hidden").toFile
+    writeZip(d, "a.zip", "x.txt" -> "one two", "y.txt" -> "three")
+    writeZip(d, "b.zip", "z.txt" -> "four five six")
+    val expected = spark.read.format("zip-entries").load(s"$d/a.zip", s"$d/b.zip")
+      .select($"entry_name", $"content".cast("string")).as[(String, String)].collect().toSet
+    new java.io.File(d, "_SUCCESS").createNewFile()
+    java.nio.file.Files.writeString(new java.io.File(d, ".notes").toPath, "not an archive")
+    for (path <- Seq(d.toString, s"$d/*")) {
+      val df = spark.read.format("zip-entries").load(path)
+      assert(df.rdd.getNumPartitions == 2, s"$path planned hidden files")
+      assert(df.select($"entry_name", $"content".cast("string"))
+        .as[(String, String)].collect().toSet == expected)
+    }
+  }
+
+  test("streamed fallback: an archive without its EOCD reads like ZipInputStream") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.v2.ZipArchivePartition
+    val bos = new java.io.ByteArrayOutputStream()
+    val zos = new ZipOutputStream(bos, UTF_8)
+    Seq("a.txt" -> "alpha", "sub/" -> "", "b.txt" -> "bravo", "empty.txt" -> "", "c.txt" -> "charlie")
+      .foreach { case (n, text) =>
+        zos.putNextEntry(new ZipEntry(n)); zos.write(text.getBytes(UTF_8)); zos.closeEntry()
+      }
+    zos.close()
+    // no archive comment, so the EOCD record is the last 22 bytes;
+    // without it the central directory cannot be located
+    val bytes = bos.toByteArray.dropRight(22)
+    val f = new java.io.File(dir, "no-eocd.zip")
+    java.nio.file.Files.write(f.toPath, bytes)
+    val df = spark.read.format("zip-entries").load(f.getAbsolutePath)
+    val scan = df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+    assert(scan.inputPartitions.toSeq.map(_.getClass) == Seq(classOf[ZipArchivePartition]))
+    val got = df.select($"entry_name", $"content").as[(String, Array[Byte])]
+      .collect().map { case (n, c) => n -> c.toSeq }.toSeq
+    val want = streamed(bytes)
+    assert(want.map(_._1) == Seq("a.txt", "b.txt", "empty.txt", "c.txt"))
+    assert(got == want)
+    assert(new String(got.head._2.toArray, UTF_8) == "alpha" && got(2)._2.isEmpty)
   }
 }

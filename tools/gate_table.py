@@ -108,12 +108,6 @@ GATES = [
      "`STATE_r{N}_scale.json` / `_volume.json`",
      "keyed state ∝ keys, FLAT on volume-only",
      ["STATE_r{n}_scale.json", "STATE_r{n}_volume.json"]),
-    ("ZIP source at archive scale",
-     "`graft.ZipScaleBench` (+ `multi`, `latency` with planning AND data-read RTT rungs)",
-     "`ZIPBENCH_r{N}*.json`",
-     "planned tasks = central-directory prediction; parallel planning ≥ 3× driver loop under RTT; coalesced content reads within 1.3× of the pack-size sweep optimum and ≥ 3× per-entry reads",
-     ["ZIPBENCH_r{n}.json", "ZIPBENCH_r{n}_multi.json",
-      "ZIPBENCH_r{n}_latency.json"]),
     ("Plan-shape assertions",
      "`PlanSurfaceSpec` (in `sbt test`)", "—",
      "no cartesian, BNLJ only with provably tiny broadcast, UDF allowlist",

@@ -131,12 +131,7 @@ run $J graft.StateAudit /root/testdata/sf0.1 target/sfdata/vol10 1.5 "STATE_r${N
 # projection — Spark's coalescer skips that origin)
 SPARK_DRIVER_MEM=40g run $J graft.MemAudit target/sfdata/sf10 "MEM_r${N}.json"
 
-# 6. ZIP source rungs (archive scale, planning parity, object-store RTT)
-run $J graft.ZipScaleBench "ZIPBENCH_r${N}.json"
-run $J graft.ZipScaleBench multi "ZIPBENCH_r${N}_multi.json"
-run $J graft.ZipScaleBench latency "ZIPBENCH_r${N}_latency.json"
-
-# 7. BENCH_sf1 refresh LAST (needs an idle machine) + the
+# 6. BENCH_sf1 refresh LAST (needs an idle machine) + the
 # round-over-round tripwire (VERDICT r13 #5): the sf1 serial artifact
 # is the only trustworthy wall-clock series — compare the fresh run
 # against the previous round's COMMITTED artifact; a >1.3x move on
@@ -152,7 +147,7 @@ head -1 bench_out.json > BENCH_sf1.json
 python3 tools/bench_gate.py /tmp/bench_sf1_prev.json BENCH_sf1.json \
   --out="BENCHGATE_r${N}.json" || FAIL+=("bench_gate (attribute in PLANS.md)")
 
-# 8. regenerate README's gate table from the artifacts just written —
+# 7. regenerate README's gate table from the artifacts just written —
 # the "last run" column is DERIVED from the filesystem, never typed
 # (VERDICT r12: the hand-maintained column claimed runs that never
 # happened; GateTableSpec fails `sbt test` if this drifts)
