@@ -12,7 +12,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Column-level text primitives matching the reference pipeline's
   * observable semantics (reference: `src/main/java/WordCountV2.java:76-94`),
   * re-expressed as Catalyst built-ins so the whole chain stays inside
-  * whole-stage codegen — no UDFs, no closures.
+  * whole-stage codegen — no UDFs, no closures. The exception is
+  * [[bigramCounts]], a generator that needs Catalyst's per-partition
+  * `terminate()` and so runs interpreted.
   *
   * Semantics preserved exactly (verified against the reference's golden
   * outputs, see SURVEY.md §8):
@@ -82,13 +84,10 @@ object TextFunctions {
     var len = 0
     var i = 0
     while (i < n) {
-      val b = s.getByte(i)
-      val isDigit = b >= '0' && b <= '9'
-      val isLower = b >= 'a' && b <= 'z'
-      val isUpper = b >= 'A' && b <= 'Z'
-      if (isDigit || isLower || isUpper) {
+      val t = tokenByte(s.getByte(i))
+      if (t != 0) {
         if (len == buf.length) buf = java.util.Arrays.copyOf(buf, len * 2)
-        buf(len) = if (isUpper) (b + 32).toByte else b
+        buf(len) = t
         len += 1
       } else if (len > 0) {
         out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
@@ -99,6 +98,23 @@ object TextFunctions {
     if (len > 0) out.add(UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len)))
     new GenericArrayData(out.toArray)
   }
+
+  /** Byte → its lowercased token byte, or 0 for a separator: token bytes
+    * are exactly ASCII `[A-Za-z0-9]` (see [[tokenize]]). The one token
+    * rule of [[sanitizeTokensCompute]] and [[BigramCounts]]. */
+  private val TokenBytes: Array[Byte] = Array.tabulate(256) { b =>
+    if (b >= '0' && b <= '9' || b >= 'a' && b <= 'z') b.toByte
+    else if (b >= 'A' && b <= 'Z') (b + 32).toByte
+    else 0.toByte
+  }
+
+  private[functions] def tokenByte(b: Byte): Byte = TokenBytes(b & 0xff)
+
+  /** `(bigram, count)` rows per distinct bigram of [[tokenize]]'s tokens,
+    * combined in-mapper; see [[BigramCounts]]. Select it alone and sum
+    * `count` per `bigram`: a key can appear in several rows. */
+  def bigramCounts(c: Column): Column =
+    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c)))
 
   /** Whitespace tokens of an already-clean string, empties removed. */
   def tokenizeRaw(c: Column): Column =

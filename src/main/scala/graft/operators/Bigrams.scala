@@ -7,8 +7,8 @@ import graft.functions.TextFunctions._
 
 /** The reference's flagship pipeline — bigram frequency counts over a
   * text corpus (`src/main/java/WordCountV2.java`) — as one declarative
-  * Catalyst plan: scan → sanitize → tokenize → bigram-explode →
-  * groupBy.count → (optionally key-sorted) TSV sink.
+  * Catalyst plan: scan → `bigram_counts` (sanitize, tokenize and count
+  * pairs per task) → groupBy.sum → (optionally key-sorted) TSV sink.
   *
   * Two record granularities, both observable in the reference's golden
   * outputs (SURVEY.md §5.2):
@@ -19,13 +19,19 @@ import graft.functions.TextFunctions._
   *    bigrams span line boundaries (`bigram_custom8`).
   *
   * Scale notes (100 TB posture):
-  *  - Everything upstream of the aggregation fuses into one
-  *    whole-stage-codegen pipeline; the only shuffle is the groupBy, and
-  *    Spark's partial aggregation combines map-side — strictly less
-  *    shuffle I/O than the reference, which set no combiner and shuffled
-  *    every (bigram, 1) pair (`WordCountV2.java:44-57`).
-  *  - Skew: bigram keys are Zipf-ish but partial agg collapses the heavy
-  *    hitters map-side, so no salting is needed for counts.
+  *  - Map side is an in-mapper combiner
+  *    ([[graft.functions.BigramCounts]]): each task counts token-id
+  *    pairs in a bounded table and emits one row per distinct pair at
+  *    the end of its partition, so no record is inflated into token or
+  *    bigram arrays and a bigram string is built once per distinct pair
+  *    per task. The Generate runs interpreted; the partial aggregate
+  *    above it is whole-stage codegen.
+  *  - The only shuffle is the groupBy's, after the partial aggregate —
+  *    strictly less shuffle I/O than the reference, which set no
+  *    combiner and shuffled every (bigram, 1) pair
+  *    (`WordCountV2.java:44-57`).
+  *  - Skew: bigram keys are Zipf-ish but the map side collapses the heavy
+  *    hitters, so no salting is needed for counts.
   */
 object Bigrams {
 
@@ -45,30 +51,26 @@ object Bigrams {
   /** Read a ZIP corpus as records of the given granularity — via the
     * DSv2 `zip-entries` source ([[graft.sources.v2.ZipEntriesSource]]):
     * entry-granular splits planned from each archive's central
-    * directory, per-entry decompress, no whole-archive buffering. */
+    * directory, per-entry decompress, no whole-archive buffering.
+    * Line mode ends a line at `\r\n`, `\r` or `\n`, as Hadoop's
+    * `LineReader` does on the text route. */
   def readZip(spark: SparkSession, path: String, mode: RecordMode): DataFrame = {
     val text = spark.read.format("zip-entries").load(path)
       .select(decode(col("content"), "UTF-8").as("value"))
     mode match {
       case RecordMode.WholeFiles => text
       case RecordMode.Lines =>
-        text.select(explode(split(col("value"), "\r?\n")).as("value"))
+        text.select(explode(split(col("value"), "\r\n|\r|\n")).as("value"))
     }
   }
 
-  /** `records[textCol] → (bigram: string, count: long)`.
-    *
-    * Tokens are materialized to their own column before the bigram
-    * transform: higher-order-function lambdas evaluate interpreted, so
-    * an `element_at(tokenize(...), i)` inside the lambda would re-run
-    * the full regex tokenization per array element — O(len²) per
-    * record. Against a bound attribute it is O(1). */
+  /** `records[textCol] → (bigram: string, count: long)`: the
+    * in-mapper partial counts of `bigram_counts`, summed per key. */
   def counts(records: DataFrame, textCol: String = "value"): DataFrame =
     records
-      .select(tokenize(col(textCol)).as("tokens"))
-      .select(explode(bigrams(col("tokens"))).as("bigram"))
+      .select(bigramCounts(col(textCol)))
       .groupBy("bigram")
-      .agg(count(lit(1)).as("count"))
+      .agg(sum("count").as("count"))
 
   /** End-to-end: corpus path → bigram counts. */
   def fromTextFiles(spark: SparkSession, path: String,

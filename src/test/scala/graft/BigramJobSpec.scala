@@ -111,9 +111,12 @@ class BigramJobSpec extends SparkSpec {
     // a runtime-modifiable conf reaches the live session during run()
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      val out = java.nio.file.Files.createTempDirectory("graft-conf").toString + "/bigrams"
+      val dir = Files.createTempDirectory("graft-conf")
+      val in = dir.resolve("corpus.txt")
+      Files.write(in, layoutDocs.mkString("\n").getBytes(UTF_8))
+      val out = dir.resolve("bigrams").toString
       BigramJob.run(spark, Config(
-        input = "/root/reference/src/main/resources/sample/zuni.txt", output = out,
+        input = in.toString, output = out,
         conf = Map("spark.sql.shuffle.partitions" -> "7",
                    // static conf: must be skipped, not crash
                    "spark.master" -> "local[1]")))

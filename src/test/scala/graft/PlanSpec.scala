@@ -46,7 +46,13 @@ class PlanSpec extends SparkSpec {
     // final orderBy — nothing else
     val exchanges = "Exchange".r.findAllIn(p).length
     assert(exchanges <= 3, s"unexpected shuffle count in:\n${p.take(800)}")
-    assert(p.contains("Generate explode"), "bigram explode missing")
+    // pairs are generated (and combined) map-side, under the partial
+    // aggregate that precedes the only pre-aggregation shuffle
+    val gen = p.indexOf("Generate bigram_counts")
+    assert(gen >= 0, s"bigram generator missing in:\n${p.take(800)}")
+    val partial = p.indexOf("partial_sum")
+    assert(partial >= 0 && gen > partial, s"generator not under the partial aggregate in:\n${p.take(800)}")
+    assert(!p.contains("explode"), "per-occurrence explode crept back")
     assert(!p.toLowerCase.contains("batchevalpython"), "python udf crept in")
   }
 

@@ -38,11 +38,25 @@ class ZipEntriesSpec extends SparkSpec {
   }
 
   test("readZip decodes UTF-8 entries; Lines explodes \\n and \\r\\n") {
-    val path = writeZipFile("a.txt" -> "l1\nl2\r\nl3 ü", "b.txt" -> "solo")
+    val path = writeZipFile("a.txt" -> "l1\nl2\r\nl3 ü", "b.txt" -> "solo", "c.txt" -> "r1\rr2")
     val whole = Bigrams.readZip(spark, path, RecordMode.WholeFiles).as[String].collect()
-    assert(whole.toSeq == Seq("l1\nl2\r\nl3 ü", "solo"))
+    assert(whole.toSeq == Seq("l1\nl2\r\nl3 ü", "solo", "r1\rr2"))
     val lines = Bigrams.readZip(spark, path, RecordMode.Lines).as[String].collect()
-    assert(lines.toSeq == Seq("l1", "l2", "l3 ü", "solo"))
+    assert(lines.toSeq == Seq("l1", "l2", "l3 ü", "solo", "r1", "r2"))
+  }
+
+  test("line mode: the ZIP and text routes end lines alike (lone \\r, \\r\\n, \\n)") {
+    // Hadoop's LineReader (the text route) also ends a line at a lone CR
+    val text = "alpha beta\rgamma delta\r\nepsilon zeta\nfinal word"
+    val txt = java.nio.file.Files.createTempFile("graft-lines", ".txt")
+    java.nio.file.Files.write(txt, text.getBytes(UTF_8))
+    val viaText = Bigrams.fromTextFiles(spark, txt.toString, RecordMode.Lines)
+      .as[(String, Long)].collect().toMap
+    val viaZip = Bigrams.fromZip(spark, writeZipFile("t.txt" -> text), RecordMode.Lines)
+      .as[(String, Long)].collect().toMap
+    assert(viaText == Map("alpha+beta" -> 1L, "gamma+delta" -> 1L,
+      "epsilon+zeta" -> 1L, "final+word" -> 1L))
+    assert(viaZip == viaText)
   }
 
   test("bigrams from zip: line vs whole-file record granularity") {
