@@ -38,7 +38,7 @@ object RepoStamp {
       .forall(_.nonEmpty)
 
   /** Files under src/main whose content can never alter a measured
-    * PLAN: the gate/bench/diag mains (pure measurement and reporting —
+    * PLAN: the gate/bench mains (pure measurement and reporting —
     * an allowlist bound or a JSON field is not a query plan) and this
     * helper itself. Everything else — operators, queries, functions,
     * sources, streaming, plans, the session/entry wiring, the corpus
@@ -50,10 +50,7 @@ object RepoStamp {
   private val MeasurementOnly: Set[String] = Set(
     "Bench.scala", "Explain.scala", "Verify.scala", "ShuffleAudit.scala",
     "ScaleCheck.scala", "MemAudit.scala", "SkewDrill.scala",
-    "HeapDrill.scala", "StateAudit.scala", "ZipScaleBench.scala",
-    "LayoutBench.scala", "RepoStamp.scala", "CorpusStatsDiag.scala",
-    "EmbBucketDiag.scala", "MinHashBandDiag.scala", "QueryCountDiag.scala",
-    "ScaleGenDiag.scala", "SpillDiag.scala", "StreamDiag.scala")
+    "HeapDrill.scala", "StateAudit.scala", "RepoStamp.scala")
 
   /** Digest of the MEASURED SURFACE of a src/main tree object: its
     * recursive listing (per-blob object hashes) with the

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   *    The overall per-shard type map is NOT injective by construction
   *    (ADVICE r09): a rotated class-0 word can collide with an
   *    unchanged class-1/2 type or with another rotated word.
-  *    [[ScaleGenDiag]] measures the realized merge rate on the
-  *    generator's own expression: 0 of 31 types at generation depth 1
-  *    (sf0.1→sf1), ≤ 12.8% of 320 types per shard at depth 2
-  *    (sf1→sf10), ≤ 24.3% of 801 at depth 3. (Injectivity by
+  *    The realized merge rate, measured in r10 on the generator's
+  *    own expression: 0 of 31 types at generation depth 1 (sf0.1→sf1),
+  *    ≤ 12.8% of 320 types per shard at depth 2 (sf1→sf10), ≤ 24.3%
+  *    of 801 at depth 3. (Injectivity by
   *    construction is NOT available here: it needs a rotation-
   *    invariant key, and an invariant key makes equal-stride-sum shard
   *    paths compose to ONE map at depth 2 — exactly the cross-shard
@@ -103,17 +103,15 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGen {
 
-  /** The per-shard word-rotation map, factored so [[ScaleGenDiag]]
-    * measures collision rates on the EXACT expression the generator
-    * applies (an independently re-typed copy would silently drift).
+  /** The per-shard word-rotation map that [[rotateSql]] applies.
     * Letters (case-preserving) rotate by `(hash(w) + 7·shard) mod 26`,
     * digits independently by `(hash(w) + 3·shard) mod 10`. */
-  private[graft] val RotFrom: String = {
+  private val RotFrom: String = {
     val lower = "abcdefghijklmnopqrstuvwxyz"
     lower + lower.toUpperCase + "0123456789"
   }
 
-  private[graft] val RotAlphas: String = {
+  private val RotAlphas: String = {
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val digits = "0123456789"
     // indexed by r·10 + d: letters (and uppercase) rotated r, digits d
@@ -126,7 +124,7 @@ object ScaleGen {
 
   /** SQL fragment rotating word expression `w` under shard expression
     * `shard` — the class-0 rewrite body. */
-  private[graft] def rotateSql(w: String, shard: String): String =
+  private def rotateSql(w: String, shard: String): String =
     s"""translate($w, '$RotFrom',
        |  element_at($RotAlphas,
        |    pmod(hash($w) + 7 * $shard, 26) * 10 +
@@ -195,7 +193,7 @@ object ScaleGen {
         // rewritten through the shard's alphabet. Within a shard the
         // same substitution applies to every document, so exact
         // duplicates stay exact; the map is injective on the BASE
-        // vocabulary (ScaleGenDiag: 0 merges of 31 types) so depth-1
+        // vocabulary (r10 measurement: 0 merges of 31 types) so depth-1
         // within-shard Jaccard is preserved exactly, and approximately
         // injective at depth ≥ 2 (≤ 12.8%/24.3% type merges at
         // depths 2/3 — see the object scaladoc for why that is

@@ -73,29 +73,14 @@ object ConnectedComponents {
     // falls to sort-merge, the edge side — the heavy one — is never
     // re-exchanged (guide §2.4: operations keyed the same way share
     // one exchange).
-    // A/B hook (same convention as spark.graft.mining.pinPairParts):
-    // `spark.graft.cc.explodeSym=false` restores the r14 two-read
-    // union shape for attribution runs.
-    val explodeSym = !edges.sparkSession.conf
-      .getOption("spark.graft.cc.explodeSym").contains("false")
-    val sym = if (explodeSym) {
-      val doubled = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-        .select(explode(array(
-          struct(col("a").as("u"), col("b").as("v")),
-          struct(col("b").as("u"), col("a").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
-      edgeParts.fold(doubled)(p => doubled.repartition(p, col("v")))
-        .distinct()
-        .transform(Checkpoints.materialize)
-    } else {
-      val once = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-        .transform(Checkpoints.materialize)
-      val s2 = once.union(once.select(col("v"), col("u")))
-        .distinct()
-        .transform(Checkpoints.materialize)
-      unpersistOf(once)
-      s2
-    }
+    val doubled = edges.select(col(aCol).as("a"), col(bCol).as("b"))
+      .select(explode(array(
+        struct(col("a").as("u"), col("b").as("v")),
+        struct(col("b").as("u"), col("a").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
+    val sym = edgeParts.fold(doubled)(p => doubled.repartition(p, col("v")))
+      .distinct()
+      .transform(Checkpoints.materialize)
 
     // Only edge endpoints can ever change label — isolated vertices
     // are their own component by definition. Iterate over the (far

@@ -112,40 +112,6 @@ object Dedup {
     docs.select(col(idCol), tokenize(col(textCol)).as("_toks"))
       .select(col(idCol), explode(array_distinct(ngrams(col("_toks"), n))).as("shingle"))
 
-  /** Corpus-stat-derived df cap for [[ngramJaccardPairs]] (VERDICT r08
-    * #5): the largest cap such that the expected inverted-index join
-    * budget Σ_shingle min(df, cap)·df stays within
-    * `pairBudgetPerOcc × total shingle occurrences` — i.e. the join
-    * may amplify each posting by at most a chosen constant, whatever
-    * the corpus's df distribution does. Σ min(df,cap)·df is exactly
-    * the number of (probe row × partner) pairs the shingle equi-join
-    * generates under the cap, so the bound is the join's real cost
-    * model, not a proxy.
-    *
-    * Budget default 16/occurrence, chosen from the r9 scale ladder's
-    * measured df histograms: every oracle-checked SF (and the sf1
-    * step) sits uncapped below it, and at sf10 it binds (cap 30,
-    * realized 14.0 pairs/occ vs sf1's uncapped 14.9) — so candidate
-    * volume goes LINEAR right where the quadratic df² term would take
-    * over. The original 64/occ left a 4× per-occurrence growth window
-    * that the sf1→sf10 gate measured as 26× shuffle and 74 GB of
-    * spill; the shingles a tighter cap drops are cross-corpus
-    * boilerplate with ~zero Jaccard signal.
-    *
-    * Returns `Int.MaxValue` (= uncapped, the operator's default exact
-    * semantics) when even the uncapped budget fits — which is the case
-    * for every oracle-checked SF, so deriving the cap never perturbs
-    * the gate. The floor of 16 keeps a pathological corpus (one
-    * shingle everywhere) from deriving a cap below any real signal
-    * band. Cost: one tokenize+shingle scan and two aggregations; the
-    * collected histogram is (distinct df values) rows — corpus stats,
-    * never corpus rows. Callers memoize per corpus ([[graft.queries]]
-    * derives once per data dir).
-    */
-  def deriveMaxDf(docs: DataFrame, idCol: String, textCol: String,
-                  n: Int = 3, pairBudgetPerOcc: Double = 16.0): Int =
-    deriveMiningBudget(docs, idCol, textCol, n, pairBudgetPerOcc).maxDf
-
   /** The d03-family cost-model answer in full: the df cap AND the
     * candidate-pair volume the capped join will actually generate.
     * The prediction sizes the pair-join exchange
@@ -219,6 +185,37 @@ object Dedup {
       copy(predictedPairs = predictedPairs * fraction)
   }
 
+  /** Corpus-stat-derived [[MiningBudget]] for [[ngramJaccardPairs]]
+    * (VERDICT r08 #5). The df cap is the largest cap such that the
+    * expected inverted-index join budget Σ_shingle min(df, cap)·df
+    * stays within `pairBudgetPerOcc × total shingle occurrences` —
+    * i.e. the join may amplify each posting by at most a chosen
+    * constant, whatever the corpus's df distribution does. Σ min(df,cap)·df is exactly
+    * the number of (probe row × partner) pairs the shingle equi-join
+    * generates under the cap, so the bound is the join's real cost
+    * model, not a proxy; the same histogram predicts the capped
+    * join's candidate-pair volume ([[MiningBudget.predictedPairs]]).
+    *
+    * Budget default 16/occurrence, chosen from the r9 scale ladder's
+    * measured df histograms: every oracle-checked SF (and the sf1
+    * step) sits uncapped below it, and at sf10 it binds (cap 30,
+    * realized 14.0 pairs/occ vs sf1's uncapped 14.9) — so candidate
+    * volume goes LINEAR right where the quadratic df² term would take
+    * over. The original 64/occ left a 4× per-occurrence growth window
+    * that the sf1→sf10 gate measured as 26× shuffle and 74 GB of
+    * spill; the shingles a tighter cap drops are cross-corpus
+    * boilerplate with ~zero Jaccard signal.
+    *
+    * The cap is `Int.MaxValue` (= uncapped, the operator's default
+    * exact semantics) when even the uncapped budget fits — which is
+    * the case for every oracle-checked SF, so deriving the cap never
+    * perturbs the gate. The floor of 16 keeps a pathological corpus
+    * (one shingle everywhere) from deriving a cap below any real
+    * signal band. Cost: one tokenize+shingle scan and two aggregations; the
+    * collected histogram is (distinct df values) rows — corpus stats,
+    * never corpus rows. Callers memoize per corpus ([[graft.queries]]
+    * derives once per data dir).
+    */
   def deriveMiningBudget(docs: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, pairBudgetPerOcc: Double = 16.0): MiningBudget = {
     val hist = shingles(docs, idCol, textCol, n)
@@ -256,7 +253,7 @@ object Dedup {
     * self-consistent. The cap is OPT-IN (default `Int.MaxValue` = no
     * cap): capping changes the operator's output semantics, so callers
     * choose it deliberately (the d03 family passes the corpus-derived
-    * [[deriveMaxDf]] answer). `nDocs` (when ≥ 0) gates the sizes-frame
+    * [[deriveMiningBudget]] cap). `nDocs` (when ≥ 0) gates the sizes-frame
     * broadcast hint against [[SizesBroadcastMaxDocs]]. Use
     * [[minHashPairs]] as the scale path. */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
@@ -327,7 +324,7 @@ object Dedup {
     // relative to `inter` (Σ min(df,cap)·df candidate pairs) by the
     // cost model's own arithmetic, so joining it by shuffle would
     // re-exchange and SORT the candidate frame twice (once per side).
-    // The r9 sf20 SpillDiag measured exactly that: AQE coalesced the
+    // The r9 sf20 stage audit measured exactly that: AQE coalesced the
     // a_id exchange of ~6e8 inter rows to 35 tasks by byte size and
     // the SMJ sort spilled 4.2 GB. Broadcast pins the right shape:
     // `inter` streams through both joins exchange-free. Envelope:
@@ -394,9 +391,10 @@ object Dedup {
     * a growing corpus sharpens its boilerplate head, so hot-bucket
     * occupancy grows FASTER than the corpus and the candidate budget
     * Σ C(occ, 2) goes super-linear — the sf20→sf40 rung measured d04's
-    * candidates at 3.07× per 2× data (MinHashBandDiag: max occupancy
-    * 51 → 117 → 226 across sf10/sf20/sf40) while true pair output grew
-    * 2.33× (QueryCountDiag); the gap is skew waste this split removes.
+    * candidates at 3.07× per 2× data (r11, minhash_band_diag_r11.txt:
+    * max occupancy 51 → 117 → 226 across sf10/sf20/sf40) while true
+    * pair output grew 2.33× (PLANS.md round-11 sf40); the gap is skew
+    * waste this split removes.
     * Semantics: pairs with IDENTICAL signatures (exact dups — the
     * planted-recall contract) always share every sub-bucket, so their
     * recall is untouched; a non-identical pair inside an oversized
@@ -520,24 +518,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"),
         (col("i").cast("double") / (size(col("sa")) + size(col("sb")) - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-  }
-
-  /** Diagnostic view of [[minHashPairs]]' LSH banding — `(id, band,
-    * bkey)`, one row per (doc, band) with the exact signature/band-key
-    * expressions the operator uses — so [[graft.MinHashBandDiag]] can
-    * measure bucket-occupancy moments and the candidate budget
-    * Σ_buckets C(b,2) per data dir without re-typing the hash family
-    * (a drifted copy would attribute a different operator). */
-  private[graft] def minHashBanded(docs: DataFrame, idCol: String,
-      textCol: String, n: Int = 3, k: Int = 64, bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    val sets = docs.filter(col(idCol).isNotNull)
-      .select(col(idCol), tokenize(col(textCol)).as("_toks"))
-      .select(col(idCol), array_distinct(ngrams(col("_toks"), n)).as("_set"))
-    sets.select(col(idCol),
-        minHashSignature(shingleHashes(col("_set")), k, seed).as("sig"))
-      .select(col(idCol),
-        posexplode(lshBandKeys(col("sig"), bands, k / bands)).as(Seq("band", "bkey")))
   }
 
   /** All ordered pairs (x, y), x < y, from a SORTED array attribute —

@@ -353,7 +353,7 @@ object Similarity {
     * vectors on the fixed 12-bit family). Deriving bits from n keeps
     * expected bucket size ≈ targetBucket, so candidates stay ∝ n.
     *
-    * Second-moment caveat (r10 postcap ladder, `EmbBucketDiag`): the
+    * Second-moment caveat (r10 postcap ladder, PLANS.md round-10): the
     * derivation flattens the MEAN occupancy; the candidate budget is
     * Σ b² and sign-projection bits split structured embeddings
     * unevenly, so each added bit leaves a mild skew residue —

@@ -118,7 +118,7 @@ object DedupQueries {
       // MATERIALIZE the verified pairs before fanning out: perBand and
       // docsPerBand would otherwise each re-run the candidate
       // aggregation behind the un-materialized chain — measured at sf1
-      // as two sequential 879 MB final-agg passes (SpillDiag), the
+      // as two sequential 879 MB final-agg passes (r9 stage audit), the
       // stage-level cousin of g01's old two-branch union. The
       // materialized frame is band-rows only (≤ verified pairs).
       val banded = graft.operators.Checkpoints.materialize(
@@ -197,10 +197,11 @@ object DedupQueries {
       val planted = d.filter($"doc_id" < 25)
         .withColumn("doc_id", $"doc_id" + Planted.Off)
       // rehashBucketSize = 8 ≈ 8× the expected bucket occupancy
-      // (avgOcc ≈ 1.07 at every rung, MinHashBandDiag): the occupancy
-      // histogram shows candidate mass in b ≤ 8 buckets tracking true
-      // pair output (2.36× per 2× data) while the b = 9..64 mass grows
-      // 4–13× per rung — the boilerplate skew the split removes.
+      // (avgOcc ≈ 1.07 at every rung, minhash_band_diag_r11.txt): the
+      // occupancy histogram shows candidate mass in b ≤ 8 buckets
+      // tracking true pair output (2.36× per 2× data) while the
+      // b = 9..64 mass grows 4–13× per rung — the boilerplate skew the
+      // split removes.
       // Planted recall untouched (identical signatures share every
       // sub-bucket); an organic J ≥ 0.9 pair in a split bucket keeps
       // P(total miss) < 1e-6 via its other 15 bands. CORPUS-DEPENDENT:

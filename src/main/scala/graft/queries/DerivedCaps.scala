@@ -59,15 +59,9 @@ object DerivedCaps {
   def maxDfFor(s: SparkSession, dir: String): Int = budgetFor(s, dir).maxDf
 
   /** Cost-model partition count for the pair join over `dir`'s
-    * documents table (see [[Dedup.MiningBudget.pairParts]]).
-    * Measurement hook (VERDICT r11 #5): with the session conf
-    * `spark.graft.mining.pinPairParts=false` this returns 0, and the
-    * mining operators then leave their pair exchanges to AQE — making
-    * the pin's local cost A/B-measurable on any consumer (the PLANS.md
-    * round-12 attribution). Production never sets the key. */
+    * documents table (see [[Dedup.MiningBudget.pairParts]]). */
   def pairPartsFor(s: SparkSession, dir: String): Int =
-    if (s.conf.getOption("spark.graft.mining.pinPairParts").contains("false")) 0
-    else budgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
+    budgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
 
   /** [[pairPartsFor]] for a query mining a FRACTION of the corpus's
     * candidate volume ([[Dedup.MiningBudget.scaled]]): the g02/g08
@@ -75,8 +69,7 @@ object DerivedCaps {
     * doesn't over-pin a fortieth of the predicted work (measured
     * 1.6–2× wall at sf1, PLANS.md round-14). */
   def pairPartsScaledFor(s: SparkSession, dir: String, fraction: Double): Int =
-    if (s.conf.getOption("spark.graft.mining.pinPairParts").contains("false")) 0
-    else budgetFor(s, dir).scaled(fraction).pairParts(s.sparkContext.defaultParallelism)
+    budgetFor(s, dir).scaled(fraction).pairParts(s.sparkContext.defaultParallelism)
 
   private val embBitsMemo = new BoundedMemo[String, java.lang.Integer](64)
 
@@ -109,23 +102,17 @@ object DerivedCaps {
     * over `dir`'s embeddings (s03/s11 and d13's internal miner) — 0
     * (leave the aggregate to AQE, the unpinned plan) until the modeled
     * fused-aggregate state outgrows one task's 256 MB share; see
-    * [[graft.operators.Similarity.EmbPairBudget.pairParts]]. Honors
-    * the same `spark.graft.mining.pinPairParts=false` A/B hook as
-    * [[pairPartsFor]] (VERDICT r11 #5). */
+    * [[graft.operators.Similarity.EmbPairBudget.pairParts]]. */
   def embPairPartsFor(s: SparkSession, dir: String): Int =
-    if (s.conf.getOption("spark.graft.mining.pinPairParts").contains("false")) 0
-    else embPairBudgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
+    embPairBudgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
 
   /** Cost-model partition count for ConnectedComponents' symmetrized
     * edge dedup when the edges are `dir`'s predicted embedding
     * near-dup answers (d13) — None (AQE sizing) until the modeled
     * distinct state outgrows one task's share; see
-    * [[graft.operators.Similarity.EmbPairBudget.symParts]]. Same
-    * A/B hook as [[embPairPartsFor]]. */
+    * [[graft.operators.Similarity.EmbPairBudget.symParts]]. */
   def embSymPartsFor(s: SparkSession, dir: String): Option[Int] = {
-    val p =
-      if (s.conf.getOption("spark.graft.mining.pinPairParts").contains("false")) 0
-      else embPairBudgetFor(s, dir).symParts(s.sparkContext.defaultParallelism)
+    val p = embPairBudgetFor(s, dir).symParts(s.sparkContext.defaultParallelism)
     if (p > 0) Some(p) else None
   }
 

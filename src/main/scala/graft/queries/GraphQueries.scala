@@ -97,7 +97,7 @@ object GraphQueries {
       // symmetrize with a map-side explode, NOT a two-branch union: a
       // union re-executes the whole pair-mining subtree once per
       // branch IN THE SAME STAGE, and at sf1 the two concurrent
-      // candidate aggregations spilled ~5 GB (measured, SpillDiag);
+      // candidate aggregations spilled ~5 GB (r8, SCALE_r08.json);
       // explode reads the mined pairs once and doubles rows for free
       val edges = pairs.select(explode(array(
           struct($"a_id".as("src"), $"b_id".as("dst")),

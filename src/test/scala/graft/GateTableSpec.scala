@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * normal end-of-round state and must not redden the suite. A table
   * round AHEAD of its artifacts, a pass claim over an all_ok=false
   * artifact, or drifted static columns still fail.
+  *
+  * The same spec guards the gate scripts themselves: every
+  * `graft.<Name>` a shell script under `tools` names must still be a main
+  * under `src/main`, so a script cannot outlive the main it runs.
   */
 class GateTableSpec extends AnyFunSuite {
 
@@ -34,6 +39,26 @@ class GateTableSpec extends AnyFunSuite {
     assert(code == 0,
       s"README gate table is stale vs artifacts on disk:\n$out" +
         "regenerate with: python3 tools/gate_table.py")
+  }
+
+  test("every graft.<Name> a tools/*.sh script names is a main in src/main") {
+    val scripts = {
+      val stream = Files.list(Paths.get("tools"))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".sh")).toList
+      finally stream.close()
+    }
+    val named = for {
+      script <- scripts
+      m <- """(?<![\w.])graft\.([A-Z]\w*)""".r.findAllMatchIn(Files.readString(script))
+    } yield (script.getFileName.toString, m.group(1))
+    assert(named.nonEmpty, "expected tools/*.sh to run graft mains")
+    val dangling = named.distinct.filterNot { case (_, name) =>
+      val src = Paths.get("src", "main", "scala", "graft", s"$name.scala")
+      Files.isRegularFile(src) && Files.readString(src).contains("def main(")
+    }
+    assert(dangling.isEmpty,
+      "tools scripts run mains that no longer exist:\n" +
+        dangling.map { case (s, n) => s"$s: graft.$n" }.mkString("\n"))
   }
 
   test("gate-table markers present exactly once") {

@@ -34,8 +34,9 @@ class GoldenParitySpec extends SparkSpec {
   private def loadGolden(dir: String): (mutable.HashMap[String, Long], mutable.HashMap[String, Int]) = {
     val counts = new mutable.HashMap[String, Long]()
     val parts = new mutable.HashMap[String, Int]()
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.startsWith("part-r-")).sortBy(_.getName)
+    val listing = new java.io.File(dir).listFiles()
+    if (listing == null) fail(s"golden directory not found: $dir")
+    val files = listing.filter(_.getName.startsWith("part-r-")).sortBy(_.getName)
     assert(files.length == 32, s"$dir: expected 32 part files")
     files.zipWithIndex.foreach { case (f, idx) =>
       var prev: String = null

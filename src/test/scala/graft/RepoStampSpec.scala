@@ -34,10 +34,7 @@ class RepoStampSpec extends AnyFunSuite {
       .filterNot(l => Seq("/Bench.scala", "/Explain.scala", "/Verify.scala",
         "/ShuffleAudit.scala", "/ScaleCheck.scala", "/MemAudit.scala",
         "/SkewDrill.scala", "/HeapDrill.scala", "/StateAudit.scala",
-        "/ZipScaleBench.scala", "/LayoutBench.scala", "/RepoStamp.scala",
-        "/CorpusStatsDiag.scala", "/EmbBucketDiag.scala",
-        "/MinHashBandDiag.scala", "/QueryCountDiag.scala",
-        "/ScaleGenDiag.scala", "/SpillDiag.scala", "/StreamDiag.scala")
+        "/RepoStamp.scala")
         .exists(l.endsWith))
       .mkString("\n")
     val want = java.security.MessageDigest.getInstance("SHA-1")

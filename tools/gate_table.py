@@ -64,7 +64,7 @@ GATES = [
      "≤ 2.8× per 2× data, no exceptions",
      ["SCALE_r{n}_postcap.json"]),
     ("Residue rung (sf20→sf40)",
-     "`graft.ScaleGen` K=2 docs+embeddings, subset `ShuffleAudit` + `ScaleCheck … postcap`; answer growth attributed by `graft.QueryCountDiag` + `graft.MinHashBandDiag`",
+     "`graft.ScaleGen` K=2 docs+embeddings, subset `ShuffleAudit` + `ScaleCheck … postcap`; answer growth attributed in r11 (`minhash_band_diag_r11.txt`)",
      "`SCALE_r{N}_sf40.json`",
      "≤ 2.8× per 2× data for the LSH/pair-mining family",
      ["SCALE_r{n}_sf40.json"]),

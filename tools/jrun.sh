@@ -6,7 +6,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# SPARK_GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Dspark.graft.* diag keys)
+# SPARK_GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Dspark.graft.* session conf keys)
 exec java $ADD_OPENS ${SPARK_GRAFT_JAVA_OPTS:-} -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -98,6 +98,37 @@ SPARK_DRIVER_MEM=64g runj shuffle_audit_sf80_heavy.json $J graft.ShuffleAudit ta
 subset shuffle_audit_sf40_heavy.json shuffle_audit_sf80_heavy.json shuffle_audit_sf40_heavy4.json
 run $J graft.ScaleCheck audits shuffle_audit_sf40_heavy4.json shuffle_audit_sf80_heavy.json 2 "SCALE_r${N}_sf80_heavy.json" answers
 
+# 2f. sf160 answers rung, only where target/sfdata/sf160 exists
+# (documents/embeddings/events, ScaleGen K=2 from sf80): the mining
+# family plus a14/x08, whose sf80 spill cliff r13b fixed on derived
+# sizing — that sizing at a scale it was NOT tuned on. g03 is absent:
+# sf160 omits lineitem/orders/customer (disk budget). The A side
+# merges 2c's and 2e's sf80 audits; each query must be in EXACTLY one
+# of them (ADVICE r13: `mining.get(n) or heavy[n]` KeyError'd on
+# absent queries and silently preferred heavy for falsy entries).
+if [ -d target/sfdata/sf160 ] && SPARK_DRIVER_MEM=80g runj shuffle_audit_sf160.json \
+    $J graft.ShuffleAudit target/sfdata/sf160 $MINING a14_gap_fill x08_source_overlap; then
+  if python3 - <<'PY'
+import json, sys
+mining = json.load(open('shuffle_audit_sf80.json'))
+heavy = json.load(open('shuffle_audit_sf80_heavy.json'))
+assert mining['_meta']['src_tree'] == heavy['_meta']['src_tree'], \
+    'sf80 audits were produced on different code'
+names = [k for k in json.load(open('shuffle_audit_sf160.json')) if not k.startswith('_')]
+merged = {'_meta': mining['_meta']}
+for n in names:
+    in_m, in_h = n in mining, n in heavy
+    if in_m and in_h:
+        sys.exit(f'{n} present in BOTH sf80 audits - ambiguous A side')
+    if not (in_m or in_h):
+        sys.exit(f'{n} missing from both sf80 audits - no A-side rung point')
+    merged[n] = mining[n] if in_m else heavy[n]
+open('shuffle_audit_sf80_merged.json', 'w').write(json.dumps(merged))
+PY
+  then run $J graft.ScaleCheck audits shuffle_audit_sf80_merged.json shuffle_audit_sf160.json 2 "SCALE_r${N}_sf160.json" answers
+  else FAIL+=("sf80 A-side merge"); fi
+fi
+
 # 3. skew-stress rung (fixed volume, Zipf-sharpened key heads)
 [ -d target/sfdata/sf10skew ] || run $J graft.ScaleGen target/sfdata/sf10 target/sfdata/sf10skew 1 all skew
 run $J graft.SkewDrill target/sfdata/sf10 target/sfdata/sf10skew "SKEW_r${N}.json"
