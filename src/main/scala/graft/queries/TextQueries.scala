@@ -77,22 +77,20 @@ object TextQueries {
     // granularity are all hash-checked.
     "t08_zip_roundtrip" -> ((s, dir) => {
       import s.implicits._
-      val zipPath = graft.sources.ZipFixtures.docsZip(s, dir)
+      val zipPath = graft.sources.DocFixtures.docsZip(s, dir)
       Bigrams.fromZip(s, zipPath, Bigrams.RecordMode.WholeFiles)
         .orderBy($"bigram")
     }),
 
-    // The reference's own committed sample corpus, line-record mode —
-    // the exact job `WordCountV2` ran. Carries a full DuckDB oracle
-    // (read_text over zuni.txt, same pipeline) AND is golden-tested in
-    // BigramsSpec against SURVEY §8.3 (75,584 distinct / 647,399
-    // total, `zu+i → 1700`); the bench timing measures
-    // reference-corpus throughput (the reference's own cluster runs
-    // took minutes of MapReduce overhead for this workload shape).
+    // The reference's plain-text line job (`WordCountV2`, the custom9
+    // run) over a corpus derived from this query's own documents table
+    // (DocFixtures.docsCorpus): zuni.txt's stressors — a 600 KB+ line,
+    // non-ASCII text, digit/underscore runs, lines under 2 tokens —
+    // without the reference checkout. The oracle rebuilds the same
+    // lines from `documents` in SQL.
     "t09_reference_corpus" -> ((s, dir) => {
       import s.implicits._
-      Bigrams.fromTextFiles(s,
-        "/root/reference/src/main/resources/sample/zuni.txt",
+      Bigrams.fromTextFiles(s, graft.sources.DocFixtures.docsCorpus(s, dir),
         Bigrams.RecordMode.Lines)
         .orderBy($"bigram")
     }),
@@ -414,23 +412,30 @@ object TextQueries {
   }
 
   val oracles: Map[String, String] = Map(
-    // The reference's own corpus sample, oracled end-to-end: DuckDB
-    // reads zuni.txt directly (read_text), applies the same
-    // sanitize/tokenize/bigram pipeline, and must reproduce the
-    // golden totals (75,584 distinct / 647,399 occurrences, §8.3).
-    // zuni.txt is LF-only, so chr(10) splitting equals Spark's line
-    // reader on this corpus.
-    "t09_reference_corpus" ->
-      """WITH raw AS (
-        |  SELECT content FROM read_text('/root/reference/src/main/resources/sample/zuni.txt')),
-        |lines AS (SELECT unnest(string_split(content, chr(10))) AS line FROM raw),
-        |toks AS (
-        |  SELECT list_filter(string_split_regex(lower(regexp_replace(line, '([^\s\w]|_)+', ' ', 'g')), '\s+'), x -> x <> '') AS t
-        |  FROM lines),
-        |bigs AS (
-        |  SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || '+' || t[i+1])) AS bigram
-        |  FROM toks WHERE len(t) >= 2)
-        |SELECT bigram, count(*) AS count FROM bigs GROUP BY bigram ORDER BY bigram""".stripMargin,
+    // DocFixtures.docsCorpus rebuilt from `documents`: the doc lines in
+    // doc_id order, then the long line, LF-joined and split on chr(10)
+    // again, as Spark's line reader splits the LF-only file; then the
+    // shared sanitize/tokenize (SqlToks) and bigram SQL over the lines.
+    "t09_reference_corpus" -> {
+      import graft.sources.DocFixtures._
+      s"""WITH docs AS (SELECT doc_id, replace(text, chr(13), ' ') AS text FROM documents),
+         |raw AS (
+         |  SELECT string_agg(line, chr(10) ORDER BY k, doc_id) AS content FROM (
+         |    SELECT 0 AS k, doc_id,
+         |      CASE WHEN doc_id % $LoneEvery = 0 THEN '$LoneLine'
+         |           WHEN doc_id % $SuffixEvery = 0 THEN text || '$Suffix'
+         |           ELSE text END AS line
+         |    FROM docs
+         |    UNION ALL
+         |    SELECT 1, 0, repeat(string_agg(text, ' ' ORDER BY doc_id) || ' ', $LongLineRepeats)
+         |    FROM docs WHERE doc_id < $LongLineDocs)),
+         |lines AS (SELECT unnest(string_split(content, chr(10))) AS text FROM raw),
+         |toks AS (SELECT $SqlToks AS t FROM lines),
+         |bigs AS (
+         |  SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || '+' || t[i+1])) AS bigram
+         |  FROM toks WHERE len(t) >= 2)
+         |SELECT bigram, count(*) AS count FROM bigs GROUP BY bigram ORDER BY bigram""".stripMargin
+    },
 
     "t01_bigram_counts" ->
       s"""WITH toks AS (SELECT $SqlToks AS t FROM documents)

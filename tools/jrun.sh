@@ -1,5 +1,7 @@
 #!/bin/bash
 # Run any graft main class directly: tools/jrun.sh graft.Explain <args...>
+# the compiled classes of the checkout this script lives in
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -9,4 +11,4 @@ done
 # SPARK_GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Dspark.graft.* session conf keys)
 exec java $ADD_OPENS ${SPARK_GRAFT_JAVA_OPTS:-} -Xmx"${SPARK_DRIVER_MEM:-24g}" -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$@"
+  -cp "$CLASSES:/opt/spark/jars/*" "$@"

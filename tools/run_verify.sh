@@ -7,6 +7,8 @@ set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/verify_out}
 shift 2 2>/dev/null || shift $#
+# the compiled classes of the checkout this script lives in
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -19,5 +21,5 @@ exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT_DIR" "$@"
