@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Central SparkSession factory for the graft engine.
+/** The one SparkSession factory of the graft engine: every main
+  * (Bench, Verify, Explain, ScaleGen, the audits and drills) calls
+  * [[get]], and the bigram job and perfbench start from [[builder]].
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * single JVM); the same settings scale to a real cluster because they
-  * only touch planner behavior (AQE, shuffle partitions), not
-  * deployment. AQE is on so skewed joins / small post-shuffle
-  * partitions re-plan at runtime — this is the 100 TB posture: we set
-  * a *starting* shuffle parallelism and let AQE coalesce or split.
+  * Local mode runs `local[N]` in one JVM, N = `SPARK_GRAFT_CPUS`, else
+  * the JVM's available processors. The same settings scale to a real
+  * cluster because they only touch planner behavior (AQE, shuffle
+  * partitions), not deployment. AQE is on so skewed joins / small
+  * post-shuffle partitions re-plan at runtime — this is the 100 TB
+  * posture: we set a *starting* shuffle parallelism and let AQE
+  * coalesce or split.
   */
 object GraftSession {
   def builder(appName: String = "graft"): SparkSession.Builder = {

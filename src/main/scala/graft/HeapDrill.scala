@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Constrained-heap degradation drill (VERDICT r10 "what's missing"
   * #2): every zero-spill number so far came from one 128 GiB JVM,
   * where a query can lean on headroom a real cluster never grants —
@@ -94,20 +92,8 @@ object HeapDrill {
         s"no baseline wall in ${rest(2)} for: ${noBase.mkString(", ")}")
     }
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.registerFunctions(spark)
-    GraftSession.installOptimizations(spark)
+    val spark = GraftSession.get("graft-heap-drill")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val heapMb = Runtime.getRuntime.maxMemory() / 1048576
     System.err.println(
@@ -164,7 +150,7 @@ object HeapDrill {
       if (spillMode)
         s"graft.HeapDrill SPILL drill: the heavy family inside a ${heapMb} MB JVM with $cpus task slots — a budget chosen so external sort/agg MUST engage. Gate: every query completes (no OOM), total task spill >= $MinTotalSpillMb MB across the set (the degradation path actually executed), per-query DISK spill <= max($DiskSpillFloorMb MB, ${DiskSpillShuffleFactor}x the query's task-view shuffle bytes), per-task disk spill <= $MaxTaskDiskSpillMb MB (bounded, not a storm), and wall <= ${SpillWallFactor}x the same query's 8g-drill wall + 10 s. task_spill_mb sums the memory+disk views of the same spilled data (~4x the physical write, kept for artifact continuity); the bounds are stated in task_disk_spill_mb."
       else
-        s"graft.HeapDrill constrained-heap degradation drill: the heavy family inside a ${heapMb} MB JVM with $cpus task slots (~${math.round(heapMb * 0.6 / cpus.toInt)} MB execution memory per slot — a cluster-container share, not a 128 GiB workstation). The gate is COMPLETION (no OOM; an OOM kills the JVM and no artifact appears); spill is recorded as the designed degradation path, not forbidden."
+        s"graft.HeapDrill constrained-heap degradation drill: the heavy family inside a ${heapMb} MB JVM with $cpus task slots (~${math.round(heapMb * 0.6 / cpus)} MB execution memory per slot — a cluster-container share, not a 128 GiB workstation). The gate is COMPLETION (no OOM; an OOM kills the JVM and no artifact appears); spill is recorded as the designed degradation path, not forbidden."
     val json =
       s"""{
          | ${RepoStamp.metaJson()},

@@ -2,32 +2,27 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-/** Runnable scale-linearity GATE (VERDICT r08 #6): given two data dirs
-  * whose volumes differ by a known factor, assert that each query's
-  * shuffle volume grows by at most a bounded multiple of that factor —
-  * and that nothing spills at either scale. The ratio table previous
+/** Runnable scale-linearity GATE (VERDICT r08 #6) over two
+  * [[ShuffleAudit]] dumps of the same query set taken at two data
+  * scales whose volumes differ by a known factor: it asserts that each
+  * query's TASK-view shuffle volume grows by at most a bounded multiple
+  * of that factor, that nothing spills at either scale, and that the
+  * per-task state columns stay within budget. The ratio table earlier
   * rounds hand-recorded into SCALE_r*.json becomes an asserted
   * property: the gate writes the JSON artifact itself and exits
-  * non-zero on any violation, so a super-linear regression fails the
-  * run instead of waiting for a human to eyeball a table.
-  *
-  * Methodology matches the r8 hand measurements: one JVM, each query
-  * warmed once per dir (codegen, file listing, memo fits), then one
-  * measured run per dir recording warm wall seconds and TASK-view
-  * shuffle/spill (SparkListener over every job the query runs —
-  * iteration rounds, micro-batches, subqueries included).
+  * non-zero on any violation. It reads only the two JSON files and git
+  * (the provenance stamp); it starts no Spark session.
   *
   * Usage:
-  *   tools/jrun.sh graft.ScaleCheck <dirA> <dirB> <dataRatio> \
-  *     <out.json> <query[:maxRatio]> ...
+  *   tools/jrun.sh graft.ScaleCheck audits <auditA.json> <auditB.json> \
+  *     <dataRatio> <out.json> <transition|postcap|answers>
   *
-  * Per-query bound: explicit `name:bound` (absolute shuffle-growth
-  * multiple), else `defaultSlack × dataRatio` (slack 1.4 — AQE
+  * Per-query bound: `defaultSlack × dataRatio` (slack 1.4 — AQE
   * coalescing, partial-agg state, and map-side combine make measured
-  * growth wobble around linear without being super-linear).
-  * Spill gate: task-view spill must stay ≤ 1 MB at BOTH scales.
+  * growth wobble around linear without being super-linear), raised
+  * only by an attributed entry of the selected allowlist (see
+  * [[auditGate]]). Spill gate: task-view spill must stay ≤ 1 MB at
+  * BOTH scales.
   */
 object ScaleCheck {
 
@@ -131,9 +126,6 @@ object ScaleCheck {
     * at rung N instead of spilling at rung N+1. */
   private val StatePeakBudgetMb = 512.0
   private val StateProjBudgetMb = 1024.0
-
-  private val stateAllow: Map[String, Allow2] = Map.empty
-  private final case class Allow2(peakMb: Double, projMb: Double, why: String)
 
   /** Allowlist for the POSTCAP rung (sf10→sf20): by then every
     * transition-window and broadcast-flip step must already have
@@ -316,14 +308,11 @@ object ScaleCheck {
       // recorded them — the defect class this catches (d03 r9,
       // s03/a14 r9-r10, d12/g03/g04 r10) looked clean on shuffle
       // bytes at rung N and spilled multi-GB at rung N+1
-      val stateAllowE = stateAllow.get(n)
-      val peakBound = stateAllowE.map(_.peakMb).getOrElse(StatePeakBudgetMb)
-      val projBound = stateAllowE.map(_.projMb).getOrElse(StateProjBudgetMb)
-      val stateOk = Seq(peakA, peakB).flatten.forall(_ <= peakBound) &&
-        Seq(projA, projB).flatten.forall(_ <= projBound)
+      val stateOk = Seq(peakA, peakB).flatten.forall(_ <= StatePeakBudgetMb) &&
+        Seq(projA, projB).flatten.forall(_ <= StateProjBudgetMb)
       val ok = (ratio <= bound || sb <= SpillLimitMb) && spillOk && stateOk
       (n, sa, sb, ratio, bound, allow.map(_.why), ok,
-        (peakA, peakB, projA, projB, stateOk, stateAllowE.map(_.why)),
+        (peakA, peakB, projA, projB, stateOk),
         answerRatio.map(r => (r, internal)))
     }
     val allOk = rows.forall(_._7)
@@ -331,13 +320,12 @@ object ScaleCheck {
     val body = rows.map { case (n, sa, sb, ratio, bound, why, ok, st, ansR) =>
       val boundStr = if (bound.isPosInfinity) "\"inf\"" else bound.toString
       val ratioStr2 = if (ratio.isPosInfinity) "\"inf\"" else ratio.toString
-      val (peakA, peakB, projA, projB, stateOk, stateWhy) = st
+      val (peakA, peakB, projA, projB, stateOk) = st
       val stateStr = (peakA, peakB) match {
         case (Some(pa), Some(pb)) =>
           s""","peak_a_mb":$pa,"peak_b_mb":$pb""" +
             s""","proj_a_mb":${projA.getOrElse(0.0)},"proj_b_mb":${projB.getOrElse(0.0)}""" +
-            s""","state_ok":$stateOk""" +
-            stateWhy.map(w => s""","state_attribution":"$w"""").getOrElse("")
+            s""","state_ok":$stateOk"""
         case _ => ""
       }
       val ansStr = ansR.map { case (r, internal) =>
@@ -369,82 +357,8 @@ object ScaleCheck {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("audits")) { auditGate(args.drop(1)); return }
-    require(args.length >= 5,
-      "usage: ScaleCheck <dirA> <dirB> <dataRatio> <out.json> <query[:maxRatio]>... | ScaleCheck audits <auditA.json> <auditB.json> <dataRatio> <out.json>")
-    val Array(dirA, dirB, ratioStr, outPath) = args.take(4)
-    val dataRatio = ratioStr.toDouble
-    val specs = args.drop(4).toSeq.map { q =>
-      q.split(":") match {
-        case Array(name, bound) => name -> bound.toDouble
-        case Array(name) => name -> DefaultSlack * dataRatio
-        case _ => sys.error(s"bad query spec: $q")
-      }
-    }
-    val unknown = specs.map(_._1).filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.registerFunctions(spark)
-    GraftSession.installOptimizations(spark)
-
-    def auditDir(dir: String): Map[String, ShuffleAudit.Measured] = {
-      // warm: codegen, file listing, parquet footers, memo fits
-      specs.foreach { case (n, _) =>
-        try { SparkEntry.queries(n)(spark, dir).count(); () }
-        catch { case _: Throwable => () }
-      }
-      specs.map { case (n, _) =>
-        n -> ShuffleAudit.measure(spark, SparkEntry.queries(n), dir)
-      }.toMap
-    }
-    val a = auditDir(dirA)
-    val b = auditDir(dirB)
-
-    final case class Row(name: String, bound: Double,
-        a: ShuffleAudit.Measured, b: ShuffleAudit.Measured) {
-      // guard the zero-shuffle case (a fully map-side query at both
-      // scales is linear by definition)
-      val ratio: Double =
-        if (a.taskShuffleMb <= 0.001) (if (b.taskShuffleMb <= 0.001) 1.0 else Double.PositiveInfinity)
-        else math.round(b.taskShuffleMb / a.taskShuffleMb * 100) / 100.0
-      val spillOk: Boolean =
-        a.taskSpillMb <= SpillLimitMb && b.taskSpillMb <= SpillLimitMb
-      val ok: Boolean = ratio <= bound && spillOk
-    }
-    val rows = specs.map { case (n, bound) => Row(n, bound, a(n), b(n)) }
-
-    def fmt(m: ShuffleAudit.Measured): String =
-      s"""{"warm_s":${m.wallSec},"task_shuffle_mb":${m.taskShuffleMb},""" +
-        s""""task_spill_mb":${m.taskSpillMb}}"""
-    val body = rows.map { r =>
-      s""" "${r.name}":{"a":${fmt(r.a)},"b":${fmt(r.b)},"shuffle_ratio":${r.ratio},""" +
-        s""""bound":${r.bound},"spill_ok":${r.spillOk},"ok":${r.ok}}"""
-    }.mkString(",\n")
-    val allOk = rows.forall(_.ok)
-    val json =
-      s"""{
-         | "note": "graft.ScaleCheck gate: task-view shuffle growth dirA->dirB must stay within per-query bounds (default ${DefaultSlack}x data ratio); task-view spill <= $SpillLimitMb MB at both scales. Warm wall from the measured run after a warm pass, local[$cpus].",
-         | "dirA": "$dirA",
-         | "dirB": "$dirB",
-         | "data_ratio": $dataRatio,
-         | "all_ok": $allOk,
-         |$body
-         |}""".stripMargin
-    Files.writeString(Paths.get(outPath), json + "\n")
-    println(json)
-    spark.stop()
-    if (!allOk) sys.exit(1)
+    require(args.headOption.contains("audits"),
+      "usage: ScaleCheck audits <auditA.json> <auditB.json> <dataRatio> <out.json> <transition|postcap|answers>")
+    auditGate(args.drop(1))
   }
 }

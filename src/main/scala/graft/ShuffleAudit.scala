@@ -1,12 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Shuffle/spill audit: runs each query once (after a warm pass) and
   * reports its shuffle/spill volume TWO ways.
@@ -19,12 +14,12 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *    operator materializes internally (the per-round joins of
   *    d07/g01/g02, every streaming micro-batch of e05/e06/…) is
   *    invisible (VERDICT r06 task #6).
-  *  - `task_shuffle_mb`/`task_spill_mb`: a SparkListener summing task
-  *    metrics across EVERY job the query ran between start and finish
-  *    — checkpoint materializations, iteration rounds, micro-batches,
-  *    subqueries, all of it. Coarser attribution (anything concurrent
-  *    would land in the same bucket; the audit runs queries strictly
-  *    serially so there isn't), complete coverage.
+  *  - `task_shuffle_mb`/`task_spill_mb`: [[MemAudit.probe]]'s task
+  *    listener summing task metrics across EVERY job the query ran
+  *    between start and finish — checkpoint materializations, iteration
+  *    rounds, micro-batches, subqueries, all of it. Coarser attribution
+  *    (anything concurrent would land in the same bucket; the audit
+  *    runs queries strictly serially so there isn't), complete coverage.
   *
   * A large task/plan gap is itself the finding: it measures exactly
   * the internally-materialized dataflow the plan view cannot see.
@@ -51,7 +46,7 @@ object ShuffleAudit {
     * growth by the measured growth of whichever answer column is
     * present — a bound DERIVED per corpus instead of a hand-pinned
     * constant. The probe runs AFTER the measured pass, outside the
-    * listeners, so it never pollutes the metrics. */
+    * task probe, so it never pollutes the metrics. */
   private val internalAnswer: Map[String, (SparkSession, String) => Long] = Map(
     // d13 emits one row per vector (linear) but mines s03's near-dup
     // pair relation before collapsing it to components — THAT is the
@@ -59,65 +54,8 @@ object ShuffleAudit {
     "d13_semantic_clusters" -> ((s, dir) =>
       graft.queries.DedupQueries.d13InternalPairs(s, dir).count()))
 
-  /** Sums shuffle-write and spill bytes over every task that ends
-    * while registered. Spill = memory + disk spill (the pair moves
-    * together; zero stays zero). */
-  private final class TaskTotals extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val spill = new AtomicLong
-    val diskSpill = new AtomicLong
-    val maxTaskDiskSpill = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        // `spill` keeps the historical mem+disk sum (both views of the
-        // same spilled data — a DOUBLE COUNT, kept for artifact
-        // continuity); `diskSpill` is the actual I/O written, the
-        // number a degradation bound should be stated in (the r13
-        // spill drill's first execution showed the summed view
-        // tripping an 8 GB cap at ~2.2 GB of real disk writes)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        maxTaskDiskSpill.getAndAccumulate(m.diskBytesSpilled,
-          (a: Long, b: Long) => math.max(a, b))
-        ()
-      }
-    }
-    private def snap() =
-      (shuffleWrite.get, spill.get, diskSpill.get, maxTaskDiskSpill.get)
-    /** Event delivery is async; the action returning does not mean the
-      * bus has drained. Settle = counters unchanged for two polls. */
-    def settled(): (Long, Long, Long, Long) = {
-      var prev = (-1L, -1L, -1L, -1L)
-      var cur = snap()
-      var waited = 0
-      while (cur != prev && waited < 2000) {
-        Thread.sleep(100); waited += 100
-        prev = cur
-        cur = snap()
-      }
-      cur
-    }
-  }
-
-  /** Every node of the executed plan, descending through AQE wrappers
-    * and subqueries; a ReusedExchange's subtree is NOT re-entered (its
-    * bytes were counted at the original exchange). */
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val self = p match {
-      case a: AdaptiveSparkPlanExec => p +: flatten(a.executedPlan)
-      case q: QueryStageExec => p +: flatten(q.plan)
-      case _: ReusedExchangeExec => Seq(p)
-      case _ => p +: p.children.flatMap(flatten)
-    }
-    self ++ p.subqueries.flatMap(flatten)
-  }
-
   private def sumMetric(nodes: Seq[SparkPlan], key: String): Long =
     nodes.flatMap(_.metrics.get(key)).map(_.value).filter(_ > 0).sum
-
-  private[graft] def mb(v: Long): Double = math.round(v / 1048.576) / 1000.0
 
   /** One measured execution of `fn(spark, sfDir)` (caller warms
     * first): wall seconds, plan-view shuffle/spill MB, task-view
@@ -137,11 +75,7 @@ object ShuffleAudit {
   private[graft] def measure(spark: SparkSession,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       sfDir: String): Measured = {
-    val totals = new TaskTotals
-    val acc = new MemAudit.TaskAccum
-    spark.sparkContext.addSparkListener(totals)
-    spark.sparkContext.addSparkListener(acc)
-    try {
+    val ((df, outRows, wall), acc) = MemAudit.probe(spark) {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       // execute THIS QueryExecution (df.count() would plan a separate
@@ -151,38 +85,26 @@ object ShuffleAudit {
       // ANSWER growth (a pair-mining query whose duplicate clusters
       // double per rung emits ~4x the pairs; no algorithm shuffles
       // less than its output).
-      val outRows = df.queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val nodes = flatten(df.queryExecution.executedPlan)
-      val (tw, ts, td, mx) = totals.settled()
-      val stats = MemAudit.statsFrom(acc, df.queryExecution.executedPlan)
-      Measured(math.round(wall * 1000) / 1000.0,
-        mb(sumMetric(nodes, "shuffleBytesWritten")),
-        mb(sumMetric(nodes, "spillSize")), mb(tw), mb(ts), mb(td), mb(mx),
-        stats.map(_.maxTaskPeakMb).maxOption.getOrElse(0.0),
-        stats.flatMap(_.projectedMb).maxOption.getOrElse(0.0), outRows)
-    } finally {
-      spark.sparkContext.removeSparkListener(totals)
-      spark.sparkContext.removeSparkListener(acc)
+      val n = df.queryExecution.toRdd.count()
+      (df, n, (System.nanoTime() - t0) / 1e9)
     }
+    val plan = df.queryExecution.executedPlan
+    val nodes = MemAudit.flatten(plan)
+    val stats = MemAudit.statsFrom(acc, plan)
+    import MemAudit.mb
+    Measured(math.round(wall * 1000) / 1000.0,
+      mb(sumMetric(nodes, "shuffleBytesWritten")), mb(sumMetric(nodes, "spillSize")),
+      mb(acc.shuffleWrite.get), mb(acc.spill.get), mb(acc.diskSpill.get),
+      mb(acc.maxTaskDiskSpill.get),
+      stats.map(_.maxTaskPeakMb).maxOption.getOrElse(0.0),
+      stats.flatMap(_.projectedMb).maxOption.getOrElse(0.0), outRows)
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.get("graft-shuffle-audit")
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     // Planted-offset invariant (ADVICE r12): the planted-copy corpora
@@ -222,7 +144,7 @@ object ShuffleAudit {
       try {
         val m = measure(spark, fn, sfDir)
         // internal-answer probe AFTER the measured pass (never inside
-        // the listeners) — see `internalAnswer`. Its OWN try (ADVICE
+        // the task probe) — see `internalAnswer`. Its OWN try (ADVICE
         // r12): a probe-only failure must not drop the measured row —
         // that would surface downstream as a misleading "present in
         // only one audit" ScaleCheck error instead of naming the probe.

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Runnable streaming STATE-growth gate (VERDICT r08 #3a): the
@@ -35,7 +35,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * Each (query, dir) run forces a REAL drain (the drain memo is
   * re-rooted at a fresh scratch dir per run), so the listener sees
   * every micro-batch. Progress events arrive async on the listener
-  * bus; the harness waits for stream termination plus a settle sleep
+  * bus; the harness drains the bus after each drain query returns,
   * before reading the accumulators.
   */
 object StateAudit {
@@ -63,20 +63,8 @@ object StateAudit {
     val unknown = specs.map(_._1).filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.registerFunctions(spark)
-    GraftSession.installOptimizations(spark)
+    val spark = GraftSession.get("graft-state-audit")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val acc = new Acc
     spark.streams.addListener(new StreamingQueryListener {
@@ -122,14 +110,9 @@ object StateAudit {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are async; wait for the bus to quiesce
-      var settle = 0
-      var last = (-1L, -1L)
-      while (settle < 20 && (acc.batches, acc.inputRows) != last) {
-        last = (acc.batches, acc.inputRows)
-        Thread.sleep(300)
-        settle += 1
-      }
+      // progress events reach the listener asynchronously, on the
+      // same bus as task events: deliver every one posted so far
+      ListenerBusBridge.drain(spark.sparkContext)
       Measured(acc.stateRowsMax,
         math.round(acc.stateMemMax / 1048576.0 * 100) / 100.0,
         acc.inputRows, acc.batches, math.round(wall * 100) / 100.0)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,7 @@ object Verify {
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
         "a typo here would silently verify nothing")
     def selected(name: String): Boolean = only.isEmpty || only.contains(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 8).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Corpus invariant behind d04's oracle (ADVICE r11): LSH-with-
     // bucket-rehash equals the exact ≥0.5-Jaccard pair set only

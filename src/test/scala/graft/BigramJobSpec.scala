@@ -11,22 +11,26 @@ import scala.jdk.CollectionConverters._
 import graft.BigramJob.Config
 import graft.operators.Bigrams.RecordMode
 
-class BigramJobSpec extends SparkSpec {
-  import spark.implicits._
-
-  /** Hadoop's `HashPartitioner` over `Text.hashCode`, computed without the engine. */
-  private def hadoopPart(key: String, n: Int): Int =
-    (key.getBytes(UTF_8).foldLeft(1)((h, b) => 31 * h + b) & Int.MaxValue) % n
+object BigramJobSpec {
 
   /** `WordCountV2`'s mapper and reducer in plain Scala: runs of non-word
     * characters or underscores become a space, lowercase, split on
     * `StringTokenizer`'s delimiters, adjacent pairs as `a+b`, summed. */
-  private def wordCountV2(records: Seq[String]): Map[String, Long] =
+  def wordCountV2(records: Seq[String]): Map[String, Long] =
     records.flatMap { r =>
       r.replaceAll("([^\\s\\w]|_)+", " ").toLowerCase(Locale.ROOT)
         .split("[ \t\n\r\f]+").filter(_.nonEmpty)
         .sliding(2).collect { case Array(a, b) => s"$a+$b" }
     }.groupMapReduce(identity)(_ => 1L)(_ + _)
+}
+
+class BigramJobSpec extends SparkSpec {
+  import spark.implicits._
+  import BigramJobSpec.wordCountV2
+
+  /** Hadoop's `HashPartitioner` over `Text.hashCode`, computed without the engine. */
+  private def hadoopPart(key: String, n: Int): Int =
+    (key.getBytes(UTF_8).foldLeft(1)((h, b) => 31 * h + b) & Int.MaxValue) % n
 
   /** Checks a `--hadoop-layout` output directory: exactly `n` part files
     * (empty ones included) and `_SUCCESS`, part `i` holding exactly the

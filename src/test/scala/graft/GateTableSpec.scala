@@ -25,7 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same spec guards the gate scripts themselves: every
   * `graft.<Name>` a shell script under `tools` names must still be a main
-  * under `src/main`, so a script cannot outlive the main it runs.
+  * under `src/main`, so a script cannot outlive the main it runs. And it
+  * guards the mains' wiring: sessions come from `GraftSession` alone,
+  * and one task listener serves every measurement main.
   */
 class GateTableSpec extends AnyFunSuite {
 
@@ -59,6 +61,23 @@ class GateTableSpec extends AnyFunSuite {
     assert(dangling.isEmpty,
       "tools scripts run mains that no longer exist:\n" +
         dangling.map { case (s, n) => s"$s: graft.$n" }.mkString("\n"))
+  }
+
+  test("src/main builds sessions only in GraftSession and has one SparkListener") {
+    val sources = {
+      val stream = Files.walk(Paths.get("src", "main", "scala"))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    }
+    def filesMatching(re: scala.util.matching.Regex): List[String] =
+      sources.filter(p => re.findFirstIn(Files.readString(p)).nonEmpty)
+        .map(_.getFileName.toString).sorted
+    val builders = filesMatching("""SparkSession\.builder\(""".r)
+    assert(builders == List("GraftSession.scala"),
+      s"files that build a SparkSession: ${builders.mkString(", ")}")
+    val listeners = filesMatching("""\b(extends|with|new)\s+SparkListener\b""".r)
+    assert(listeners.size == 1,
+      s"expected one SparkListener in src/main, found it in: ${listeners.mkString(", ")}")
   }
 
   test("gate-table markers present exactly once") {

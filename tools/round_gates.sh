@@ -10,6 +10,9 @@ set -u
 cd "$(dirname "$0")/.."
 N="${1:?usage: round_gates.sh <round number>}"
 J=tools/jrun.sh
+# ShuffleAudit, SkewDrill, StateAudit and MemAudit run with
+# SPARK_GRAFT_CPUS=32, the core count of every committed artifact;
+# Verify (step 0) and ScaleGen keep their own defaults.
 FAIL=()
 run() { echo "[gates] $(date +%H:%M:%S) $*" >&2; "$@" || FAIL+=("$1 $2"); }
 # Audit-producing runs write to a temp file and mv into place only on
@@ -45,9 +48,9 @@ python3 tools/check_oracles.py /root/testdata/sf0.01 /tmp/verify_out | tail -1
 # 1. full-surface shuffle+state audits at three rungs. sf10/sf20 NEED
 # the bigger driver heap (r12: a 24 g sf20 run spilled g04 682 MB on
 # bit-identical bytes — heap share, not plan; 40 g reproduces r11's 0)
-runj shuffle_audit_sf1.json $J graft.ShuffleAudit target/sfdata/sf1
-SPARK_DRIVER_MEM=40g runj shuffle_audit_sf10.json $J graft.ShuffleAudit target/sfdata/sf10
-SPARK_DRIVER_MEM=40g runj shuffle_audit_sf20.json $J graft.ShuffleAudit target/sfdata/sf20
+SPARK_GRAFT_CPUS=32 runj shuffle_audit_sf1.json $J graft.ShuffleAudit target/sfdata/sf1
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=40g runj shuffle_audit_sf10.json $J graft.ShuffleAudit target/sfdata/sf10
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=40g runj shuffle_audit_sf20.json $J graft.ShuffleAudit target/sfdata/sf20
 
 # 2. scale gates (shuffle growth + per-task state at both rungs)
 run $J graft.ScaleCheck audits shuffle_audit_sf1.json shuffle_audit_sf10.json 10 "SCALE_r${N}.json" transition
@@ -59,7 +62,7 @@ run $J graft.ScaleCheck audits shuffle_audit_sf10.json shuffle_audit_sf20.json 2
   run $J graft.ScaleGen target/sfdata/sf20 target/sfdata/sf40 2 documents,embeddings
 MINING="d03_ngram_jaccard d04_minhash_lsh d13_semantic_clusters \
 s03_embed_neardup s11_multiprobe_neardup"
-SPARK_DRIVER_MEM=48g runj shuffle_audit_sf40.json $J graft.ShuffleAudit target/sfdata/sf40 $MINING
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g runj shuffle_audit_sf40.json $J graft.ShuffleAudit target/sfdata/sf40 $MINING
 subset shuffle_audit_sf20.json shuffle_audit_sf40.json shuffle_audit_sf20_residue.json
 run $J graft.ScaleCheck audits shuffle_audit_sf20_residue.json shuffle_audit_sf40.json 2 "SCALE_r${N}_sf40.json" postcap
 
@@ -70,7 +73,7 @@ run $J graft.ScaleCheck audits shuffle_audit_sf20_residue.json shuffle_audit_sf4
 # its internal_rows probe — the mined pair relation — since r12)
 [ -f target/sfdata/sf80/embeddings.parquet/_SUCCESS ] || \
   run $J graft.ScaleGen target/sfdata/sf40 target/sfdata/sf80 2 documents,embeddings
-SPARK_DRIVER_MEM=48g runj shuffle_audit_sf80.json $J graft.ShuffleAudit target/sfdata/sf80 $MINING
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g runj shuffle_audit_sf80.json $J graft.ShuffleAudit target/sfdata/sf80 $MINING
 run $J graft.ScaleCheck audits shuffle_audit_sf40.json shuffle_audit_sf80.json 2 "SCALE_r${N}_sf80.json" answers
 
 # 2d. sf40 HEAVY NON-MINING rung (VERDICT r11 #2): sf20 was the rung
@@ -83,7 +86,7 @@ run $J graft.ScaleCheck audits shuffle_audit_sf40.json shuffle_audit_sf80.json 2
 HEAVY="g01_pagerank g03_bfs_reach a14_gap_fill q21_join5 p01_curate \
 d12_repeated_spans q30_table_profile t23_window_pmi x08_source_overlap \
 d07_dup_components"
-SPARK_DRIVER_MEM=48g runj shuffle_audit_sf40_heavy.json $J graft.ShuffleAudit target/sfdata/sf40 $HEAVY
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=48g runj shuffle_audit_sf40_heavy.json $J graft.ShuffleAudit target/sfdata/sf40 $HEAVY
 subset shuffle_audit_sf20.json shuffle_audit_sf40_heavy.json shuffle_audit_sf20_heavy.json
 run $J graft.ScaleCheck audits shuffle_audit_sf20_heavy.json shuffle_audit_sf40_heavy.json 2 "SCALE_r${N}_sf40_heavy.json" postcap
 
@@ -94,7 +97,7 @@ run $J graft.ScaleCheck audits shuffle_audit_sf20_heavy.json shuffle_audit_sf40_
   run $J graft.ScaleGen target/sfdata/sf40 target/sfdata/sf80 2 \
     orders,lineitem,customer,supplier,part,nation,region,events
 HEAVY80="g03_bfs_reach a14_gap_fill q21_join5 x08_source_overlap"
-SPARK_DRIVER_MEM=64g runj shuffle_audit_sf80_heavy.json $J graft.ShuffleAudit target/sfdata/sf80 $HEAVY80
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g runj shuffle_audit_sf80_heavy.json $J graft.ShuffleAudit target/sfdata/sf80 $HEAVY80
 subset shuffle_audit_sf40_heavy.json shuffle_audit_sf80_heavy.json shuffle_audit_sf40_heavy4.json
 run $J graft.ScaleCheck audits shuffle_audit_sf40_heavy4.json shuffle_audit_sf80_heavy.json 2 "SCALE_r${N}_sf80_heavy.json" answers
 
@@ -106,7 +109,7 @@ run $J graft.ScaleCheck audits shuffle_audit_sf40_heavy4.json shuffle_audit_sf80
 # merges 2c's and 2e's sf80 audits; each query must be in EXACTLY one
 # of them (ADVICE r13: `mining.get(n) or heavy[n]` KeyError'd on
 # absent queries and silently preferred heavy for falsy entries).
-if [ -d target/sfdata/sf160 ] && SPARK_DRIVER_MEM=80g runj shuffle_audit_sf160.json \
+if [ -d target/sfdata/sf160 ] && SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=80g runj shuffle_audit_sf160.json \
     $J graft.ShuffleAudit target/sfdata/sf160 $MINING a14_gap_fill x08_source_overlap; then
   if python3 - <<'PY'
 import json, sys
@@ -131,7 +134,7 @@ fi
 
 # 3. skew-stress rung (fixed volume, Zipf-sharpened key heads)
 [ -d target/sfdata/sf10skew ] || run $J graft.ScaleGen target/sfdata/sf10 target/sfdata/sf10skew 1 all skew
-run $J graft.SkewDrill target/sfdata/sf10 target/sfdata/sf10skew "SKEW_r${N}.json"
+SPARK_GRAFT_CPUS=32 run $J graft.SkewDrill target/sfdata/sf10 target/sfdata/sf10skew "SKEW_r${N}.json"
 
 # 4. constrained-heap degradation drill (cluster-container memory share)
 HEAP_Q="d03_ngram_jaccard d07_dup_components d12_repeated_spans \
@@ -153,14 +156,14 @@ SQ="e05_stream_sessionize e06_stream_windows e07_stream_range_join \
 e10_stream_funnel e11_stream_heavy_users e13_stream_sliding \
 e15_stream_session_window e16_stream_dq e17_stream_zone_maps \
 e18_stream_window_users d06_stream_dedup d08_stream_novel x21_stream_upsert"
-run $J graft.StateAudit /root/testdata/sf0.1 target/sfdata/sf1 14.0 "STATE_r${N}_scale.json" $SQ
-run $J graft.StateAudit /root/testdata/sf0.1 target/sfdata/vol10 1.5 "STATE_r${N}_volume.json" \
+SPARK_GRAFT_CPUS=32 run $J graft.StateAudit /root/testdata/sf0.1 target/sfdata/sf1 14.0 "STATE_r${N}_scale.json" $SQ
+SPARK_GRAFT_CPUS=32 run $J graft.StateAudit /root/testdata/sf0.1 target/sfdata/vol10 1.5 "STATE_r${N}_volume.json" \
   $(echo $SQ | sed 's/e07_stream_range_join/e07_stream_range_join:15.0/')
 
 # 5b. full-surface per-task state deep-dive at sf10 (peak 512 MB /
 # AQE-projection 1024 MB; REPARTITION_BY_NUM-fed nodes carry no
 # projection — Spark's coalescer skips that origin)
-SPARK_DRIVER_MEM=40g run $J graft.MemAudit target/sfdata/sf10 "MEM_r${N}.json"
+SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=40g run $J graft.MemAudit target/sfdata/sf10 "MEM_r${N}.json"
 
 # 6. BENCH_sf1 refresh LAST (needs an idle machine) + the
 # round-over-round tripwire (VERDICT r13 #5): the sf1 serial artifact

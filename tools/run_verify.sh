@@ -7,6 +7,9 @@ set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/verify_out}
 shift 2 2>/dev/null || shift $#
+# Verify runs local[4] unless SPARK_GRAFT_CPUS says otherwise (the
+# session's own default is every available processor)
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}"
 # the compiled classes of the checkout this script lives in
 CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 ADD_OPENS=""
