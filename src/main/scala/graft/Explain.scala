@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection + micro-profiling CLI.
   *
   * Usage: graft.Explain <sfDir> [queryName ...]
-  * For each query: two timed runs (cold incl. codegen, then warm) and
-  * the formatted physical plan. No args → all queries, timings only.
+  * Each queryName is a [[SparkEntry.queries]] key. For each query: two
+  * timed runs (cold incl. codegen, then warm) and the formatted
+  * physical plan. No query names → all queries, timings only.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -14,27 +13,14 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     val spark = GraftSession.get("graft-explain")
     for (name <- names) {
-      // "corpus:<path>" times the bigram pipeline over arbitrary text files
-      val fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame =
-        if (name.startsWith("corpus:"))
-          (s, _) => operators.Bigrams.fromTextFiles(s, name.stripPrefix("corpus:"))
-        else SparkEntry.queries(name)
+      val fn = SparkEntry.queries(name)
       def timed(): Double = {
         val t0 = System.nanoTime(); fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9
       }
-      // SPARK_GRAFT_EXPLAIN_REPS > 1: extra warm reps with a settle
-      // between them, reporting min/med — enough resolution for
-      // pin-cost A/B attribution (one warm run is hostage to whichever
-      // cleaner pause lands on it)
-      val reps = sys.env.get("SPARK_GRAFT_EXPLAIN_REPS").map(_.toInt).getOrElse(1)
       val cold = timed()
-      val warms = (1 to reps).map { _ =>
-        Bench.settle(spark, rounds = 1, sleepMs = 150); timed()
-      }.sorted
-      val warm = warms.head
-      val medStr =
-        if (reps > 1) f" med=${warms(warms.size / 2)}%7.2fs (n=$reps)" else ""
-      println(f"== $name%-28s cold=$cold%7.2fs warm=$warm%7.2fs$medStr")
+      Bench.settle(spark, rounds = 1, sleepMs = 150)
+      val warm = timed()
+      println(f"== $name%-28s cold=$cold%7.2fs warm=$warm%7.2fs")
       if (args.length > 1) {
         // execute THIS QueryExecution first, then print its FINAL
         // adaptive plan: ReusedExchange / AQE join rewrites only exist

@@ -196,8 +196,8 @@ object MemAudit {
           // coalescing would do to this node's state — meaningless for
           // a REPARTITION_BY_NUM-fed node: AQE's coalescer skips that
           // origin by Spark's own semantics, which is exactly why the
-          // cost-model pins (MiningBudget.pairParts, gramPartsFor,
-          // gapFillGridPartsFor) use explicit-N repartitions. Pinned
+          // cost-model pins (every width operators.PartitionSizing
+          // sizes) use explicit-N repartitions. Pinned
           // nodes stay under the direct peak budget and the per-rung
           // state gates; only AQE-sizable exchanges get the
           // counterfactual. (Found in r14: the r13 widths hid the pair

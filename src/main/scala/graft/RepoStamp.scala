@@ -1,7 +1,7 @@
 package graft
 
 /** Provenance stamp for gate artifacts (VERDICT r11 #1: the d03
-  * pairParts recalibration landed AFTER the committed sf1/sf10/sf20
+  * pair-join width recalibration landed AFTER the committed sf1/sf10/sf20
   * audits were produced, leaving their mining-family state columns
   * stale with nothing to notice). Every [[ShuffleAudit]] dump records
   * the git TREE hash of `src/main` at run time plus whether the

@@ -27,8 +27,9 @@ object Verify {
       val mid = graft.operators.Dedup.ngramJaccardPairs(d, "doc_id", "text",
           n = 3, minJaccard = 0.5,
           maxDf = graft.queries.DerivedCaps.maxDfFor(spark, sfDir),
-          pairParts = graft.queries.DerivedCaps.pairPartsFor(spark, sfDir),
-          nDocs = graft.queries.DerivedCaps.docCountFor(spark, sfDir))
+          pairParts = graft.operators.PartitionSizing.parts(spark.sparkContext.defaultParallelism,
+            graft.queries.DerivedCaps.miningBudgetFor(spark, sfDir).stateBytes),
+          nDocs = graft.queries.DerivedCaps.tableCountFor(spark, sfDir, "documents"))
         .filter(col("jaccard") < 0.9)
         .select(col("a_id"), col("b_id"), col("jaccard"))
         .limit(5).collect()

@@ -53,7 +53,7 @@ object ConnectedComponents {
     * rung measured d13's copy at 25.8 GB of task spill with the peak
     * request stuck at 72 MB). Callers derive the width from a
     * predicted pair count ([[graft.operators.Similarity.EmbPairBudget]]
-    * `.symParts`); None keeps AQE sizing for dimension-scale graphs. */
+    * `.symStateBytes`); None keeps AQE sizing for dimension-scale graphs. */
   def components(edges: DataFrame, aCol: String, bCol: String,
                  vertices: DataFrame, idCol: String,
                  maxIter: Int = 50,

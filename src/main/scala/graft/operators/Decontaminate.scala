@@ -97,7 +97,7 @@ object Decontaminate {
     * shingles when the group space is large (per-domain runs).
     *
     * `parts` sizes the one wide exchange (hash on shingle) from a
-    * caller-side cost model; 0 leaves it to the session default. The
+    * caller-side cost model; None leaves it to the session default. The
     * default is NOT scale-safe: the vocabulary-sized distinct-pair
     * frame grows with the corpus while `spark.sql.shuffle.partitions`
     * does not, so the self-join's per-task sort state grows unbounded
@@ -113,14 +113,13 @@ object Decontaminate {
     * repartition) with one. */
   def sourceOverlap(docs: DataFrame, groupCol: String, textCol: String,
                     n: Int = 3, maxDf: Int = Int.MaxValue,
-                    parts: Int = 0): DataFrame = {
+                    parts: Option[Int] = None): DataFrame = {
     val raw = docs
       .select(col(groupCol).as("_g"),
         explode(array_distinct(ngrams(tokenize(col(textCol)), n))).as("shingle"))
       .filter(col("_g").isNotNull && col("shingle").isNotNull)
-    val sh =
-      if (parts > 0) raw.repartition(parts, col("shingle")).distinct()
-      else raw.distinct().repartition(col("shingle"))
+    val sh = parts.fold(raw.distinct().repartition(col("shingle")))(
+      p => raw.repartition(p, col("shingle")).distinct())
     // the cap is opt-in (d03 convention): at the default there is
     // nothing to drop, so skip the df pass entirely instead of paying
     // it against a provably-empty hot set. Like d03 the cap is a

@@ -114,63 +114,17 @@ object Dedup {
 
   /** The d03-family cost-model answer in full: the df cap AND the
     * candidate-pair volume the capped join will actually generate.
-    * The prediction sizes the pair-join exchange
-    * ([[MiningBudget.pairParts]]): AQE coalesces a shuffle by its map
-    * OUTPUT size, but the inverted-index join's working set is its
-    * join-output — Σ min(df,cap)·df candidate rows feeding a
-    * high-cardinality partial aggregation whose hash state is ~all
-    * distinct pairs seen by the task. At sf10 the r9 gate measured AQE
-    * coalescing that stage to 37 tasks from a 2.1 GB input while the
-    * 4.2e8 predicted pairs carried ~20 GB of agg state — 540 MB a
-    * task, over the 444 MB execution share, 1.9 GB of spill. The same
-    * histogram that derives the cap predicts the output exactly, so
-    * the planner — not AQE — sizes that one exchange. */
+    * The inverted-index join's working set is its join OUTPUT —
+    * Σ min(df,cap)·df candidate rows feeding a high-cardinality
+    * partial aggregation whose hash state is ~all distinct pairs seen
+    * by the task — which AQE cannot see from the posting lists it
+    * coalesces by. The same histogram that derives the cap predicts
+    * that output exactly, so the planner sizes the pair-join
+    * exchanges from [[stateBytes]] ([[PartitionSizing]]). */
   final case class MiningBudget(maxDf: Int, predictedPairs: Double) {
-    /** Partitions for the pair join: ~48 B of effective aggregation
-      * state per PREDICTED candidate pair, targeting ≤256 MB of
-      * modeled state per task (half the 512 MB preventive-gate
-      * budget); floored at `cores` and capped at 4096 (beyond it,
-      * per-task scheduling overhead dominates). The cores floor is
-      * LOAD-BEARING for wall, not state: the r14 sf1 A/B measured
-      * d03 at 2.08 s with the floor vs 6.16 s at the model's bare
-      * width (4) — a pinned miner splits the pipeline into more
-      * stages than the fused AQE shape, and the floor's parallelism
-      * is what amortizes them. Queries that mine a SLICE of the
-      * corpus scale the budget first ([[scaled]]) so the floor
-      * doesn't over-pin work that is a fraction of the dir-level
-      * prediction.
-      *
-      * Returns 0 — callers then leave the exchanges to AQE — when the
-      * WHOLE modeled pair state fits in one task's 256 MB share:
-      * below that line even the worst AQE coalescing (every pair in
-      * ONE task) is inside budget, so the pin buys nothing and costs
-      * real time on iterating consumers.
-      *
-      * Calibration history: r9 measured ~48 B/pair of aggregation
-      * state at sf10 (540 MB/task × 37 tasks over 4.2e8 candidates).
-      * r11 misread one sf80 task's 512 MB execution-memory PEAK as
-      * steady-state and recalibrated to 256 B at a 32 MB/task target —
-      * an 8×-model × 8×-tighter-target double-count that pinned 170
-      * partitions at sf1, 3164 at sf10, 4096 at sf80 for exchanges
-      * whose real state the r13 audits measured at 18–36 MB/task.
-      * The r14 sf1 A/B (PLANS.md round-14) measured that width as the
-      * WHOLE pair-family wall regression: 3.9–9.9× per query, every
-      * consumer back at its r11 time with the pin off, shuffle bytes
-      * flat both ways — pure task-count overhead (a parts² block
-      * matrix per exchange). The steady-state audits agree with r9's
-      * 48 B at BOTH ends of the ladder (sf80: 36 MB/task × 4096 parts
-      * ≈ 44 B over 3.3e9 candidates), so the model is re-anchored
-      * there: 48 B × candidates / 256 MB. Per-task real state is then
-      * ~250 MB FLAT at every engaged scale (parts grow with the
-      * candidate prediction), 2× headroom under the 512 MB gate, and
-      * sf1 pins at the machine floor (32) — measured back at r11
-      * wall times. The per-rung state gate (`ScaleCheck audits`)
-      * remains the backstop past the model. */
-    def pairParts(cores: Int): Int = {
-      if (predictedPairs * 48.0 <= (256L << 20).toDouble) return 0
-      val byState = math.ceil(predictedPairs * 48.0 / (256L << 20)).toInt
-      math.min(4096, math.max(cores, byState))
-    }
+    /** Modeled aggregation state of the pair join: 48 B per predicted
+      * candidate pair ([[PartitionSizing]] has the calibration). */
+    def stateBytes: Double = predictedPairs * 48.0
 
     /** The budget's view of a query that mines only a FRACTION of the
       * corpus's candidate volume (e.g. g02/g08's planted-trio slice:
@@ -178,8 +132,7 @@ object Dedup {
       * Σ df·min(df, cap) scales by ~(3/20)²). Scaling the prediction —
       * rather than the resulting width — keeps BOTH decisions honest:
       * the engage threshold (a slice below one task's share stays on
-      * AQE, which the r14 sf1 bench measured 1.6–2× faster for
-      * g02/g08) and the width at scales where the slice itself is big
+      * AQE) and the width at scales where the slice itself is big
       * enough to pin. */
     def scaled(fraction: Double): MiningBudget =
       copy(predictedPairs = predictedPairs * fraction)
@@ -259,7 +212,7 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, minJaccard: Double = 0.5,
                         maxDf: Int = Int.MaxValue,
-                        pairParts: Int = 0,
+                        pairParts: Option[Int] = None,
                         nDocs: Long = -1L): DataFrame = {
     // no .cache() — an operator can't know when to unpersist, and
     // leaked blocks accumulate across a query batch. Instead anchor
@@ -272,17 +225,16 @@ object Dedup {
     // null shingles) but keep every branch's subtree canonically
     // identical once the optimizer infers join-key null filters —
     // without them, exchange reuse is silently defeated.
-    // pairParts > 0 pins the anchor's partition COUNT (from
-    // [[MiningBudget.pairParts]] — the predicted join-output state,
+    // pairParts pins the anchor's partition COUNT (from
+    // [[MiningBudget.stateBytes]] — the predicted join-output state,
     // which AQE cannot see from map output sizes). An explicit-N
     // repartition has REPARTITION_BY_NUM origin, which AQE's
     // coalescer deliberately skips, so the join+partial-agg stage
     // reading this exchange runs at the cost-model width.
     val shBase = shingles(docs, idCol, textCol, n)
       .filter(col(idCol).isNotNull && col("shingle").isNotNull)
-    val shAll =
-      if (pairParts > 0) shBase.repartition(pairParts, col("shingle"))
-      else shBase.repartition(col("shingle"))
+    val shAll = pairParts.fold(shBase.repartition(col("shingle")))(
+      p => shBase.repartition(p, col("shingle")))
     // The df cap is a WINDOW count riding the anchor, not a df-count
     // branch + anti-join (the r14 shape, VERDICT r14 §6): the count
     // branch needed only `shingle`, so ColumnPruning pushed a
@@ -357,10 +309,8 @@ object Dedup {
     // with no second exchange.
     val joined = a.join(b,
       col("a.shingle") === col("b.shingle") && col("a_id") < col("b_id"))
-    val inter =
-      (if (pairParts > 0) joined.repartition(pairParts, col("a_id"), col("b_id"))
-       else joined)
-        .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("i"))
+    val inter = pairParts.fold(joined)(p => joined.repartition(p, col("a_id"), col("b_id")))
+      .groupBy(col("a_id"), col("b_id")).agg(count(lit(1)).as("i"))
     inter
       .join(sizes.select(col(idCol).as("a_id"), col("sz").as("sa")), "a_id")
       .join(sizes.select(col(idCol).as("b_id"), col("sz").as("sb")), "b_id")
@@ -368,17 +318,6 @@ object Dedup {
         (col("i").cast("double") / (col("sa") + col("sb") - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
-
-  /** MinHash signatures per doc: `(id, sig: array<long>)`. Each stage
-    * materializes before feeding the next stage's lambdas — the k=64
-    * permutation transforms each scan the bound hash array, not a
-    * re-evaluated expression tree. */
-  def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3, k: Int = 64, seed: Long = 42L): DataFrame =
-    docs.select(col(idCol), tokenize(col(textCol)).as("_toks"))
-      .select(col(idCol), array_distinct(ngrams(col("_toks"), n)).as("_sh"))
-      .select(col(idCol), shingleHashes(col("_sh")).as("_bh"))
-      .select(col(idCol), minHashSignature(col("_bh"), k, seed).as("sig"))
 
   /** MinHash-LSH candidate pairs + exact-Jaccard verification.
     * bands × rowsPerBand must equal k. Returns `(a_id, b_id, jaccard)`

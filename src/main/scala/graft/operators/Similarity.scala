@@ -369,18 +369,6 @@ object Similarity {
     math.min(maxBits, math.max(minBits, bits))
   }
 
-  /** Effective in-memory hash-aggregation state per predicted pair for
-    * the mining dedup's fused partial+final aggregate: two
-    * UnsafeFixedWidthAggregationMap entries of ((long, long) key →
-    * double min) at measured load factor. Calibrated from the r15 sf80
-    * MemAudit node attribution: s03's aggregate peaked at 288 MB over
-    * 128 tasks for 8×41.18e6 pair rows (~112 B/row) and s11's at
-    * 320 MB over 57 tasks for 4×41.18e6 (~111 B/row) — the same
-    * constant from two different operators. Post-pin each of the two
-    * fused maps holds (pairs / parts) entries, so the model charges
-    * 2 × 112 B per DISTINCT pair. */
-  private val PairStateBytesPerPair = 224.0
-
   /** Cost model for the pair-dedup aggregation of [[nearDupPairs]] /
     * [[multiProbePairs]] — the embedding-family sibling of
     * [[Dedup.MiningBudget]]. `dupPairs` is the predicted near-dup
@@ -415,44 +403,15 @@ object Similarity {
     * agg combined nothing); and (a_id, b_id) hashing is uniform, so
     * peak ≈ mean with no skew margin needed. */
   final case class EmbPairBudget(dupPairs: Double) {
-    /** Partitions for the pair-dedup exchange: 224 B of modeled fused
-      * aggregate state per predicted pair at a ≤256 MB/task target
-      * (half the 512 MB preventive gate; the (a_id, b_id) hash is
-      * uniform, so no skew margin beyond that is needed). Returns 0 —
-      * callers leave the aggregate to AQE, keeping the unpinned plan —
-      * when the whole modeled state fits one task's 256 MB share:
-      * sf10 (0.57e6 pairs, 128 MB of state) and below derive 0, so
-      * every oracle-checked SF and the sf1 bench keep byte-identical
-      * plans; the pin engages at sf20+ where the state model says
-      * AQE's byte view goes blind (the r14 over-pinning lesson applied
-      * from the start). Floored at `cores`, capped at 4096. Engaged
-      * widths: sf20 → 32 (floor), sf80 → 35, sf160 → 138
-      * (~230 MB/task modeled, 2× headroom under the gate). */
-    def pairParts(cores: Int): Int = {
-      val state = dupPairs * PairStateBytesPerPair
-      if (state <= (256L << 20).toDouble) return 0
-      val byState = math.ceil(state / (256L << 20).toDouble).toInt
-      math.min(4096, math.max(cores, byState))
-    }
+    /** Modeled fused-aggregate state of the pair dedup: 224 B per
+      * predicted pair ([[PartitionSizing]] has the calibration). */
+    def pairStateBytes: Double = dupPairs * 224.0
 
-    /** Partitions for ConnectedComponents' symmetrized-edge dedup when
-      * the component input IS the near-dup pair answer (d13): the
-      * symmetrization doubles the predicted pairs, and the fused
-      * partial+final distinct maps hold (u, v)-keyed entries at the
-      * same measured ~112 B constant as the pair aggregate (the key
-      * layout is identical; the dropped double buffer is noise against
-      * the map overhead), so the modeled state is
-      * 2 maps × 2·dupPairs × 112 B. Same ≤256 MB/task target, engage
-      * 0 below one task's share (sf10's 0.57e6 pairs model 255 MB —
-      * just under, so every oracle SF and the sf1 bench keep their
-      * unpinned plans), cores floor, 4096 cap. sf160 derives ~276
-      * parts where the unpinned rung spilled 25.8 GB. */
-    def symParts(cores: Int): Int = {
-      val state = 2.0 * dupPairs * PairStateBytesPerPair
-      if (state <= (256L << 20).toDouble) return 0
-      val byState = math.ceil(state / (256L << 20).toDouble).toInt
-      math.min(4096, math.max(cores, byState))
-    }
+    /** Modeled state of ConnectedComponents' symmetrized-edge dedup
+      * when the component input IS the near-dup pair answer (d13):
+      * symmetrization doubles the pairs, and the fused distinct maps
+      * hold (u, v)-keyed entries at the pair aggregate's constant. */
+    def symStateBytes: Double = 2.0 * dupPairs * 224.0
   }
 
   /** Derive [[EmbPairBudget]] from a corpus: one aggregation over the
@@ -489,7 +448,7 @@ object Similarity {
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    minCosine: Double, dim: Int, tables: Int = 8, bits: Int = 12,
                    seed: Long = 42L, maxBucketSize: Int = Int.MaxValue,
-                   pairParts: Int = 0): DataFrame = {
+                   pairParts: Option[Int] = None): DataFrame = {
     // Anchor the bucketed frame under an exchange on the join key so
     // the hot-bucket count and both self-join sides reuse ONE shuffle
     // (the d03/d04 anchor pattern).
@@ -529,15 +488,14 @@ object Similarity {
     // dropDuplicates BEFORE scoring — exchanged every candidate WITH
     // both full vectors attached (~2 KB/row): 27 GB shuffled, 90 GB
     // spilled at sf10. This shape shuffles kilobytes.
-    // pairParts > 0 moves the dedup aggregate OUT of the join stage
+    // pairParts moves the dedup aggregate OUT of the join stage
     // onto its own pinned (a_id, b_id) exchange — see [[EmbPairBudget]]
     val scored = a.join(b, Seq("table", "bucket"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         cosineSim(col("avec"), col("bvec")).as("cos"))
       .filter(col("cos") >= minCosine)
-    (if (pairParts > 0) scored.repartition(pairParts, col("a_id"), col("b_id"))
-     else scored)
+    pairParts.fold(scored)(p => scored.repartition(p, col("a_id"), col("b_id")))
       .groupBy(col("a_id"), col("b_id")).agg(min(col("cos")).as("cos"))
   }
 
@@ -574,7 +532,7 @@ object Similarity {
     */
   def multiProbePairs(corpus: DataFrame, idCol: String, vecCol: String,
                       minCosine: Double, dim: Int, tables: Int = 2, bits: Int = 26,
-                      seed: Long = 42L, pairParts: Int = 0): DataFrame = {
+                      seed: Long = 42L, pairParts: Option[Int] = None): DataFrame = {
     require(bits >= 2 && bits <= 62, s"multiProbePairs: bits=$bits out of range")
     val lo = bits / 2
     val loMask = (1L << lo) - 1
@@ -593,7 +551,7 @@ object Similarity {
       col("bucket").as("abucket"), col("table"), col("seg"), col("segcode"))
     val b = bucketed.select(col(idCol).as("b_id"), col(vecCol).as("bvec"),
       col("bucket").as("bbucket"), col("table"), col("seg"), col("segcode"))
-    // pairParts > 0: the same pinned-dedup shape as [[nearDupPairs]]
+    // pairParts: the same pinned-dedup shape as [[nearDupPairs]]
     val scored = a.join(b, Seq("table", "seg", "segcode"))
       .filter(col("a_id") < col("b_id"))
       // Hamming ≤ 1 over the FULL code, in-stage (cheap long xor
@@ -603,8 +561,7 @@ object Similarity {
       .select(col("a_id"), col("b_id"),
         cosineSim(col("avec"), col("bvec")).as("cos"))
       .filter(col("cos") >= minCosine)
-    (if (pairParts > 0) scored.repartition(pairParts, col("a_id"), col("b_id"))
-     else scored)
+    pairParts.fold(scored)(p => scored.repartition(p, col("a_id"), col("b_id")))
       .groupBy(col("a_id"), col("b_id")).agg(min(col("cos")).as("cos"))
   }
 

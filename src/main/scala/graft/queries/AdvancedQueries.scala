@@ -133,7 +133,7 @@ object AdvancedQueries {
       //    ~25M grid rows of sorter pages (27.5 GB of task spill);
       //    sized by the grid, each map task emits ~1M rows and the
       //    write stays in memory at any SF.
-      val parts = DerivedCaps.gapFillGridPartsFor(s, dir, 3600000000L)
+      val parts = DerivedCaps.gapFillGridPartsFor(s, dir, 3600000000L).get
       val v = ev(s, dir).filter($"event_type" === "view")
         .select($"user_id", $"event_id", expr("ts div 1000").as("tus"), $"value")
         .repartition(parts, $"user_id")

@@ -220,7 +220,7 @@ object CurationQueries {
     val (oT, lT) = (s"graft_p08_orders_$tag", s"graft_p08_lineitem_$tag")
     if (!s.catalog.tableExists(oT) || !s.catalog.tableExists(lT)) {
       val nBuckets = math.max(8,
-        DerivedCaps.factPartsFor(s, dir, "lineitem", rowsPerTask = 1500000L))
+        DerivedCaps.factPartsFor(s, dir, "lineitem", rowsPerTask = 1500000L).get)
       val out = sinkScratch(s, "p08", dir)
       Tables.load(s, dir, "orders").write
         .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, PartitionSizing, Similarity}
 
 /** Deduplication queries over `documents`. Exact and n-gram-Jaccard
   * variants carry DuckDB oracles directly (the math is
@@ -47,8 +47,9 @@ object DedupQueries {
       minCosine = 0.99, dim = SimilarityQueries.Dim,
       bits = DerivedCaps.embBitsFor(s, dir), maxBucketSize = 4096,
       // the dir-level budget; the planted union adds tens of pairs
-      // against a >=1e6 engage threshold (EmbPairBudget scaladoc)
-      pairParts = DerivedCaps.embPairPartsFor(s, dir))
+      // against a >=1e6 engage threshold (PartitionSizing scaladoc)
+      pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+        DerivedCaps.embPairBudgetFor(s, dir).pairStateBytes))
 
   private val SqlNorm =
     """array_to_string(list_filter(string_split_regex(lower(regexp_replace(text, '([^\s\w]|_)+', ' ', 'g')), '\s+'), x -> x <> ''), ' ')"""
@@ -73,7 +74,9 @@ object DedupQueries {
       import s.implicits._
       Dedup.ngramJaccardPairs(docs(s, dir), "doc_id", "text", n = 3, minJaccard = 0.5,
           maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir), nDocs = DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents"))
         .select($"a_id", $"b_id", round($"jaccard", 4).as("jaccard"))
         .orderBy($"a_id", $"b_id")
     }),
@@ -90,7 +93,9 @@ object DedupQueries {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
         minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir), nDocs = DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents"))
       graft.operators.ConnectedComponents.components(pairs, "a_id", "b_id",
           d.select($"doc_id"), "doc_id")
         .orderBy($"doc_id")
@@ -124,10 +129,11 @@ object DedupQueries {
       val banded = graft.operators.Checkpoints.materialize(
         Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
             n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir),
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
         // mined corpus = base + two 1/15 prefixed slices (ADVICE r10)
         nDocs = {
-          val dc = DerivedCaps.docCountFor(s, dir); dc + 2L * (dc / 15L + 1L)
+          val dc = DerivedCaps.tableCountFor(s, dir, "documents"); dc + 2L * (dc / 15L + 1L)
         })
           .select(floor($"jaccard" * 10).cast("long").as("band"),
             $"a_id", $"b_id"))
@@ -147,7 +153,7 @@ object DedupQueries {
     "d12_repeated_spans" -> ((s, dir) => {
       import s.implicits._
       Dedup.repeatedSpans(docs(s, dir), "doc_id", "text", n = 5, minDocs = 2L,
-          gramParts = Some(DerivedCaps.gramPartsFor(s, dir)))
+          gramParts = DerivedCaps.gramPartsFor(s, dir))
         .orderBy($"doc_id", $"start")
     }),
 
@@ -178,7 +184,8 @@ object DedupQueries {
       // every oracle SF and the sf1 bench keep unpinned plans)
       graft.operators.ConnectedComponents.components(pairs, "a_id", "b_id",
           corpus.select($"vec_id"), "vec_id",
-          edgeParts = DerivedCaps.embSymPartsFor(s, dir))
+          edgeParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+            DerivedCaps.embPairBudgetFor(s, dir).symStateBytes))
         .select($"vec_id", $"component".as("cluster"),
           ($"vec_id" === $"component").cast("long").as("keep"))
         .orderBy($"vec_id")
@@ -235,8 +242,9 @@ object DedupQueries {
       val d = docs(s, dir)
       val exact = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
         minJaccard = 0.9, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir),
-        nDocs = DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents"))
       val sim = Dedup.simHashPairs(d, "doc_id", "text", maxHamming = 3)
         .select($"a_id", $"b_id", $"hamming")
       // the global-window recall runs over pair rows only (tens at

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.Tables
 import graft.functions.BoundedMemo
-import graft.operators.Dedup
+import graft.operators.{Dedup, PartitionSizing, Similarity}
 
 /** Per-corpus derived tuning constants, memoized per data dir.
   *
@@ -31,11 +31,13 @@ import graft.operators.Dedup
   *
   * The same derivation also predicts the capped join's OUTPUT volume
   * (Σ min(df,cap)·df candidate pairs), which sizes the pair-join
-  * exchange ([[pairPartsFor]]): AQE coalesces that stage by its map
-  * output (posting lists) and cannot see the join's fan-out, so at
-  * sf10 it ran a ~20 GB partial-agg working set on 37 tasks and
-  * spilled 1.9 GB — the planner sizes that one exchange from the cost
-  * model instead.
+  * exchange through [[PartitionSizing]]: AQE coalesces that stage by
+  * its map output (posting lists) and cannot see the join's fan-out,
+  * so at sf10 it ran a ~20 GB partial-agg working set on 37 tasks and
+  * spilled 1.9 GB.
+  *
+  * The `*PartsFor` helpers here only measure their exchange's units
+  * (memoized per file identity) and hand them to the rule.
   */
 object DerivedCaps {
 
@@ -51,79 +53,35 @@ object DerivedCaps {
 
   private val memo = new BoundedMemo[String, Dedup.MiningBudget](64)
 
-  private def budgetFor(s: SparkSession, dir: String): Dedup.MiningBudget =
+  /** [[Dedup.deriveMiningBudget]] over `dir`'s documents table. */
+  def miningBudgetFor(s: SparkSession, dir: String): Dedup.MiningBudget =
     memo.getOrCompute(fileId(s, dir, "documents"),
       _ => Dedup.deriveMiningBudget(Tables.load(s, dir, "documents"), "doc_id", "text"))
 
   /** The df cap for pair mining over `dir`'s documents table. */
-  def maxDfFor(s: SparkSession, dir: String): Int = budgetFor(s, dir).maxDf
-
-  /** Cost-model partition count for the pair join over `dir`'s
-    * documents table (see [[Dedup.MiningBudget.pairParts]]). */
-  def pairPartsFor(s: SparkSession, dir: String): Int =
-    budgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
-
-  /** [[pairPartsFor]] for a query mining a FRACTION of the corpus's
-    * candidate volume ([[Dedup.MiningBudget.scaled]]): the g02/g08
-    * planted-trio slice passes (3/20)² so the dir-level budget's floor
-    * doesn't over-pin a fortieth of the predicted work (measured
-    * 1.6–2× wall at sf1, PLANS.md round-14). */
-  def pairPartsScaledFor(s: SparkSession, dir: String, fraction: Double): Int =
-    budgetFor(s, dir).scaled(fraction).pairParts(s.sparkContext.defaultParallelism)
-
-  private val embBitsMemo = new BoundedMemo[String, java.lang.Integer](64)
+  def maxDfFor(s: SparkSession, dir: String): Int = miningBudgetFor(s, dir).maxDf
 
   /** LSH bucket-key width for near-dup mining over `dir`'s embeddings
-    * table ([[graft.operators.Similarity.deriveBits]]): derived from
-    * the corpus row count (a parquet-metadata count, memoized per file
-    * identity) so expected bucket occupancy — and with it candidate
+    * table ([[Similarity.deriveBits]]): derived from the corpus row
+    * count so expected bucket occupancy — and with it candidate
     * volume per vector — stays constant as the corpus scales. Every
     * oracle-checked SF derives the 12-bit floor, so outputs there are
     * identical to the old fixed family. */
   def embBitsFor(s: SparkSession, dir: String): Int =
-    embBitsMemo.getOrCompute(fileId(s, dir, "embeddings"), _ => Int.box(
-      graft.operators.Similarity.deriveBits(
-        Tables.load(s, dir, "embeddings").count()))).intValue()
+    Similarity.deriveBits(tableCountFor(s, dir, "embeddings"))
 
   private val embPairsMemo = new BoundedMemo[String, java.lang.Double](64)
 
   /** Predicted near-dup pair volume for `dir`'s embeddings table
-    * ([[graft.operators.Similarity.EmbPairBudget]]): Σ c·(c−1)/2 over
+    * ([[Similarity.EmbPairBudget]]): Σ c·(c−1)/2 over
     * identical-vector groups, memoized per file identity — one
     * stats-only aggregation (r15 check: 10,166,000 predicted vs
     * 10,166,020 measured answers at sf40; the +20 are planted). */
-  def embPairBudgetFor(s: SparkSession, dir: String): graft.operators.Similarity.EmbPairBudget =
-    graft.operators.Similarity.EmbPairBudget(
+  def embPairBudgetFor(s: SparkSession, dir: String): Similarity.EmbPairBudget =
+    Similarity.EmbPairBudget(
       embPairsMemo.getOrCompute(fileId(s, dir, "embeddings"), _ => Double.box(
-        graft.operators.Similarity.deriveEmbPairBudget(
+        Similarity.deriveEmbPairBudget(
           Tables.load(s, dir, "embeddings"), "embedding").dupPairs)).doubleValue())
-
-  /** Cost-model partition count for the embedding pair-dedup exchange
-    * over `dir`'s embeddings (s03/s11 and d13's internal miner) — 0
-    * (leave the aggregate to AQE, the unpinned plan) until the modeled
-    * fused-aggregate state outgrows one task's 256 MB share; see
-    * [[graft.operators.Similarity.EmbPairBudget.pairParts]]. */
-  def embPairPartsFor(s: SparkSession, dir: String): Int =
-    embPairBudgetFor(s, dir).pairParts(s.sparkContext.defaultParallelism)
-
-  /** Cost-model partition count for ConnectedComponents' symmetrized
-    * edge dedup when the edges are `dir`'s predicted embedding
-    * near-dup answers (d13) — None (AQE sizing) until the modeled
-    * distinct state outgrows one task's share; see
-    * [[graft.operators.Similarity.EmbPairBudget.symParts]]. */
-  def embSymPartsFor(s: SparkSession, dir: String): Option[Int] = {
-    val p = embPairBudgetFor(s, dir).symParts(s.sparkContext.defaultParallelism)
-    if (p > 0) Some(p) else None
-  }
-
-  private val docCountMemo = new BoundedMemo[String, java.lang.Long](64)
-
-  /** Row count of `dir`'s documents table (parquet-metadata count,
-    * memoized per file identity) — gates dimension-vs-fact decisions
-    * like [[Dedup.ngramJaccardPairs]]'s sizes-broadcast. */
-  def docCountFor(s: SparkSession, dir: String): Long =
-    docCountMemo.getOrCompute(fileId(s, dir, "documents"), _ =>
-      Long.box(Tables.load(s, dir, "documents").count())).longValue()
 
   private val tableCountMemo = new BoundedMemo[String, java.lang.Long](64)
 
@@ -133,60 +91,48 @@ object DerivedCaps {
     tableCountMemo.getOrCompute(fileId(s, dir, table), _ =>
       Long.box(Tables.load(s, dir, table).count())).longValue()
 
-  private def clampParts(s: SparkSession, parts: Long): Int =
-    math.min(4096L, math.max(s.sparkContext.defaultParallelism.toLong, parts)).toInt
-
-  /** Partition count for an exchange carrying ~one row per `table` row
-    * (the r10 sf20 ladder's find, third instance of the d03 pattern):
+  /** Partition count for an exchange carrying ~one row per `table` row:
     * AQE coalesces exchanges by COMPRESSED map-output bytes, but the
     * per-task cost of a sort or (sort-based) aggregation is the
     * IN-MEMORY row state — ~10× the compressed view for slim repetitive
-    * rows — so fact-scale sorts/distincts land on ~35 tasks and spill
-    * tens of GB (g03's edge distinct: 33.7 GB at sf20). Queries size
-    * that one exchange from the memoized row count instead:
-    * `rowsPerTask` ≈ 1M keeps per-task state ~tens of MB at any SF. */
+    * rows. `rowsPerTask` ≈ 1M keeps per-task state ~tens of MB at any
+    * SF. */
   def factPartsFor(s: SparkSession, dir: String, table: String,
-                   rowsPerTask: Long = 1000000L): Int =
-    clampParts(s, (tableCountFor(s, dir, table) + rowsPerTask - 1) / rowsPerTask)
+                   rowsPerTask: Long = 1000000L): Option[Int] =
+    PartitionSizing.parts(s.sparkContext.defaultParallelism,
+      tableCountFor(s, dir, table).toDouble, rowsPerTask.toDouble, aqeWithinOneTask = false)
 
-  private val gramPartsMemo = new BoundedMemo[String, java.lang.Integer](64)
+  private val gramsMemo = new BoundedMemo[String, java.lang.Long](64)
 
   /** Partition count for a token-n-gram-scale exchange over `dir`'s
-    * documents (d12's span mining): gram rows ≈ total text chars / ~6
-    * (one gram per token position), far beyond any row count a table
-    * metadata read can see, so the estimate comes from Σ n_chars — one
-    * memoized single-column aggregation. ~500k fixed-width fingerprint
-    * rows per task keeps the post-exchange sort-based aggregation's
-    * state comfortably in memory at any SF (the r10 sf20 ladder
-    * measured 1.5M STRING-keyed rows per task spilling 545 MB each —
-    * string sort state expands ~10x the compressed exchange view,
-    * which drove the switch to xxhash64 group keys in
-    * [[graft.operators.Dedup.repeatedSpans]]). */
-  def gramPartsFor(s: SparkSession, dir: String): Int =
-    gramPartsMemo.getOrCompute(fileId(s, dir, "documents"), _ => {
+    * documents (d12's span mining, x08's shingle overlap): gram rows ≈
+    * total text chars / ~6 (one gram per token position), far beyond
+    * any row count a table metadata read can see, so the estimate
+    * comes from Σ n_chars — one memoized single-column aggregation —
+    * at ~500k fixed-width fingerprint rows per task. */
+  def gramPartsFor(s: SparkSession, dir: String): Option[Int] = {
+    val grams = gramsMemo.getOrCompute(fileId(s, dir, "documents"), _ => {
       import org.apache.spark.sql.functions._
       val chars = Tables.load(s, dir, "documents")
         .agg(sum(col("n_chars"))).collect()(0)
-      val grams = (if (chars.isNullAt(0)) 0L else chars.getLong(0)) / 6L
-      Int.box(clampParts(s, (grams + 499999L) / 500000L))
-    }).intValue()
+      Long.box((if (chars.isNullAt(0)) 0L else chars.getLong(0)) / 6L)
+    }).longValue()
+    PartitionSizing.parts(s.sparkContext.defaultParallelism, grams.toDouble, 500000.0,
+      aqeWithinOneTask = false)
+  }
 
-  private val gridPartsMemo = new BoundedMemo[String, java.lang.Integer](64)
+  private val gridRowsMemo = new BoundedMemo[String, java.lang.Long](64)
 
   /** Partition count for a gap-fill output-grid sort over `dir`'s view
-    * events at `stepUs` (the r10 postcap ladder's find): the final
-    * range exchange's map output is the full grid, highly repetitive →
-    * ~10× compression, so AQE's byte-based coalescer packs ~10× more
-    * in-memory sort state per task than it can see and the sort spills
-    * (measured 2.6 GB at sf20 on 35 AQE-chosen tasks). The grid size
-    * is EXACT from per-key sample bounds — Σ_key (floor(hi/step) −
-    * ceil(lo/step) + 1)⁺ — one aggregation over the events table,
-    * memoized per file identity; the query pins the sort exchange at
-    * ~1M grid rows per task (REPARTITION_BY_NUM, which AQE's coalescer
-    * skips). Same planner-sizes-what-AQE-cannot-see move as
-    * [[pairPartsFor]]. */
-  def gapFillGridPartsFor(s: SparkSession, dir: String, stepUs: Long): Int =
-    gridPartsMemo.getOrCompute(fileId(s, dir, "events") + s"#step=$stepUs", _ => {
+    * events at `stepUs`: the final range exchange's map output is the
+    * full grid, highly repetitive → ~10× compression, so AQE's
+    * byte-based coalescer packs ~10× more in-memory sort state per task
+    * than it can see. The grid size is EXACT from per-key sample
+    * bounds — Σ_key (floor(hi/step) − ceil(lo/step) + 1)⁺ — one
+    * aggregation over the events table, memoized per file identity;
+    * the query pins the sort exchange at ~1M grid rows per task. */
+  def gapFillGridPartsFor(s: SparkSession, dir: String, stepUs: Long): Option[Int] = {
+    val grid = gridRowsMemo.getOrCompute(fileId(s, dir, "events") + s"#step=$stepUs", _ => {
       import org.apache.spark.sql.functions._
       val rows = Tables.load(s, dir, "events")
         .filter(col("event_type") === "view")
@@ -197,10 +143,11 @@ object DerivedCaps {
           expr(s"hi div $stepUs") - expr(s"(lo + ${stepUs - 1}) div $stepUs") + 1))
           .as("n"))
         .collect()(0)
-      val grid = if (rows.isNullAt(0)) 0L else rows.getLong(0)
-      val byRows = math.ceil(grid / 1000000.0).toInt
-      Int.box(math.min(4096, math.max(s.sparkContext.defaultParallelism, byRows)))
-    }).intValue()
+      Long.box(if (rows.isNullAt(0)) 0L else rows.getLong(0))
+    }).longValue()
+    PartitionSizing.parts(s.sparkContext.defaultParallelism, grid.toDouble, 1000000.0,
+      aqeWithinOneTask = false)
+  }
 
   private val qualityBoundsMemo =
     new BoundedMemo[String, Array[(String, Long, Long, Long)]](64)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Graphs}
+import graft.operators.{Dedup, Graphs, PartitionSizing}
 
 /** Graph-analytics queries (`g` group) over the corpus's OWN pair
   * graph: the near-duplicate pairs that d03/d07 already mine become
@@ -92,8 +92,9 @@ object GraphQueries {
       // r10): base + the 25 planted copies
       val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir),
-        nDocs = DerivedCaps.docCountFor(s, dir) + 25)
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents") + 25)
       // symmetrize with a map-side explode, NOT a two-branch union: a
       // union re-executes the whole pair-mining subtree once per
       // branch IN THE SAME STAGE, and at sf1 the two concurrent
@@ -137,7 +138,7 @@ object GraphQueries {
       val seeds = dTbl("customer").filter($"c_custkey" === 0)
         .select(($"c_custkey" * 2).as("id"))
       Graphs.bfsHops(edges, "src", "dst", seeds, "id", maxHops = 3,
-          edgeParts = Some(DerivedCaps.factPartsFor(s, dir, "lineitem")))
+          edgeParts = DerivedCaps.factPartsFor(s, dir, "lineitem"))
         .select(expr("id div 2").as("vertex_id"),
           when($"id" % 2 === 0, "customer").otherwise("supplier").as("kind"),
           $"hops")
@@ -159,7 +160,7 @@ object GraphQueries {
         .select($"l_partkey".as("part"), $"l_suppkey".as("supp"))
       Graphs.commonNeighbors(ps, srcCol = "supp", dstCol = "part",
           maxDegree = Some(50L), minCommon = 2L,
-          edgeParts = Some(DerivedCaps.factPartsFor(s, dir, "lineitem")))
+          edgeParts = DerivedCaps.factPartsFor(s, dir, "lineitem"))
         .select($"a".as("supp_a"), $"b".as("supp_b"), $"n_common")
         .orderBy($"supp_a", $"supp_b")
     }),
@@ -174,7 +175,7 @@ object GraphQueries {
         .select($"l_partkey".as("part"), $"l_suppkey".as("supp"))
       Graphs.jaccardNeighbors(ps, srcCol = "supp", dstCol = "part",
           maxDegree = Some(50L), minCommon = 2L,
-          edgeParts = Some(DerivedCaps.factPartsFor(s, dir, "lineitem")))
+          edgeParts = DerivedCaps.factPartsFor(s, dir, "lineitem"))
         .select($"a".as("supp_a"), $"b".as("supp_b"), $"n_common",
           $"jaccard_bp")
         .orderBy($"supp_a", $"supp_b")
@@ -198,8 +199,9 @@ object GraphQueries {
       // nDocs = mined corpus: base + 25 planted copies (ADVICE r10)
       val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir),
-        nDocs = DerivedCaps.docCountFor(s, dir) + 25)
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents") + 25)
       Graphs.hits(pairs, "a_id", "b_id", corpus.select($"doc_id"), "doc_id",
           iterations = HitsIters)
         .orderBy($"doc_id")
@@ -215,7 +217,9 @@ object GraphQueries {
       val d = docs(s, dir)
       val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsFor(s, dir), nDocs = DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).stateBytes),
+        nDocs = DerivedCaps.tableCountFor(s, dir, "documents"))
       Graphs.partitionModularity(pairs, "a_id", "b_id",
           d.select($"doc_id", $"source"), "doc_id", "source")
         .orderBy($"source")
@@ -242,8 +246,9 @@ object GraphQueries {
       // predicted work (r14: 1.6-2x wall on the iterating consumers)
       val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsScaledFor(s, dir, TriSliceFraction),
-        nDocs = 3L * DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).scaled(TriSliceFraction).stateBytes),
+        nDocs = 3L * DerivedCaps.tableCountFor(s, dir, "documents"))
       Graphs.kCorePeel(pairs, "a_id", "b_id", k = 2L, rounds = 3)
         .select($"vertex".as("doc_id"), $"deg")
         .orderBy($"doc_id")
@@ -263,8 +268,9 @@ object GraphQueries {
       // same (3/20)²-scaled budget as g08 (the slice-corpus rationale)
       val pairs = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 3, minJaccard = 0.5, maxDf = DerivedCaps.maxDfFor(s, dir),
-        pairParts = DerivedCaps.pairPartsScaledFor(s, dir, TriSliceFraction),
-        nDocs = 3L * DerivedCaps.docCountFor(s, dir))
+        pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+          DerivedCaps.miningBudgetFor(s, dir).scaled(TriSliceFraction).stateBytes),
+        nDocs = 3L * DerivedCaps.tableCountFor(s, dir, "documents"))
       Graphs.triangleCounts(pairs, "a_id", "b_id")
         .orderBy($"vertex")
     }),

@@ -43,7 +43,7 @@ object MultimodalQueries {
   private def docIds(s: SparkSession, dir: String, fanOut: Boolean = true) = {
     import s.implicits._
     val ids = Tables.load(s, dir, "documents").select($"doc_id").as[Long]
-    if (fanOut || DerivedCaps.docCountFor(s, dir) > FanOutMinDocs)
+    if (fanOut || DerivedCaps.tableCountFor(s, dir, "documents") > FanOutMinDocs)
       ids.repartition(s.sparkContext.defaultParallelism)
     else ids
   }

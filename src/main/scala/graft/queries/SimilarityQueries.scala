@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Clustering, Similarity}
+import graft.operators.{Clustering, PartitionSizing, Similarity}
 
 /** Similarity-search queries over `embeddings` (64-dim `array<float>`).
   * All variants carry DuckDB oracles: brute force directly, and the
@@ -107,7 +107,9 @@ object SimilarityQueries {
       // purely as a hash-collision-mass cost backstop.
       Similarity.nearDupPairs(e.unionByName(planted), "vec_id", "embedding",
           minCosine = 0.99, dim = Dim, bits = DerivedCaps.embBitsFor(s, dir),
-          maxBucketSize = 4096, pairParts = DerivedCaps.embPairPartsFor(s, dir))
+          maxBucketSize = 4096,
+          pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+            DerivedCaps.embPairBudgetFor(s, dir).pairStateBytes))
         .select($"a_id", $"b_id", round($"cos", 4).as("cos"))
         .orderBy($"a_id", $"b_id")
     }),
@@ -128,7 +130,8 @@ object SimilarityQueries {
       Similarity.multiProbePairs(e.unionByName(planted), "vec_id", "embedding",
           minCosine = 0.99, dim = Dim, tables = 2,
           bits = 2 * (DerivedCaps.embBitsFor(s, dir) + 1),
-          pairParts = DerivedCaps.embPairPartsFor(s, dir))
+          pairParts = PartitionSizing.parts(s.sparkContext.defaultParallelism,
+            DerivedCaps.embPairBudgetFor(s, dir).pairStateBytes))
         .select($"a_id", $"b_id", round($"cos", 4).as("cos"))
         .orderBy($"a_id", $"b_id")
     }),

@@ -84,13 +84,13 @@ class DecontaminateSpec extends SparkSpec {
         .as[(String, String, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
     val base = canon(Decontaminate.sourceOverlap(d, "source", "text", n = 3))
     val pinned = canon(Decontaminate.sourceOverlap(d, "source", "text", n = 3,
-      parts = 7))
+      parts = Some(7)))
     assert(base.nonEmpty, "corpus produced no overlapping source pairs")
     assert(pinned === base)
     val baseCap = canon(Decontaminate.sourceOverlap(d, "source", "text", n = 3,
       maxDf = 3))
     val pinnedCap = canon(Decontaminate.sourceOverlap(d, "source", "text", n = 3,
-      maxDf = 3, parts = 5))
+      maxDf = 3, parts = Some(5)))
     assert(pinnedCap === baseCap)
   }
 

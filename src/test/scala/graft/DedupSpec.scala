@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.{lit, when}
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, PartitionSizing}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -68,7 +68,7 @@ class DedupSpec extends SparkSpec {
       (5L, "x y z w"), (6L, "x y z w")
     ).toDF("doc_id", "text")
     val pairs = Dedup.ngramJaccardPairs(d, "doc_id", "text", n = 3,
-      minJaccard = 0.3, maxDf = 3, pairParts = 4, nDocs = 6L)
+      minJaccard = 0.3, maxDf = 3, pairParts = Some(4), nDocs = 6L)
     val rows = pairs.collect()
     // "a b c" (df 4) is capped out, so docs 1-4 cannot pair; 5/6 are
     // exact dups through uncapped shingles
@@ -105,28 +105,28 @@ class DedupSpec extends SparkSpec {
     val un = Dedup.deriveMiningBudget(d, "doc_id", "text", pairBudgetPerOcc = 64.0)
     assert(un.maxDf === Int.MaxValue)
     assert(un.predictedPairs === brute(Long.MaxValue))
-    // pairParts: 0 (leave to AQE) while the WHOLE modeled state fits
-    // one task's 256 MB share, then floored at cores and growing with
-    // predicted volume (r12: the pin is gated by predicted pair count
-    // so tiny corpora keep AQE — VERDICT r11 #5; the 48 B/pair model
-    // and 256 MB target are the r14 recalibration, PLANS.md round-14)
-    assert(un.pairParts(32) === 0, "tiny corpus: no pin")
+    // the pair-join width (PartitionSizing over stateBytes): None
+    // (leave to AQE) while the WHOLE modeled state fits one task's
+    // 256 MB share, then floored at cores and growing with predicted
+    // volume
+    def width(b: Dedup.MiningBudget) = PartitionSizing.parts(32, b.stateBytes)
+    assert(width(un) === None, "tiny corpus: no pin")
     val boundary = (256L << 20) / 48  // modeled state exactly 256 MB
-    assert(Dedup.MiningBudget(16, boundary.toDouble).pairParts(32) === 0,
+    assert(width(Dedup.MiningBudget(16, boundary.toDouble)) === None,
       "256 MB modeled state = the boundary, still AQE")
     // the floor is a WALL choice, not state: d03 at sf1 measured
     // 2.08 s with it vs 6.16 s at the model's bare width
-    assert(Dedup.MiningBudget(16, boundary * 1.2).pairParts(32) === 32,
+    assert(width(Dedup.MiningBudget(16, boundary * 1.2)) === Some(32),
       "past the boundary: pinned, floored at cores")
-    assert(Dedup.MiningBudget(16, 1e10).pairParts(32) ===
-      math.ceil(1e10 * 48.0 / (256L << 20)).toInt)
-    assert(Dedup.MiningBudget(16, 1e12).pairParts(32) === 4096, "upper clamp")
+    assert(width(Dedup.MiningBudget(16, 1e10)) ===
+      Some(math.ceil(1e10 * 48.0 / (256L << 20)).toInt))
+    assert(width(Dedup.MiningBudget(16, 1e12)) === Some(4096), "upper clamp")
     // the scaled view: the fraction rescales the PREDICTION, so both
     // the engage threshold and the width see the slice's share
-    assert(Dedup.MiningBudget(16, boundary * 4.0).scaled(0.1).pairParts(32) === 0,
+    assert(width(Dedup.MiningBudget(16, boundary * 4.0).scaled(0.1)) === None,
       "a slice below one task's share stays on AQE")
-    assert(Dedup.MiningBudget(16, 1e10).scaled(0.5).pairParts(32) ===
-      math.ceil(5e9 * 48.0 / (256L << 20)).toInt)
+    assert(width(Dedup.MiningBudget(16, 1e10).scaled(0.5)) ===
+      Some(math.ceil(5e9 * 48.0 / (256L << 20)).toInt))
     // starvation budget: cap engages at the floor, prediction matches
     // the brute-force cost AT that cap
     val capped = Dedup.deriveMiningBudget(d, "doc_id", "text", pairBudgetPerOcc = 0.001)
@@ -136,7 +136,7 @@ class DedupSpec extends SparkSpec {
     val empty = Dedup.deriveMiningBudget(
       Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text")
     assert(empty.maxDf === Int.MaxValue && empty.predictedPairs === 0.0)
-    assert(empty.pairParts(32) === 0, "zero pairs: nothing to pin")
+    assert(width(empty) === None, "zero pairs: nothing to pin")
   }
 
   test("MinHash-LSH recall: finds every pair the exact method finds (small corpus)") {

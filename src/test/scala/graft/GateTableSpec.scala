@@ -27,7 +27,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft.<Name>` a shell script under `tools` names must still be a main
   * under `src/main`, so a script cannot outlive the main it runs. And it
   * guards the mains' wiring: sessions come from `GraftSession` alone,
-  * and one task listener serves every measurement main.
+  * and one task listener serves every measurement main. And it guards
+  * the partition-sizing policy: the 4096 cap and the 256 MB per-task
+  * share live in `PartitionSizing` alone, and no pin parameter spells
+  * "leave it to AQE" as 0.
   */
 class GateTableSpec extends AnyFunSuite {
 
@@ -63,21 +66,34 @@ class GateTableSpec extends AnyFunSuite {
         dangling.map { case (s, n) => s"$s: graft.$n" }.mkString("\n"))
   }
 
+  private lazy val mainSources = {
+    val stream = Files.walk(Paths.get("src", "main", "scala"))
+    try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally stream.close()
+  }
+
+  private def filesMatching(re: scala.util.matching.Regex): List[String] =
+    mainSources.filter(p => re.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(_.getFileName.toString).sorted
+
   test("src/main builds sessions only in GraftSession and has one SparkListener") {
-    val sources = {
-      val stream = Files.walk(Paths.get("src", "main", "scala"))
-      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally stream.close()
-    }
-    def filesMatching(re: scala.util.matching.Regex): List[String] =
-      sources.filter(p => re.findFirstIn(Files.readString(p)).nonEmpty)
-        .map(_.getFileName.toString).sorted
     val builders = filesMatching("""SparkSession\.builder\(""".r)
     assert(builders == List("GraftSession.scala"),
       s"files that build a SparkSession: ${builders.mkString(", ")}")
     val listeners = filesMatching("""\b(extends|with|new)\s+SparkListener\b""".r)
     assert(listeners.size == 1,
       s"expected one SparkListener in src/main, found it in: ${listeners.mkString(", ")}")
+  }
+
+  test("src/main sizes pinned exchanges in one file and spells unpinned as None") {
+    for (literal <- Seq("math.min(4096", "256L << 20")) {
+      val holders = filesMatching(java.util.regex.Pattern.quote(literal).r)
+      assert(holders == List("PartitionSizing.scala"),
+        s"'$literal' belongs to PartitionSizing alone, found in: ${holders.mkString(", ")}")
+    }
+    val zeroPins = filesMatching("""[pP]arts: Int = 0\b""".r)
+    assert(zeroPins.isEmpty,
+      s"pin parameters spell 'unpinned' as None, not 0: ${zeroPins.mkString(", ")}")
   }
 
   test("gate-table markers present exactly once") {

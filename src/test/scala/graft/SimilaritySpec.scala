@@ -175,20 +175,23 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("EmbPairBudget: engage threshold, floor, cap (r15b pair-dedup pin)") {
+    import graft.operators.PartitionSizing
     import graft.operators.Similarity.EmbPairBudget
-    // below one task's 256 MB share -> 0 (leave the aggregate to AQE):
+    def width(dupPairs: Double) =
+      PartitionSizing.parts(32, EmbPairBudget(dupPairs).pairStateBytes)
+    // below one task's 256 MB share -> None (leave the aggregate to AQE):
     // 1e6 pairs x 224 B = 214 MB
-    assert(EmbPairBudget(1e6).pairParts(32) == 0)
+    assert(width(1e6) == None)
     // sf10's measured 0.57e6 answers stay unpinned — plan unchanged at
     // every oracle SF and the sf1 bench
-    assert(EmbPairBudget(570020.0).pairParts(32) == 0)
+    assert(width(570020.0) == None)
     // sf20's measured 2.46e6 engage at the cores floor
-    assert(EmbPairBudget(2460020.0).pairParts(32) == 32)
+    assert(width(2460020.0) == Some(32))
     // sf160's measured 165.22e6: past the floor, ~230 MB/task modeled
-    val p160 = EmbPairBudget(165220020.0).pairParts(32)
+    val p160 = width(165220020.0).get
     assert(p160 > 32 && p160 < 200, s"p160=$p160")
     // capped where per-task scheduling overhead would dominate
-    assert(EmbPairBudget(1e12).pairParts(32) == 4096)
+    assert(width(1e12) == Some(4096))
   }
 
   test("deriveEmbPairBudget counts identical-vector pairs exactly") {
@@ -208,7 +211,7 @@ class SimilaritySpec extends SparkSpec {
         minCosine = 0.99, dim = 64)
       .orderBy("a_id", "b_id").collect().toSeq
     val pinnedDf = Similarity.nearDupPairs(corpus, "vec_id", "embedding",
-      minCosine = 0.99, dim = 64, pairParts = 7)
+      minCosine = 0.99, dim = 64, pairParts = Some(7))
     assert(pinnedDf.orderBy("a_id", "b_id").collect().toSeq == base)
     // the pinned aggregate rides a REPARTITION_BY_NUM exchange AQE must
     // not coalesce: the aggregate's output partitioning is exactly it
@@ -223,7 +226,7 @@ class SimilaritySpec extends SparkSpec {
         minCosine = 0.99, dim = 64, tables = 2, bits = 18)
       .orderBy("a_id", "b_id").collect().toSeq
     val pinnedDf = Similarity.multiProbePairs(corpus, "vec_id", "embedding",
-      minCosine = 0.99, dim = 64, tables = 2, bits = 18, pairParts = 5)
+      minCosine = 0.99, dim = 64, tables = 2, bits = 18, pairParts = Some(5))
     assert(pinnedDf.orderBy("a_id", "b_id").collect().toSeq == base)
     assert(pinnedDf.rdd.getNumPartitions == 5)
   }
