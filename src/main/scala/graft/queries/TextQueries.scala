@@ -320,6 +320,8 @@ object TextQueries {
       // nothing for ReuseExchange to match). The combined counts are
       // materialized once (the d11 fan-out idiom) because four
       // consumers read them: uni twice as a join side, ntok, pairs.
+      // Pairs below the support threshold are dropped BEFORE the
+      // materialization, as no consumer reads them.
       val toks = docs(s, dir).select(tokenize($"text").as("t"))
       val counts = graft.operators.Checkpoints.materialize(
         toks.select(explode(expr(
@@ -332,7 +334,8 @@ object TextQueries {
             |      j -> struct(element_at(t, i) AS w1, element_at(t, j) AS w2))))
             |  END)""".stripMargin)).as("p"))
         .select($"p.w1", $"p.w2")
-        .groupBy($"w1", $"w2").agg(count(lit(1)).as("c")))
+        .groupBy($"w1", $"w2").agg(count(lit(1)).as("c"))
+        .filter($"w2".isNull || $"c" >= 30))
       val uni = counts.filter($"w2".isNull)
         .select($"w1".as("w"), $"c".as("cw"))
       val ntok = uni.agg(sum($"cw").as("ntok"))

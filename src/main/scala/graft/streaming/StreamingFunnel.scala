@@ -80,8 +80,7 @@ object StreamingFunnel {
             }
             if (last != Long.MinValue) {
               state.update(Reach(times.toSeq, last))
-              // never-early ceiling, not per-term floor (see StreamingSessionize)
-              state.setTimeoutTimestamp((last + horizonUs + 999L) / 1000L)
+              state.setTimeoutTimestamp(StreamingSessionize.timeoutMs(last, horizonUs))
             }
             Iterator.empty
           }

@@ -49,11 +49,7 @@ object StreamingHeavyHitters {
             val cur = state.getOption.getOrElse(Counter(0L, Long.MinValue))
             val upd = Counter(cur.n + n, math.max(cur.lastUs, last))
             state.update(upd)
-            // ceiling of (last+horizon) in ms — flooring each term fired up
-            // to ~2 ms early, closing the counter while an in-horizon event
-            // could still legally extend it (same class as the sessionize
-            // boundary; never-early, at-most-1ms-late is the safe side)
-            state.setTimeoutTimestamp((upd.lastUs + horizonUs + 999L) / 1000L)
+            state.setTimeoutTimestamp(StreamingSessionize.timeoutMs(upd.lastUs, horizonUs))
             Iterator.empty
           }
         })

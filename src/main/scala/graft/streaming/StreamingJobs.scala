@@ -17,12 +17,17 @@ import graft.streaming.StreamingSessionize.Event
   * Flush mechanics: `flatMapGroupsWithState` emits a session only when
   * the event-time watermark passes `session end + gap`, so sessions
   * near the global end of a bounded corpus would stay in state forever
-  * and the streaming result would under-report vs batch. A sentinel
-  * source (one far-future user, filtered back out) pushes the final
-  * watermark beyond every real session's timeout; the engine's no-data
-  * micro-batch then fires the timeouts before AvailableNow terminates.
+  * and the streaming result would under-report vs batch. Every
+  * event-time drain over the events table therefore goes through ONE
+  * helper, [[eventsDrained]], which unions one sentinel source into the
+  * events stream: two far-future events of user [[SentinelUser]], type
+  * `"__sentinel"`, in the events' own columns. They push the final
+  * watermark beyond every real timeout; the engine's no-data
+  * micro-batch then fires the timeouts before AvailableNow terminates,
+  * and each drain filters the sentinel's rows or windows back out.
   * This mirrors StreamingSessionizeSpec's sentinel technique, under the
-  * driver gate instead of a unit test.
+  * driver gate instead of a unit test. (x21's change-log sentinel is
+  * built from the documents table and stays with its drain.)
   *
   * Scale posture: the real corpus streams from its ORIGINAL parquet in
   * place (no copy); only the 2-row sentinel file and the result are
@@ -53,13 +58,11 @@ object StreamingJobs {
     * factor. Single-store operators measure flat across 2/4/8, but a
     * stream-stream JOIN keeps TWO stores (each side's buffer) and
     * commits both per partition per batch — measured on e07: 16→5.4 s,
-    * 8→3.7 s, 4→2.8 s, 2→2.8 s — so the default sits at 4. The state
+    * 8→3.7 s, 4→2.8 s, 2→2.8 s — so the drains run at 4. The state
     * partition count is locked into the checkpoint at first start; the
-    * drains wipe their checkpoint per run, so the override always
-    * applies cleanly. A genuinely large deployment overrides
-    * [[DrainShufflePartitionsKey]] instead of editing code. */
-  val DrainShufflePartitionsKey = "spark.graft.streaming.drainPartitions"
-  val DefaultDrainPartitions = "4"
+    * drains wipe their checkpoint per run, so it always applies
+    * cleanly. */
+  private val DrainPartitions = 4
 
   /** Negative ids never occur in the generated events tables. */
   val SentinelUser: Long = -1L
@@ -86,18 +89,6 @@ object StreamingJobs {
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(p, true)
     ()
-  }
-
-  /** Run `body` (a drain: start + awaitTermination) with the small
-    * drain partition count, restoring the session default after. The
-    * streaming query captures the conf at `.start()`, so the override
-    * never leaks into the caller's batch plans. */
-  private def withDrainPartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key,
-      s.conf.getOption(DrainShufflePartitionsKey).getOrElse(DefaultDrainPartitions))
-    try body finally s.conf.set(key, prev)
   }
 
   /** File-stream over `dir/name.parquet`, whichever layout it is.
@@ -241,14 +232,12 @@ object StreamingJobs {
     val fs = work.getFileSystem(s.sparkContext.hadoopConfiguration)
     val outDir = new HPath(work, "out")
     val sigPath = new HPath(work, "drain-sig")
-    val parts = s.conf.getOption(DrainShufflePartitionsKey)
-      .getOrElse(DefaultDrainPartitions)
     // the leading version is part of the signature: bump it whenever a
     // drain's SINK contents change shape/semantics (v2: sentinel
     // windows are filtered before the sink), so work dirs written by
     // older code can never re-serve a stale layout
     val sig = (s"v2|$job" +: srcTables.map(srcStat(s, dir, _)))
-      .mkString("|") + s"|$sigExtra|parts=$parts"
+      .mkString("|") + s"|$sigExtra|parts=$DrainPartitions"
     val hit = try {
       fs.exists(sigPath) && fs.exists(outDir) && {
         val in = fs.open(sigPath)
@@ -260,15 +249,48 @@ object StreamingJobs {
     if (hit) return Some(s.read.parquet(outDir.toString))
     wipe(s, work)
     prepare(work).map { start =>
-      withDrainPartitions(s) {
-        val q = start(new HPath(work, "ckpt").toString, outDir.toString)
-        q.awaitTermination()
-      }
+      // the streaming query captures the conf at `.start()`, so the
+      // drain width never leaks into the caller's batch plans
+      val key = "spark.sql.shuffle.partitions"
+      val prev = s.conf.get(key)
+      s.conf.set(key, DrainPartitions.toString)
+      try start(new HPath(work, "ckpt").toString, outDir.toString).awaitTermination()
+      finally s.conf.set(key, prev)
       val o = fs.create(sigPath, true)
       try o.write(sig.getBytes("UTF-8")) finally o.close()
       s.read.parquet(outDir.toString)
     }
   }
+
+  /** [[drained]] for the event-time drains over the events table,
+    * with the sentinel flush built in. The scalar max event time
+    * (distributed agg, 8 bytes to the driver) positions two sentinel
+    * events — user [[SentinelUser]], event ids -1/-2, type
+    * `"__sentinel"`, value 0 — at +50 and +100 years, beyond every
+    * possible timeout. `query` receives the events stream with the
+    * sentinels unioned in, as `(user_id, event_id, event_type, value,
+    * tus)`, plus the real max event time, and returns the frame the
+    * sink commits; each caller selects its own columns from it and
+    * filters the sentinel's rows or windows back out. An empty corpus
+    * returns None (the caller supplies the empty shape). */
+  private def eventsDrained(s: SparkSession, job: String, dir: String, sigExtra: String)
+                           (query: (DataFrame, Long) => DataFrame): Option[DataFrame] =
+    drained(s, job, dir, Seq("events"), sigExtra) { work =>
+      import s.implicits._
+      maxTusOf(s, dir).map { maxTus =>
+        val sentinelDir = new HPath(work, "sentinel").toString
+        Seq(1L, 2L)
+          .map(k => (SentinelUser, -k, "__sentinel", 0.0, (maxTus + k * SentinelSpacingUs) * 1000))
+          .toDF("user_id", "event_id", "event_type", "value", "ts")
+          .coalesce(1).write.parquet(sentinelDir)
+        def shaped(df: DataFrame) = df.select($"user_id", $"event_id", $"event_type",
+          $"value", expr("ts div 1000").as("tus"))
+        val sentinel = s.readStream
+          .schema("user_id LONG, event_id LONG, event_type STRING, value DOUBLE, ts LONG")
+          .parquet(sentinelDir)
+        parquetSink(query(shaped(eventsStream(s, dir)).union(shaped(sentinel)), maxTus))
+      }
+    }
 
   /** Streaming sessionization of `dir`'s events table, drained with
     * AvailableNow; output matches batch e01: `(user_id, session_id,
@@ -276,25 +298,10 @@ object StreamingJobs {
   def sessionizeAvailableNow(s: SparkSession, dir: String,
                              gapUs: Long = StreamingSessionize.DefaultGapUs): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e05", dir, Seq("events"), s"gap=$gapUs") { work =>
-      // scalar max event time (distributed agg, 8 bytes to the driver)
-      // positions the sentinels beyond every possible session timeout;
-      // an empty corpus sessionizes to an empty result (batch parity)
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq((SentinelUser, -1L, (maxTus + SentinelSpacingUs) * 1000),
-            (SentinelUser, -2L, (maxTus + 2 * SentinelSpacingUs) * 1000))
-          .toDF("user_id", "event_id", "ts")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def asEvents(df: DataFrame) =
-          df.select($"user_id", $"event_id", expr("ts div 1000").as("tus"))
-        val real = asEvents(eventsStream(s, dir))
-        val sentinel = asEvents(s.readStream
-          .schema("user_id LONG, event_id LONG, ts LONG").parquet(sentinelDir))
-        parquetSink(StreamingSessionize.sessionize(
-          real.union(sentinel).as[Event], gapUs).toDF())
-      }
+    // an empty corpus sessionizes to an empty result (batch parity)
+    val out = eventsDrained(s, "e05", dir, s"gap=$gapUs") { (events, _) =>
+      StreamingSessionize.sessionize(
+        events.select($"user_id", $"event_id", $"tus").as[Event], gapUs).toDF()
     }
     out match {
       case None =>
@@ -358,28 +365,14 @@ object StreamingJobs {
   def sessionWindowAvailableNow(s: SparkSession, dir: String,
                                 gapUs: Long = StreamingSessionize.DefaultGapUs): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e15", dir, Seq("events"), s"gap=$gapUs") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq((SentinelUser, (maxTus + SentinelSpacingUs) * 1000),
-            (SentinelUser, (maxTus + 2 * SentinelSpacingUs) * 1000))
-          .toDF("user_id", "ts")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select($"user_id", expr("ts div 1000").as("tus"))
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("user_id LONG, ts LONG").parquet(sentinelDir))
-
-        parquetSink(real.union(sentinel)
-          .withColumn("tsc", timestamp_micros($"tus"))
-          .withWatermark("tsc", "30 minutes")
-          .groupBy($"user_id", session_window($"tsc", s"$gapUs microseconds").as("win"))
-          .agg(max($"tus").as("session_end_us"), count(lit(1)).as("n_events"))
-          .select($"user_id", unix_micros($"win.start").as("session_start_us"),
-            $"session_end_us", $"n_events"))
-      }
+    val out = eventsDrained(s, "e15", dir, s"gap=$gapUs") { (events, _) =>
+      events.select($"user_id", $"tus")
+        .withColumn("tsc", timestamp_micros($"tus"))
+        .withWatermark("tsc", "30 minutes")
+        .groupBy($"user_id", session_window($"tsc", s"$gapUs microseconds").as("win"))
+        .agg(max($"tus").as("session_end_us"), count(lit(1)).as("n_events"))
+        .select($"user_id", unix_micros($"win.start").as("session_start_us"),
+          $"session_end_us", $"n_events")
     }
     if (out.isEmpty)
       return Seq.empty[(Long, Long, Long, Long)]
@@ -470,24 +463,11 @@ object StreamingJobs {
     def zeroRows = stages.zipWithIndex
       .map { case (st, i) => (i + 1L, st, 0L) }
       .toDF("stage_idx", "stage", "n_users")
-    val out = drained(s, "e10", dir, Seq("events"),
-        s"stages=${stages.mkString(",")}|hz=$horizonUs") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq((SentinelUser, "__sentinel", (maxTus + SentinelSpacingUs) * 1000),
-            (SentinelUser, "__sentinel", (maxTus + 2 * SentinelSpacingUs) * 1000))
-          .toDF("user_id", "event_type", "ts")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select($"user_id", $"event_type", expr("ts div 1000").as("tus"))
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("user_id LONG, event_type STRING, ts LONG").parquet(sentinelDir))
-
-        parquetSink(StreamingFunnel.stageReaches(
-          real.union(sentinel).as[StreamingFunnel.FEvent], stages, horizonUs).toDF())
-      }
+    val out = eventsDrained(s, "e10", dir,
+        s"stages=${stages.mkString(",")}|hz=$horizonUs") { (events, _) =>
+      StreamingFunnel.stageReaches(
+        events.select($"user_id", $"event_type", $"tus").as[StreamingFunnel.FEvent],
+        stages, horizonUs).toDF()
     }
     if (out.isEmpty) return zeroRows
     // LEFT join from the stage spine: a corpus where no user reaches
@@ -544,24 +524,10 @@ object StreamingJobs {
                                slide: Option[String] = None,
                                jobTag: String = "e06"): DataFrame = {
     import s.implicits._
-    val out = drained(s, jobTag, dir, Seq("events"),
-        s"win=$windowLen|slide=${slide.getOrElse(windowLen)}") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq(((maxTus + SentinelSpacingUs) * 1000, "__sentinel", 0.0),
-            ((maxTus + 2 * SentinelSpacingUs) * 1000, "__sentinel", 0.0))
-          .toDF("ts", "event_type", "value")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select(expr("ts div 1000").as("tus"), $"event_type", $"value")
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("ts LONG, event_type STRING, value DOUBLE").parquet(sentinelDir))
-
-        parquetSink(StreamingWindowCounts.slidingCounts(
-          real.union(sentinel), windowLen, slide.getOrElse(windowLen)))
-      }
+    val out = eventsDrained(s, jobTag, dir,
+        s"win=$windowLen|slide=${slide.getOrElse(windowLen)}") { (events, _) =>
+      StreamingWindowCounts.slidingCounts(events.select($"tus", $"event_type", $"value"),
+        windowLen, slide.getOrElse(windowLen))
     }
     if (out.isEmpty)
       return Seq.empty[(Long, String, Long, Double)]
@@ -583,33 +549,19 @@ object StreamingJobs {
     * State is five longs per open window. */
   def zoneMapsAvailableNow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e17", dir, Seq("events"), "") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq(((maxTus + SentinelSpacingUs) * 1000, SentinelUser, -1L),
-            ((maxTus + 2 * SentinelSpacingUs) * 1000, SentinelUser, -1L))
-          .toDF("ts", "user_id", "event_id")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select(expr("ts div 1000").as("tus"), $"user_id", $"event_id")
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("ts LONG, user_id LONG, event_id LONG").parquet(sentinelDir))
-
-        parquetSink(real.union(sentinel)
-          .withColumn("ts_micro", timestamp_micros($"tus"))
-          .withWatermark("ts_micro", "1 hour")
-          .groupBy(window($"ts_micro", "1 hour"))
-          .agg(count(lit(1)).as("n_rows"),
-            min($"user_id").as("min_uid"), max($"user_id").as("max_uid"),
-            min($"event_id").as("min_eid"), max($"event_id").as("max_eid"))
-          .select(unix_micros($"window.start").as("window_start_us"),
-            $"n_rows", $"min_uid", $"max_uid", $"min_eid", $"max_eid")
-          // sentinel windows filtered BEFORE the sink (maxTus is in
-          // scope only here), so a re-serve is a pure parquet read
-          .filter($"window_start_us" <= maxTus))
-      }
+    val out = eventsDrained(s, "e17", dir, "") { (events, maxTus) =>
+      events.select($"tus", $"user_id", $"event_id")
+        .withColumn("ts_micro", timestamp_micros($"tus"))
+        .withWatermark("ts_micro", "1 hour")
+        .groupBy(window($"ts_micro", "1 hour"))
+        .agg(count(lit(1)).as("n_rows"),
+          min($"user_id").as("min_uid"), max($"user_id").as("max_uid"),
+          min($"event_id").as("min_eid"), max($"event_id").as("max_eid"))
+        .select(unix_micros($"window.start").as("window_start_us"),
+          $"n_rows", $"min_uid", $"max_uid", $"min_eid", $"max_eid")
+        // sentinel windows filtered BEFORE the sink (maxTus is in
+        // scope only here), so a re-serve is a pure parquet read
+        .filter($"window_start_us" <= maxTus)
     }
     out match {
       case None =>
@@ -632,30 +584,16 @@ object StreamingJobs {
     * close together. */
   def windowUsersAvailableNow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e18", dir, Seq("events"), "") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq(((maxTus + SentinelSpacingUs) * 1000, SentinelUser),
-            ((maxTus + 2 * SentinelSpacingUs) * 1000, SentinelUser))
-          .toDF("ts", "user_id")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select(expr("ts div 1000").as("tus"), $"user_id")
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("ts LONG, user_id LONG").parquet(sentinelDir))
-
-        parquetSink(real.union(sentinel)
-          .withColumn("hour_ts",
-            timestamp_micros(expr("(tus div 3600000000) * 3600000000")))
-          .withWatermark("hour_ts", "1 hour")
-          .dropDuplicates("user_id", "hour_ts")
-          .groupBy(window($"hour_ts", "1 hour"))
-          .agg(count(lit(1)).as("n_users"))
-          .select(unix_micros($"window.start").as("window_start_us"), $"n_users")
-          .filter($"window_start_us" <= maxTus)) // sentinel windows pre-sink
-      }
+    val out = eventsDrained(s, "e18", dir, "") { (events, maxTus) =>
+      events.select($"tus", $"user_id")
+        .withColumn("hour_ts",
+          timestamp_micros(expr("(tus div 3600000000) * 3600000000")))
+        .withWatermark("hour_ts", "1 hour")
+        .dropDuplicates("user_id", "hour_ts")
+        .groupBy(window($"hour_ts", "1 hour"))
+        .agg(count(lit(1)).as("n_users"))
+        .select(unix_micros($"window.start").as("window_start_us"), $"n_users")
+        .filter($"window_start_us" <= maxTus) // sentinel windows pre-sink
     }
     out match {
       case None => Seq.empty[(Long, Long)].toDF("window_start_us", "n_users")
@@ -675,42 +613,28 @@ object StreamingJobs {
     * is a violation. */
   def dqAuditAvailableNow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e16", dir, Seq("events"), "") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq(((maxTus + SentinelSpacingUs) * 1000, "__sentinel", 0.0),
-            ((maxTus + 2 * SentinelSpacingUs) * 1000, "__sentinel", 0.0))
-          .toDF("ts", "event_type", "value")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select(expr("ts div 1000").as("tus"), $"event_type", $"value")
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("ts LONG, event_type STRING, value DOUBLE").parquet(sentinelDir))
-
-        def viol(pred: org.apache.spark.sql.Column) =
-          sum(coalesce(pred, lit(true)).cast("long"))
-        val types = Seq("click", "error", "purchase", "signup", "view")
-        parquetSink(real.union(sentinel)
-          .withColumn("ts_micro", timestamp_micros($"tus"))
-          .withWatermark("ts_micro", "1 hour")
-          .groupBy(window($"ts_micro", "1 hour"))
-          .agg(count(lit(1)).as("_n"),
-            viol(!($"value" >= 0 && $"value" <= 500)).as("_v_value_range"),
-            viol(!$"event_type".isin(types: _*)).as("_v_type_domain"),
-            viol($"value" > 400).as("_v_screen_big_value"),
-            viol($"event_type" === "error").as("_v_screen_error"))
-          .select(unix_micros($"window.start").as("window_start_us"), $"_n",
-            expr("""stack(4,
-              'screen_big_value', _v_screen_big_value,
-              'screen_error', _v_screen_error,
-              'type_domain', _v_type_domain,
-              'value_range', _v_value_range) AS (check, n_violations)"""))
-          .select($"window_start_us", $"check", $"_n".as("n_events"),
-            $"n_violations")
-          .filter($"window_start_us" <= maxTus)) // sentinel windows pre-sink
-      }
+    def viol(pred: org.apache.spark.sql.Column) =
+      sum(coalesce(pred, lit(true)).cast("long"))
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    val out = eventsDrained(s, "e16", dir, "") { (events, maxTus) =>
+      events.select($"tus", $"event_type", $"value")
+        .withColumn("ts_micro", timestamp_micros($"tus"))
+        .withWatermark("ts_micro", "1 hour")
+        .groupBy(window($"ts_micro", "1 hour"))
+        .agg(count(lit(1)).as("_n"),
+          viol(!($"value" >= 0 && $"value" <= 500)).as("_v_value_range"),
+          viol(!$"event_type".isin(types: _*)).as("_v_type_domain"),
+          viol($"value" > 400).as("_v_screen_big_value"),
+          viol($"event_type" === "error").as("_v_screen_error"))
+        .select(unix_micros($"window.start").as("window_start_us"), $"_n",
+          expr("""stack(4,
+            'screen_big_value', _v_screen_big_value,
+            'screen_error', _v_screen_error,
+            'type_domain', _v_type_domain,
+            'value_range', _v_value_range) AS (check, n_violations)"""))
+        .select($"window_start_us", $"check", $"_n".as("n_events"),
+          $"n_violations")
+        .filter($"window_start_us" <= maxTus) // sentinel windows pre-sink
     }
     out match {
       case None =>
@@ -728,23 +652,9 @@ object StreamingJobs {
                              minCount: Long = 70L,
                              horizonUs: Long = 365L * 24 * 3600 * 1000000): DataFrame = {
     import s.implicits._
-    val out = drained(s, "e11", dir, Seq("events"), s"hz=$horizonUs") { work =>
-      maxTusOf(s, dir).map { maxTus =>
-        val sentinelDir = new HPath(work, "sentinel").toString
-        Seq((SentinelUser, (maxTus + SentinelSpacingUs) * 1000),
-            (SentinelUser, (maxTus + 2 * SentinelSpacingUs) * 1000))
-          .toDF("user_id", "ts")
-          .coalesce(1).write.parquet(sentinelDir)
-
-        def shaped(df: DataFrame) =
-          df.select($"user_id".as("key"), expr("ts div 1000").as("tus"))
-        val real = shaped(eventsStream(s, dir))
-        val sentinel = shaped(s.readStream
-          .schema("user_id LONG, ts LONG").parquet(sentinelDir))
-
-        parquetSink(StreamingHeavyHitters.counts(
-          real.union(sentinel).as[StreamingHeavyHitters.KeyedEvent], horizonUs).toDF())
-      }
+    val out = eventsDrained(s, "e11", dir, s"hz=$horizonUs") { (events, _) =>
+      StreamingHeavyHitters.counts(events.select($"user_id".as("key"), $"tus")
+        .as[StreamingHeavyHitters.KeyedEvent], horizonUs).toDF()
     }
     out match {
       case None => Seq.empty[(Long, Long)].toDF("user_id", "n_events")

@@ -47,6 +47,18 @@ object StreamingSessionize {
     * the same constant, so the twins cannot silently diverge. */
   val DefaultGapUs: Long = graft.operators.Sessionize.DefaultGapUs
 
+  /** Event-time timeout, in ms, for keyed state whose last event is at
+    * `lastUs` and which closes `afterUs` later. It is the CEILING of
+    * (lastUs + afterUs) in ms: flooring each µs term separately (the
+    * r14 shape) let the timeout fire up to ~2 ms before the watermark
+    * truly passed it, so an event in that sliver — which batch
+    * semantics would merge into the open session — could find its
+    * session already closed and split. Ceiling guarantees the timeout
+    * is never early; at most 1 ms late, which only delays the flush,
+    * never changes a boundary. The funnel, heavy-hitter and upsert
+    * operators time out through it too. */
+  def timeoutMs(lastUs: Long, afterUs: Long): Long = (lastUs + afterUs + 999L) / 1000L
+
   /** events must carry an event-time `ts_micro: timestamp` column used
     * for the watermark (build it with `timestamp_micros(tus)`). */
   def sessionize(events: Dataset[Event], gapUs: Long = DefaultGapUs,
@@ -87,15 +99,8 @@ object StreamingSessionize {
     }
     cur.foreach { s =>
       state.update(s)
-      // flush when watermark passes the gap after session end. The
-      // timestamp is the CEILING of (end+gap) in ms: flooring each
-      // µs term separately (the r14 shape) let the timeout fire up to
-      // ~2 ms before the watermark truly passed end+gap, so an event
-      // in that sliver — which batch semantics would merge into this
-      // session — could find its session already closed and split.
-      // Ceiling guarantees the timeout is never early; at most 1 ms
-      // late, which only delays the flush, never changes a boundary.
-      state.setTimeoutTimestamp((s.end + gapUs + 999L) / 1000L)
+      // flush when watermark passes the gap after session end
+      state.setTimeoutTimestamp(timeoutMs(s.end, gapUs))
     }
     closed.result().iterator
   }

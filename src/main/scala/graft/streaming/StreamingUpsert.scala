@@ -54,8 +54,7 @@ object StreamingUpsert {
                 else cur.copy(lastUs = lastUs)
             }
             state.update(cur)
-            // never-early ceiling, not per-term floor (see StreamingSessionize)
-            state.setTimeoutTimestamp((cur.lastUs + horizonUs + 999L) / 1000L)
+            state.setTimeoutTimestamp(StreamingSessionize.timeoutMs(cur.lastUs, horizonUs))
             Iterator.empty
           }
         })

@@ -30,7 +30,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and one task listener serves every measurement main. And it guards
   * the partition-sizing policy: the 4096 cap and the 256 MB per-task
   * share live in `PartitionSizing` alone, and no pin parameter spells
-  * "leave it to AQE" as 0.
+  * "leave it to AQE" as 0. And it guards the streaming drains: the
+  * far-future sentinel events are built on one line of
+  * `StreamingJobs`, and the drain width is no conf key.
   */
 class GateTableSpec extends AnyFunSuite {
 
@@ -94,6 +96,20 @@ class GateTableSpec extends AnyFunSuite {
     val zeroPins = filesMatching("""[pP]arts: Int = 0\b""".r)
     assert(zeroPins.isEmpty,
       s"pin parameters spell 'unpinned' as None, not 0: ${zeroPins.mkString(", ")}")
+  }
+
+  test("src/main writes the drains' sentinel events in one place and has no drain-width knob") {
+    val sentinelWriters = for {
+      p <- mainSources
+      line <- Files.readAllLines(p).asScala
+      if """maxTus\s*\+.*SentinelSpacingUs""".r.findFirstIn(line).nonEmpty
+    } yield p.getFileName.toString
+    assert(sentinelWriters == List("StreamingJobs.scala"),
+      s"the events sentinel is built on ${sentinelWriters.size} lines, in: " +
+        sentinelWriters.distinct.mkString(", "))
+    val knob = filesMatching(
+      java.util.regex.Pattern.quote("spark.graft.streaming.drainPartitions").r)
+    assert(knob.isEmpty, s"the drain width is a constant, not a conf key: ${knob.mkString(", ")}")
   }
 
   test("gate-table markers present exactly once") {

@@ -45,9 +45,22 @@ class NewOpsR7gSpec extends SparkSpec {
   }
 
   test("t23 matches a sequential window-pair reference at sf0.001") {
-    val got = SparkEntry.queries("t23_window_pmi")(spark, sfDir).collect()
+    // the one materialized counts table must hold the unigram rows and
+    // only the pairs its consumers read (c >= 30), not the whole pair table
+    var checkpointed = Seq.empty[(Long, Long, Long)]
+    graft.operators.Checkpoints.faultHook.set { df =>
+      checkpointed :+= ((df.filter($"w2".isNull).count(),
+        df.filter($"w2".isNotNull && $"c" >= 30).count(),
+        df.filter($"w2".isNotNull && $"c" < 30).count()))
+    }
+    val got = try SparkEntry.queries("t23_window_pmi")(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
+    finally graft.operators.Checkpoints.faultHook.set((_: org.apache.spark.sql.DataFrame) => ())
+    assert(checkpointed.size == 1, s"t23 materialized ${checkpointed.size} frames")
+    val (uniRows, keptPairs, thinPairs) = checkpointed.head
+    assert(uniRows > 0 && keptPairs == got.size.toLong)
+    assert(thinPairs == 0, s"checkpoint holds $thinPairs pairs below the c >= 30 threshold")
     val pos = Tables.load(spark, sfDir, "documents")
       .select($"doc_id", posexplode(graft.functions.TextFunctions.tokenize($"text"))
         .as(Seq("i", "w")))

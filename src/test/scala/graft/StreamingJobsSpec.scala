@@ -7,7 +7,8 @@ import graft.SparkSpec
 /** The drains' scratch-dir contract: configurable shared-FS root
   * (cluster-safe), full-digest per-corpus tags (collision-proof), and
   * an end-to-end drain proving the override is honored and the
-  * partition override never leaks into the session. */
+  * partition override never leaks into the session, and the empty-corpus
+  * shape of every sentinel-flushed drain. */
 class StreamingJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -190,6 +191,56 @@ class StreamingJobsSpec extends SparkSpec {
       assert(drain() == expected +
         ((3L, 1L, base + 7 * Min, base + 7 * Min, 1L)),
         "rewritten directory must invalidate the drain signature")
+    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+  }
+
+  test("sentinel drains over an empty events table return their non-empty shape") {
+    // the empty-corpus branch of every sentinel-flushed drain returns a
+    // hand-written frame; it must carry the same columns and types as
+    // the drained answer, and (the funnel aside) no rows
+    val Min = 60L * 1000000
+    val base = 1440 * Min
+    def corpusOf(rows: Seq[(Long, Long, Long, String, Double)]): String = {
+      val corpus = Files.createTempDirectory("graft-empty-corpus")
+      val tmpOut = Files.createTempDirectory("graft-empty-write").resolve("ev")
+      rows.toDF("user_id", "event_id", "ts", "event_type", "value")
+        .coalesce(1).write.parquet(tmpOut.toString)
+      val part = Files.list(tmpOut)
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      Files.move(part, corpus.resolve("events.parquet"))
+      corpus.toString
+    }
+    val full = corpusOf(Seq(
+      (1L, 1L, (base + 0 * Min) * 1000, "click", 0.0),
+      (1L, 2L, (base + 10 * Min) * 1000, "view", 3.5),
+      (1L, 3L, (base + 60 * Min) * 1000, "purchase", 7.0),
+      (2L, 4L, (base + 5 * Min) * 1000, "view", 0.0)))
+    val empty = corpusOf(Seq.empty)
+    val drains: Seq[(String, String => org.apache.spark.sql.DataFrame)] = Seq(
+      "e05" -> (StreamingJobs.sessionizeAvailableNow(spark, _)),
+      "e06" -> (StreamingJobs.windowCountsAvailableNow(spark, _)),
+      "e10" -> (StreamingJobs.funnelAvailableNow(spark, _)),
+      "e11" -> (StreamingJobs.heavyUsersAvailableNow(spark, _)),
+      "e15" -> (StreamingJobs.sessionWindowAvailableNow(spark, _)),
+      "e16" -> (StreamingJobs.dqAuditAvailableNow(spark, _)),
+      "e17" -> (StreamingJobs.zoneMapsAvailableNow(spark, _)),
+      "e18" -> (StreamingJobs.windowUsersAvailableNow(spark, _)))
+    val workOverride = Files.createTempDirectory("graft-empty-work")
+    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    try drains.foreach { case (job, drain) =>
+      def shape(df: org.apache.spark.sql.DataFrame) =
+        df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+      val drained = drain(full)
+      val none = drain(empty)
+      assert(shape(none) == shape(drained), s"$job: empty-corpus shape drifted")
+      if (job == "e10") {
+        // the funnel answers one row per stage, zero counts included
+        assert(none.collect().map(_.getAs[Long]("n_users")).toSeq ==
+          graft.operators.Funnel.EventStages.map(_ => 0L))
+      } else assert(none.count() == 0L, s"$job: rows from an empty corpus")
+      // the empty branch is really taken: no sink was drained for it
+      assert(!Files.exists(workOverride
+        .resolve(s"graft_${job}_${md5hex(empty)}").resolve("drain-sig")))
     } finally spark.conf.unset(StreamingJobs.WorkDirKey)
   }
 }

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run any graft main class directly: tools/jrun.sh graft.Explain <args...>
-# the compiled classes of the checkout this script lives in
-CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
+# the compiled classes of the checkout this script lives in, plus its
+# resources (the zip-entries DataSourceRegister entry), which
+# `sbt compile` does not copy into the classes directory
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CLASSES="$ROOT/target/scala-2.13/classes:$ROOT/src/main/resources"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \

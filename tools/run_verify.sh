@@ -7,22 +7,8 @@ set -e
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT_DIR=${2:-/tmp/verify_out}
 shift 2 2>/dev/null || shift $#
-# Verify runs local[4] unless SPARK_GRAFT_CPUS says otherwise (the
-# session's own default is every available processor)
+# Verify runs local[4] with an 8 GB heap unless the environment says
+# otherwise (the session's own default is every available processor)
 export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-4}"
-# the compiled classes of the checkout this script lives in
-CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
-         java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $ADD_OPENS \
-  -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp "$CLASSES:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT_DIR" "$@"
+export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-8g}"
+exec "$(dirname "${BASH_SOURCE[0]}")/jrun.sh" graft.Verify "$SF_DIR" "$OUT_DIR" "$@"
