@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, concat_ws}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, sum}
 
 import graft.functions.HadoopTextHash
 import graft.operators.Bigrams
@@ -22,17 +22,18 @@ import graft.operators.Bigrams.RecordMode
   * session builder; runtime-modifiable confs also apply to a reused
   * session inside [[run]].
   *
-  * `--hadoop-layout` reproduces the reference cluster runs' exact
-  * on-disk layout: 32 (or N) part files placed by Hadoop
-  * `Text.hashCode % N` with keys sorted within each partition —
-  * byte-comparable against `bigram_custom8/9`. Implemented as one
-  * Catalyst plan: `repartitionById` on the codegen'd
-  * `HadoopTextHash.hadoopPartition` (a pass-through partition-id
-  * exchange, which AQE does not coalesce), `sortWithinPartitions` on the
-  * key (UnsafeRow string order is Hadoop `Text` byte order) and
-  * `concat_ws` formatting. The lines are written with `saveAsTextFile`
-  * rather than the DataFrame text writer, because the latter skips
-  * empty partitions and MapReduce writes every part file, empty or not.
+  * The job reads its records once and takes one of two routes:
+  *  - the default TSV route writes [[Bigrams.counts]] (in-mapper
+  *    partial counts → groupBy exchange → sum) with [[Bigrams.writeTsv]],
+  *    whose `repartition` is a second exchange unless the planner finds
+  *    the aggregate's exchange already matches it;
+  *  - `--hadoop-layout` reproduces the reference cluster runs' exact
+  *    on-disk layout: 32 (or N) part files placed by Hadoop
+  *    `Text.hashCode % N`, keys sorted within each partition —
+  *    byte-comparable against `bigram_custom8/9`. It sends the
+  *    unsummed [[Bigrams.pairCounts]] straight into the layout's
+  *    exchange and sums after it, so the partitioner is the output
+  *    layout, as in a MapReduce job (see [[hadoopLayoutLines]]).
   */
 object BigramJob {
 
@@ -73,24 +74,40 @@ object BigramJob {
     // (spark.master etc.) only take effect via `main`'s builder and
     // are skipped (isModifiable) rather than crashing a reused session
     c.conf.foreach { case (k, v) => if (spark.conf.isModifiable(k)) spark.conf.set(k, v) }
-    val counts = if (c.zip) Bigrams.fromZip(spark, c.input, c.mode)
-                 else Bigrams.fromTextFiles(spark, c.input, c.mode)
-    if (c.hadoopLayout) writeHadoopLayout(counts, c.output, c.partitions)
-    else Bigrams.writeTsv(counts, c.output, c.partitions)
+    val records = if (c.zip) Bigrams.readZip(spark, c.input, c.mode)
+                  else Bigrams.readText(spark, c.input, c.mode)
+    if (c.hadoopLayout) writeHadoopLayout(Bigrams.pairCounts(records), c.output, c.partitions)
+    else Bigrams.writeTsv(Bigrams.counts(records), c.output, c.partitions)
   }
 
-  /** MapReduce-identical sink: `Text.hashCode % N` placement, keys
-    * sorted within partitions, `key \t count` lines, all `N` part files. */
-  def writeHadoopLayout(counts: DataFrame, outDir: String, nParts: Int): Unit = {
+  /** The `--hadoop-layout` output lines, `key \t count`, one partition
+    * per part file: `counts` (a `(key, count)` frame, partial or final
+    * counts alike: summing final counts again is the identity) goes
+    * through one exchange, `repartitionById` on the codegen'd
+    * [[HadoopTextHash.hadoopPartition]] (a pass-through partition-id
+    * exchange, which AQE does not coalesce). The sum groups by
+    * `(partition id, key)`, a clustering that exchange already
+    * satisfies, so the planner adds no second one. Then
+    * `sortWithinPartitions` on the key (UnsafeRow string order is
+    * Hadoop `Text` byte order) and `concat_ws` formatting. */
+  def hadoopLayoutLines(counts: DataFrame, nParts: Int): Dataset[String] = {
     import counts.sparkSession.implicits._
-    val Array(key, count) = counts.columns.map(col)
+    val Array(key, count) = counts.columns
+    val pid = HadoopTextHash.hadoopPartition(col(key), nParts)
     counts
-      .repartitionById(nParts, HadoopTextHash.hadoopPartition(key, nParts))
+      .repartitionById(nParts, pid)
+      .groupBy(pid, col(key)).agg(sum(count).as(count))
       .sortWithinPartitions(key)
-      .select(concat_ws("\t", key, count))
-      .as[String].rdd
-      .saveAsTextFile(outDir)
+      .select(concat_ws("\t", col(key), col(count)))
+      .as[String]
   }
+
+  /** MapReduce-identical sink: [[hadoopLayoutLines]] written with
+    * `saveAsTextFile` rather than the DataFrame text writer, because
+    * the latter skips empty partitions and MapReduce writes every part
+    * file, empty or not. */
+  def writeHadoopLayout(counts: DataFrame, outDir: String, nParts: Int): Unit =
+    hadoopLayoutLines(counts, nParts).rdd.saveAsTextFile(outDir)
 
   def main(args: Array[String]): Unit = parseArgs(args.toIndexedSeq) match {
     case Left(err) =>

@@ -26,8 +26,13 @@ import graft.functions.TextFunctions._
   *    bigram arrays and a bigram string is built once per distinct pair
   *    per task. The Generate runs interpreted; the partial aggregate
   *    above it is whole-stage codegen.
-  *  - The only shuffle is the groupBy's, after the partial aggregate —
-  *    strictly less shuffle I/O than the reference, which set no
+  *  - One shuffle per plan. [[counts]] shuffles on the groupBy's
+  *    exchange, after the partial aggregate. The `--hadoop-layout` sink
+  *    ([[graft.BigramJob.writeHadoopLayout]]) sends [[pairCounts]]
+  *    straight into its `Text.hashCode % N` exchange and sums after
+  *    it, so, as in a MapReduce job, the partitioner is the output
+  *    layout. Either way the shuffle carries one row per distinct pair
+  *    per task: strictly less than the reference, which set no
   *    combiner and shuffled every (bigram, 1) pair
   *    (`WordCountV2.java:44-57`).
   *  - Skew: bigram keys are Zipf-ish but the map side collapses the heavy
@@ -64,11 +69,16 @@ object Bigrams {
     }
   }
 
-  /** `records[textCol] → (bigram: string, count: long)`: the
-    * in-mapper partial counts of `bigram_counts`, summed per key. */
+  /** `records[textCol] → (bigram: string, count: long)`: the in-mapper
+    * partial counts of `bigram_counts`, one row per distinct pair per
+    * task (per flush), not yet summed across tasks. A sink that brings
+    * its own exchange sums them after it. */
+  def pairCounts(records: DataFrame, textCol: String = "value"): DataFrame =
+    records.select(bigramCounts(col(textCol)))
+
+  /** [[pairCounts]] summed per key: the final `(bigram, count)` totals. */
   def counts(records: DataFrame, textCol: String = "value"): DataFrame =
-    records
-      .select(bigramCounts(col(textCol)))
+    pairCounts(records, textCol)
       .groupBy("bigram")
       .agg(sum("count").as("count"))
 

@@ -196,6 +196,39 @@ object StreamingJobs {
     }
   }
 
+  /** md5 of the compiled classes of this package (`graft/streaming/`),
+    * read from wherever the classpath loaded them: a class directory or
+    * a jar. It stands in every drain signature for the code that
+    * committed the sink, so two builds whose drain code differs never
+    * re-serve each other's sinks from a shared scratch root, and no one
+    * has to remember to bump a version when a sink's contents change.
+    * An unrecognised class source digests this object's class alone. */
+  private[streaming] lazy val CodeDigest: String = {
+    import scala.jdk.CollectionConverters._
+    import scala.util.Using
+    val pkg = "graft/streaming/"
+    val url = getClass.getResource(s"/${pkg}StreamingJobs.class")
+    val classes: Seq[(String, Array[Byte])] = url.getProtocol match {
+      case "file" =>
+        val root = java.nio.file.Paths.get(url.toURI).getParent
+        Using.resource(java.nio.file.Files.walk(root)) { paths =>
+          paths.iterator.asScala.filter(_.toString.endsWith(".class"))
+            .map(p => root.relativize(p).toString -> p).toSeq
+        }.sortBy(_._1).map { case (n, p) => n -> java.nio.file.Files.readAllBytes(p) }
+      case "jar" =>
+        val jar = url.openConnection.asInstanceOf[java.net.JarURLConnection].getJarFile
+        jar.entries.asScala
+          .filter(e => e.getName.startsWith(pkg) && e.getName.endsWith(".class"))
+          .toSeq.sortBy(_.getName)
+          .map(e => e.getName.stripPrefix(pkg) -> Using.resource(jar.getInputStream(e))(_.readAllBytes()))
+      case _ =>
+        Seq("StreamingJobs.class" -> Using.resource(url.openStream())(_.readAllBytes()))
+    }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    classes.foreach { case (name, bytes) => md.update(name.getBytes("UTF-8")); md.update(bytes) }
+    md.digest().map("%02x".format(_)).mkString
+  }
+
   /** A drain starter: given (checkpointDir, outDir), start the
     * streaming query. The common case is [[parquetSink]]; p05 plugs
     * in its foreachBatch corpus publisher. */
@@ -207,12 +240,13 @@ object StreamingJobs {
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
 
   /** Shared drain harness with INCREMENTAL RE-DRAIN: each drain's work
-    * dir carries a signature — source-file identities (mtime:length),
-    * the job's parameters, and the drain partition count. When the
-    * signature matches, the committed sink already IS the answer for
-    * these inputs (the drains are deterministic replays by
-    * construction), so the harness re-serves it without starting a
-    * query; any source or parameter change re-drains from scratch.
+    * dir carries a signature — the drain code ([[CodeDigest]]),
+    * source-file identities (mtime:length), the job's parameters, and
+    * the drain partition count. When the signature matches, the
+    * committed sink already IS the answer for these inputs (the drains
+    * are deterministic replays by construction), so the harness
+    * re-serves it without starting a query; any code, source or
+    * parameter change re-drains from scratch.
     * This is the steady-state contract of a streaming pipeline — work
     * is proportional to NEW data, and a re-run over unchanged inputs
     * costs a signature check, not a replay. At 100 TB the same check
@@ -232,11 +266,7 @@ object StreamingJobs {
     val fs = work.getFileSystem(s.sparkContext.hadoopConfiguration)
     val outDir = new HPath(work, "out")
     val sigPath = new HPath(work, "drain-sig")
-    // the leading version is part of the signature: bump it whenever a
-    // drain's SINK contents change shape/semantics (v2: sentinel
-    // windows are filtered before the sink), so work dirs written by
-    // older code can never re-serve a stale layout
-    val sig = (s"v2|$job" +: srcTables.map(srcStat(s, dir, _)))
+    val sig = (s"code=$CodeDigest|$job" +: srcTables.map(srcStat(s, dir, _)))
       .mkString("|") + s"|$sigExtra|parts=$DrainPartitions"
     val hit = try {
       fs.exists(sigPath) && fs.exists(outDir) && {

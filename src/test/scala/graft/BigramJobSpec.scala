@@ -8,7 +8,15 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.functions.spark_partition_id
+
 import graft.BigramJob.Config
+import graft.BigramPropertiesSpec.capped
+import graft.operators.Bigrams
 import graft.operators.Bigrams.RecordMode
 
 object BigramJobSpec {
@@ -24,7 +32,7 @@ object BigramJobSpec {
     }.groupMapReduce(identity)(_ => 1L)(_ + _)
 }
 
-class BigramJobSpec extends SparkSpec {
+class BigramJobSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
   import BigramJobSpec.wordCountV2
 
@@ -81,6 +89,64 @@ class BigramJobSpec extends SparkSpec {
     val expected = wordCountV2(layoutDocs)
     assert(expected.size < 32)
     assertHadoopLayout(out, 32, expected)
+  }
+
+  /** Runs `f` with AQE's initial shuffle partition count pinned to `n`. */
+  private def withInitialPartitions[T](n: Int)(f: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try f finally spark.conf.set(key, prev)
+  }
+
+  test("hadoop-layout plan: one exchange, the pass-through, and exactly n parts for any initialPartitionNum") {
+    val dir = Files.createTempDirectory("graft-hl-plan")
+    val in = dir.resolve("corpus.txt")
+    Files.write(in, layoutDocs.mkString("\n").getBytes(UTF_8))
+    val expected = wordCountV2(layoutDocs.mkString("\n").split("\n").toSeq)
+    for (initial <- Seq(32, 8)) withInitialPartitions(initial) {
+      val lines = BigramJob.hadoopLayoutLines(
+        Bigrams.pairCounts(Bigrams.readText(spark, in.toString, RecordMode.Lines)), 32)
+      lines.collect()
+      val plan = lines.queryExecution.executedPlan
+      val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length == 1, plan.treeString)
+      assert(exchanges.head.outputPartitioning.isInstanceOf[ShufflePartitionIdPassThrough],
+        plan.treeString)
+      assert(exchanges.head.shuffleOrigin == REPARTITION_BY_NUM)
+      val out = dir.resolve(s"out$initial").toString
+      BigramJob.run(spark, Config(RecordMode.Lines, partitions = 32, hadoopLayout = true,
+        input = in.toString, output = out))
+      assertHadoopLayout(out, 32, expected)
+    }
+  }
+
+  // one bigram in every record, whose distinct pairs outnumber the cap
+  private val repeated = layoutDocs ++ Seq.fill(9)("the cat sat on the mat the cat")
+
+  test("hadoop-layout sums after its exchange: partial counts from 3 map partitions and across flushes") {
+    val pairs = repeated.toDF("value").repartition(3).select(capped($"value", 3))
+    val theCat = pairs.where($"bigram" === "the+cat")
+      .select(spark_partition_id()).as[Int].collect()
+    assert(theCat.distinct.length >= 3, "the+cat must come from 3 map partitions")
+    assert(theCat.length > theCat.distinct.length, "the cap never flushed the+cat")
+    val out = Files.createTempDirectory("graft-hl-partial").resolve("out").toString
+    BigramJob.writeHadoopLayout(pairs, out, 32)
+    assertHadoopLayout(out, 32, wordCountV2(repeated))
+  }
+
+  test("hadoop-layout sink writes the same bytes from final and from partial counts") {
+    val records = repeated.toDF("value").repartition(3)
+    val dir = Files.createTempDirectory("graft-hl-same")
+    def parts(name: String, counts: DataFrame): Map[String, Seq[Byte]] = {
+      val out = dir.resolve(name).toString
+      BigramJob.writeHadoopLayout(counts, out, 32)
+      new File(out).listFiles().filter(_.getName.startsWith("part-"))
+        .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    val fromFinal = parts("final", Bigrams.counts(records))
+    assert(fromFinal.size == 32)
+    assert(parts("partial", Bigrams.pairCounts(records)) == fromFinal)
   }
 
   test("arg parsing: reference contract plus flags, clean errors") {

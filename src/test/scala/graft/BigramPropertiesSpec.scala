@@ -12,12 +12,20 @@ import graft.operators.Bigrams
 import graft.functions.BigramCounts
 import graft.functions.TextFunctions._
 
+object BigramPropertiesSpec {
+
+  /** `bigram_counts` flushing its table every `maxPairs` distinct pairs. */
+  def capped(c: Column, maxPairs: Int): Column =
+    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c), maxPairs))
+}
+
 /** Property-based invariants from SURVEY.md §5.3 over arbitrary
   * corpora: conservation of counts, key alphabet, mode ordering.
   * (Raw ScalaCheck generators with fixed seeds — the scalatest bridge
   * artifact isn't available offline.) */
 class BigramPropertiesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+  import BigramPropertiesSpec.capped
 
   private val recordGen: Gen[String] = for {
     n <- Gen.choose(0, 12)
@@ -100,9 +108,6 @@ class BigramPropertiesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def summed(df: DataFrame): Map[String, Long] =
     df.groupBy("bigram").agg(sum("count")).as[(String, Long)].collect().toMap
-
-  private def capped(c: Column, maxPairs: Int): Column =
-    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c), maxPairs))
 
   test("counts equals explode(ngrams(tokenize)) → count, per key") {
     for (df <- corpusDfs) {

@@ -147,6 +147,41 @@ class StreamingJobsSpec extends SparkSpec {
     } finally spark.conf.unset(StreamingJobs.WorkDirKey)
   }
 
+  test("a sink committed by other drain code misses and re-drains") {
+    val Min = 60L * 1000000
+    val base = 1440 * Min
+    val corpus = Files.createTempDirectory("graft-code-corpus")
+    val tmpOut = Files.createTempDirectory("graft-code-write").resolve("ev")
+    Seq((1L, 1L, base * 1000, "click", 0.0))
+      .toDF("user_id", "event_id", "ts", "event_type", "value")
+      .coalesce(1).write.parquet(tmpOut.toString)
+    Files.move(Files.list(tmpOut).filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get(), corpus.resolve("events.parquet"))
+
+    val workOverride = Files.createTempDirectory("graft-code-work")
+    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    try {
+      def drain() = StreamingJobs.sessionizeAvailableNow(spark, corpus.toString)
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      val first = drain()
+      assert(first == Set((1L, 1L, base, base, 1L)))
+      val work = workOverride.resolve(s"graft_e05_${md5hex(corpus.toString)}")
+      val sig = work.resolve("drain-sig")
+      val digest = StreamingJobs.CodeDigest
+      assert(digest.matches("[0-9a-f]{32}"))
+      val ours = Files.readString(sig)
+      assert(ours.startsWith(s"code=$digest|"), ours)
+
+      // the same inputs, as another build would have signed them
+      Files.writeString(sig, ours.replace(digest, "0" * 32))
+      val marker = work.resolve("out").resolve("_other_build")
+      Files.createFile(marker)
+      assert(drain() == first)
+      assert(Files.readString(sig) == ours, "the re-drain must re-sign with this build's digest")
+      assert(!Files.exists(marker), "a sink signed by other code was re-served")
+    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+  }
+
   test("directory-layout corpus: drains stream part files, signature tracks the listing") {
     // A production corpus (and every ScaleGen dir) stores each table as
     // a DIRECTORY of part files, not the driver fixtures' single file.
