@@ -11,44 +11,52 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** `bigram_counts(text)`: an in-mapper combiner for the reference's
   * bigram count (`WordCountV2.java:44-57`, which emits one `(a+b, 1)`
-  * per occurrence and sets no combiner).
+  * per occurrence and sets no combiner), and the text family's one
+  * pair-counting kernel.
   *
   * `eval` scans each record's UTF-8 bytes once, with the token rule of
   * [[TextFunctions.tokenize]] ([[TextFunctions.tokenByte]]). It interns
-  * each token into a per-task token → int-id dictionary and adds 1 to an
+  * each token into a per-task token → int-id dictionary and, pairing it
+  * with each of the `window` tokens before it, adds 1 to an
   * open-addressing `long → long` table keyed by `(id₁ << 32) | id₂`,
   * emitting nothing. `terminate()` — Catalyst's end-of-partition hook,
   * which `GenerateExec` calls once per input partition on its
-  * interpreted path (this is a [[CodegenFallback]]) — emits one
-  * `(bigram, count)` row per distinct pair and resets the state. So a
-  * `a+b` string is built once per distinct pair per partition, not once
-  * per occurrence, and no record is inflated into token or bigram
-  * arrays.
+  * interpreted path (this is a [[CodegenFallback]]) — emits one row per
+  * distinct key and resets the state: `(bigram, count)` keyed `w1+w2`,
+  * or with `unigrams` `(w1, w2, count)` plus a `(w, NULL, count)` row
+  * per token, which each occurrence also counts. So a key's strings are
+  * built once per distinct key per partition, not once per occurrence,
+  * and no record is inflated into token or pair arrays.
   *
-  * State is bounded by constants: when the pair table holds `maxPairs`
-  * distinct pairs, or the interned token bytes reach [[MaxTokenBytes]],
-  * `eval` emits the partial counts and resets both tables before it
-  * scans on (mid-record if need be). Downstream, the groupBy's `sum`
-  * adds the partial counts, so the result equals counting every
-  * occurrence.
+  * State is bounded by constants: once another token could take the
+  * table past `maxPairs` keys, or the interned token bytes reach
+  * [[MaxTokenBytes]], `eval` emits the partial counts and resets both
+  * tables before it scans on (mid-record if need be, re-interning the
+  * previous tokens from their byte positions). Downstream, the
+  * groupBy's `sum` adds the partial counts, so the result equals
+  * counting every occurrence.
   *
   * The state lives in this expression instance, which each task
   * deserializes for itself. A consumer must drain a partition's rows,
   * as an aggregate does, before the same task starts the next one. */
-case class BigramCounts(child: Expression, maxPairs: Int = BigramCounts.MaxPairs)
+case class BigramCounts(child: Expression, maxPairs: Int = BigramCounts.MaxPairs,
+    window: Int = 1, unigrams: Boolean = false)
     extends UnaryExpression with Generator with CodegenFallback {
   require(maxPairs >= 1, s"maxPairs must be >= 1, got $maxPairs")
+  require(window >= 1, s"window must be >= 1, got $window")
 
-  override def elementSchema: StructType = BigramCounts.Schema
+  override def elementSchema: StructType =
+    if (unigrams) BigramCounts.WordsSchema else BigramCounts.Schema
   override def prettyName: String = "bigram_counts"
-  override protected def flatArguments: Iterator[Any] = Iterator(child)
+  override protected def flatArguments: Iterator[Any] =
+    if (window == 1 && !unigrams) Iterator(child) else Iterator(child, window, unigrams)
 
   @transient private var table: BigramCounts.Table = _
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val s = child.eval(input).asInstanceOf[UTF8String]
     if (s == null) return Iterator.empty
-    if (table == null) table = new BigramCounts.Table(maxPairs)
+    if (table == null) table = new BigramCounts.Table(maxPairs, window, unigrams)
     table.add(s)
   }
 
@@ -59,8 +67,9 @@ case class BigramCounts(child: Expression, maxPairs: Int = BigramCounts.MaxPairs
 }
 
 object BigramCounts {
-  /** Distinct pairs held before a flush: at most 32 MB of pair table
-    * (2^21 slots of key and count) plus the tokens' dictionary. */
+  /** Distinct keys (pairs, and unigrams when asked) held before a
+    * flush: at most 32 MB of pair table (2^21 slots of key and count)
+    * plus the tokens' dictionary. */
   val MaxPairs: Int = 1 << 20
 
   /** Interned token bytes held before a flush, so that long distinct
@@ -71,8 +80,15 @@ object BigramCounts {
     StructField("bigram", StringType, nullable = false),
     StructField("count", LongType, nullable = false)))
 
+  private val WordsSchema: StructType = StructType(Seq(
+    StructField("w1", StringType, nullable = false),
+    StructField("w2", StringType, nullable = true),
+    StructField("count", LongType, nullable = false)))
+
   private val Plus: Byte = '+'.toByte
   private val Empty = -1L
+  /** The low half of a unigram's key: no second token. */
+  private val NoToken = 0xFFFFFFFFL
 
   private def mix(h: Long): Int = {
     val x = h * 0x9E3779B97F4A7C15L
@@ -81,7 +97,7 @@ object BigramCounts {
 
   /** One task's pair counts and token dictionary, plus the scan position
     * in the current record so that a flush can resume mid-record. */
-  private[functions] final class Table(maxPairs: Int) {
+  private[functions] final class Table(maxPairs: Int, window: Int, unigrams: Boolean) {
     // Token dictionary: lowercased bytes in `arena`, per-id start, length
     // and hash; `tokSlots` holds id + 1, 0 when empty.
     private var arena = new Array[Byte](1 << 12)
@@ -97,15 +113,21 @@ object BigramCounts {
     private var vals = new Array[Long](1 << 10)
     private var nPairs = 0
 
-    // The record being scanned: byte position, and the previous token as
-    // [start, end) with its hash and its id (-1 until interned, and
-    // again after a flush).
+    // The record being scanned: byte position, and a ring of its last
+    // `window` tokens, each as [start, end) with its hash and its id (-1
+    // until interned, and again after a flush). `nPrev` of the slots hold
+    // this record's tokens; the newest sits just before `head`.
     private var rec: UTF8String = _
     private var pos = 0
-    private var prevStart = -1
-    private var prevEnd = 0
-    private var prevHash = 0
-    private var prevId = -1
+    private val prevStart = new Array[Int](window)
+    private val prevEnd = new Array[Int](window)
+    private val prevHash = new Array[Int](window)
+    private val prevId = new Array[Int](window)
+    private var head = 0
+    private var nPrev = 0
+
+    /** Keys one token can add: one per previous token, and its unigram. */
+    private val perToken = window + (if (unigrams) 1 else 0)
 
     private def emptyKeys(n: Int): Array[Long] = {
       val a = new Array[Long](n)
@@ -113,7 +135,7 @@ object BigramCounts {
       a
     }
 
-    private def full: Boolean = nPairs >= maxPairs || arenaLen >= MaxTokenBytes
+    private def full: Boolean = nPairs + perToken > maxPairs || arenaLen >= MaxTokenBytes
 
     /** Counts `s`'s pairs. Empty unless a flush fell inside the record:
       * then the partial counts, with the rest of the record scanned as
@@ -121,8 +143,8 @@ object BigramCounts {
     def add(s: UTF8String): Iterator[InternalRow] = {
       rec = s
       pos = 0
-      prevStart = -1
-      prevId = -1
+      head = 0
+      nPrev = 0
       if (scan()) new Rows(resume = true) else { rec = null; Iterator.empty }
     }
 
@@ -147,15 +169,22 @@ object BigramCounts {
             i += 1
             t = if (i < n) TextFunctions.tokenByte(Platform.getByte(base, off + i)) else 0
           }
-          if (prevStart >= 0) {
-            if (prevId < 0) prevId = intern(base, off, prevStart, prevEnd, prevHash)
-            val id = intern(base, off, start, i, h)
-            count((prevId.toLong << 32) | id)
-            prevId = id
+          val id = if (unigrams || nPrev > 0) intern(base, off, start, i, h) else -1
+          var r = head
+          var k = 0
+          while (k < nPrev) {
+            r = (if (r == 0) window else r) - 1
+            if (prevId(r) < 0) prevId(r) = intern(base, off, prevStart(r), prevEnd(r), prevHash(r))
+            count((prevId(r).toLong << 32) | id)
+            k += 1
           }
-          prevStart = start
-          prevEnd = i
-          prevHash = h
+          if (unigrams) count((id.toLong << 32) | NoToken)
+          prevStart(head) = start
+          prevEnd(head) = i
+          prevHash(head) = h
+          prevId(head) = id
+          head = if (head + 1 == window) 0 else head + 1
+          if (nPrev < window) nPrev += 1
           if (full) { pos = i; return true }
         }
       }
@@ -250,8 +279,11 @@ object BigramCounts {
       java.util.Arrays.fill(tokSlots, 0)
       nTok = 0
       arenaLen = 0
-      prevId = -1
+      java.util.Arrays.fill(prevId, -1)
     }
+
+    private def word(id: Int): UTF8String =
+      UTF8String.fromBytes(java.util.Arrays.copyOfRange(arena, tokStart(id), tokStart(id) + tokLen(id)))
 
     private def bigram(key: Long): UTF8String = {
       val a = (key >>> 32).toInt
@@ -283,7 +315,11 @@ object BigramCounts {
 
       override def next(): InternalRow = {
         if (!hasNext) throw new NoSuchElementException("bigram_counts: no more rows")
-        val row = new GenericInternalRow(Array[Any](bigram(keys(slot)), vals(slot)))
+        val key = keys(slot)
+        val row = new GenericInternalRow(
+          if (!unigrams) Array[Any](bigram(key), vals(slot))
+          else Array[Any](word((key >>> 32).toInt),
+            if ((key & NoToken) == NoToken) null else word(key.toInt), vals(slot)))
         slot += 1
         row
       }

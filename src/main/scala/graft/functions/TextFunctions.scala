@@ -112,9 +112,12 @@ object TextFunctions {
 
   /** `(bigram, count)` rows per distinct bigram of [[tokenize]]'s tokens,
     * combined in-mapper; see [[BigramCounts]]. Select it alone and sum
-    * `count` per `bigram`: a key can appear in several rows. */
-  def bigramCounts(c: Column): Column =
-    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c)))
+    * `count` per `bigram`: a key can appear in several rows. With a
+    * `window`, each token pairs with each of the `window` tokens before
+    * it; with `unigrams`, rows are `(w1, w2, count)`, `w2` NULL on a
+    * token's own count. */
+  def bigramCounts(c: Column, window: Int = 1, unigrams: Boolean = false): Column =
+    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c), window = window, unigrams = unigrams))
 
   /** Whitespace tokens of an already-clean string, empties removed. */
   def tokenizeRaw(c: Column): Column =
@@ -193,10 +196,4 @@ object TextFunctions {
     }
     new GenericArrayData(out)
   }
-
-  /** Character shingles (sliding substrings of length k) of a string. */
-  def charShingles(c: Column, k: Int): Column =
-    when(length(c) >= k,
-      transform(sequence(lit(1), length(c) - (k - 1)), i => c.substr(i, lit(k))))
-      .otherwise(array().cast("array<string>"))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.{Bigrams, TextAnalysis}
+import graft.operators.{Bigrams, Checkpoints, TextAnalysis}
 
 /** Text-analysis queries over the `documents` table, each with a
   * DuckDB oracle that mirrors the exact same sanitize/tokenize
@@ -17,6 +17,26 @@ object TextQueries {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
+
+  /** The counts behind t19's and t23's lift, `(w1, w2, c12, cw1, cw2,
+    * ntok)`, per token pair with `w2` at most `window` tokens after `w1`
+    * in a document and `c12 >= minPairs`. One corpus scan: the in-mapper
+    * pairs and unigrams sum in one `(w1, w2)` aggregate, whose NULL-`w2`
+    * group is the unigram histogram. The filtered table is materialized
+    * once (the d11 fan-out idiom): the pairs, the unigrams twice as a
+    * join side and the total all read it. */
+  private def liftCounts(s: SparkSession, dir: String, window: Int, minPairs: Long): DataFrame = {
+    import s.implicits._
+    val counts = Checkpoints.materialize(docs(s, dir)
+      .select(bigramCounts($"text", window, unigrams = true))
+      .groupBy($"w1", $"w2").agg(sum($"count").as("c"))
+      .filter($"w2".isNull || $"c" >= minPairs))
+    val uni = counts.filter($"w2".isNull).select($"w1".as("w"), $"c".as("cw"))
+    counts.filter($"w2".isNotNull).select($"w1", $"w2", $"c".as("c12"))
+      .join(uni.select($"w".as("w1"), $"cw".as("cw1")), Seq("w1"))
+      .join(uni.select($"w".as("w2"), $"cw".as("cw2")), Seq("w2"))
+      .crossJoin(broadcast(uni.agg(sum($"cw").as("ntok"))))
+  }
 
   /** DuckDB expression for the sanitized, empty-filtered token list. */
   private val SqlToks =
@@ -214,24 +234,6 @@ object TextQueries {
       TextAnalysis.bm25TopK(docs(s, dir), "doc_id", "text",
         Seq("dup", "join", "key", "vector"), k = 20)),
 
-    // Blocked fuzzy matching: near-identical part names via edit
-    // distance ≤ 2, candidates generated by a BLOCKING key (the noun —
-    // last token) so the join is an equi-join on the block, never an
-    // all-pairs cartesian. The 100 TB shape: names are deduped FIRST
-    // (the distinct-name set is tiny relative to the row count — the
-    // classic entity-resolution reduction), per-name row counts ride
-    // along from the same aggregate, and levenshtein runs only inside
-    // blocks. Edit distance is exact integer DP — identical in any
-    // engine.
-    // Collocation mining: bigram lift = P(w1w2)-vs-independence ratio
-    // c12·N / (c1·c2) over the corpus — the phrase-detection pass
-    // (word2vec-style phrase merging, stopword-phrase filtering) runs
-    // before tokenizer training. Exact rational arithmetic in doubles:
-    // every product stays < 2^53 (counts are bounded by corpus token
-    // count), so one exact multiply + one correctly-rounded divide is
-    // bit-identical in any engine. Shape: two token-keyed aggregates
-    // + two vocab-keyed joins + a broadcast 1-row total — no
-    // all-pairs, vocabulary-sized state only.
     // Heaps'-law vocabulary-growth curve: cumulative distinct types
     // and total tokens at every 50-doc checkpoint. "Distinct over
     // every prefix" needs no per-checkpoint pass — each type is new
@@ -297,50 +299,8 @@ object TextQueries {
     // much more often w2 follows w1 within 3 tokens than unigram
     // rates predict. Distinct from t19's ADJACENT-pair collocations —
     // the window catches "new ... york" style skip associations.
-    // Window pairs are DOC-LOCAL, so they are generated map-side from
-    // the token array (nested transform over positions — linear, ≤3
-    // partners per position) and exploded straight into the pair
-    // aggregation: the only shuffles in the plan are aggregation
-    // exchanges. The retired shape self-joined a position table on
-    // (doc, offset): at sf1 AQE hid the cost by broadcasting the
-    // position side, and at sf10 the broadcast flipped to a shuffle
-    // join — the r9 audit measured 106× sf1's shuffle for 10× data,
-    // all of it join exchange that this shape simply does not have.
     "t23_window_pmi" -> ((s, dir) => {
       import s.implicits._
-      // tokens materialize BEFORE the lambdas (TextFunctions PERF
-      // note: computed expressions inside HOF lambdas re-evaluate per
-      // element)
-      // ONE corpus scan (r15): the unigram counts and the window-pair
-      // counts are emitted from the SAME Generate — each token as a
-      // (w, NULL) row next to the (w1, w2) window rows — and collapse
-      // in one (w1, w2) aggregate, where the NULL-w2 group IS the
-      // unigram histogram. The r14 shape ran the tokenize+explode scan
-      // twice (two branches, no shared exchange — map-side work has
-      // nothing for ReuseExchange to match). The combined counts are
-      // materialized once (the d11 fan-out idiom) because four
-      // consumers read them: uni twice as a join side, ntok, pairs.
-      // Pairs below the support threshold are dropped BEFORE the
-      // materialization, as no consumer reads them.
-      val toks = docs(s, dir).select(tokenize($"text").as("t"))
-      val counts = graft.operators.Checkpoints.materialize(
-        toks.select(explode(expr(
-          """concat(
-            |  transform(t, w -> struct(w AS w1, CAST(NULL AS STRING) AS w2)),
-            |  CASE WHEN size(t) < 2
-            |  THEN CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
-            |  ELSE flatten(transform(sequence(1, size(t) - 1),
-            |    i -> transform(sequence(i + 1, least(i + 3, size(t))),
-            |      j -> struct(element_at(t, i) AS w1, element_at(t, j) AS w2))))
-            |  END)""".stripMargin)).as("p"))
-        .select($"p.w1", $"p.w2")
-        .groupBy($"w1", $"w2").agg(count(lit(1)).as("c"))
-        .filter($"w2".isNull || $"c" >= 30))
-      val uni = counts.filter($"w2".isNull)
-        .select($"w1".as("w"), $"c".as("cw"))
-      val ntok = uni.agg(sum($"cw").as("ntok"))
-      val pairs = counts.filter($"w2".isNotNull && $"c" >= 30)
-        .select($"w1", $"w2", $"c".as("c12"))
       // lift in exact integer parts-per-million: window-pair ratios
       // are rationals that DO land on .5 rounding boundaries, where
       // engines' double round() implementations can disagree — floor
@@ -350,29 +310,23 @@ object TextQueries {
       // ANSI ARITHMETIC_OVERFLOW kill, exactly the defect class the
       // rung exists for). Decimal128 gives headroom past 1e30 while
       // keeping the division exact; the result is the same BIGINT.
-      pairs.join(uni.select($"w".as("w1"), $"cw".as("cw1")), Seq("w1"))
-        .join(uni.select($"w".as("w2"), $"cw".as("cw2")), Seq("w2"))
-        .crossJoin(broadcast(ntok))
+      liftCounts(s, dir, window = 3, minPairs = 30)
         .select($"w1", $"w2", $"c12",
           expr("CAST((CAST(c12 AS DECIMAL(38,0)) * 1000000 * ntok) div " +
             "(CAST(cw1 AS DECIMAL(38,0)) * cw2) AS BIGINT)").as("lift_ppm"))
         .orderBy($"lift_ppm".desc, $"w1", $"w2")
     }),
 
+    // Collocation mining: bigram lift = P(w1w2)-vs-independence ratio
+    // c12·N / (c1·c2) over the corpus — the phrase-detection pass
+    // (word2vec-style phrase merging, stopword-phrase filtering) runs
+    // before tokenizer training. Exact rational arithmetic in doubles:
+    // every product stays < 2^53 (counts are bounded by corpus token
+    // count), so one exact multiply + one correctly-rounded divide is
+    // bit-identical in any engine. Shape: t23's at window 1.
     "t19_collocations" -> ((s, dir) => {
       import s.implicits._
-      val d = docs(s, dir)
-      val uni = d.select(explode(tokenize($"text")).as("w"))
-        .groupBy($"w").agg(count(lit(1)).as("cw"))
-      val ntok = uni.agg(sum($"cw").as("ntok"))
-      val bi = d.select(explode(ngrams(tokenize($"text"), 2)).as("bg"))
-        .groupBy($"bg").agg(count(lit(1)).as("c12"))
-        .filter($"c12" >= 20)
-        .select(substring_index($"bg", " ", 1).as("w1"),
-          substring_index($"bg", " ", -1).as("w2"), $"c12")
-      bi.join(uni.select($"w".as("w1"), $"cw".as("cw1")), Seq("w1"))
-        .join(uni.select($"w".as("w2"), $"cw".as("cw2")), Seq("w2"))
-        .crossJoin(broadcast(ntok))
+      liftCounts(s, dir, window = 1, minPairs = 20)
         .select($"w1", $"w2", $"c12",
           // cw1·cw2 multiplies in DOUBLES (same on the oracle side):
           // the long product overflows once ntok² passes 2⁶³ — the
@@ -383,6 +337,15 @@ object TextQueries {
         .orderBy($"lift".desc, $"w1", $"w2")
     }),
 
+    // Blocked fuzzy matching: near-identical part names via edit
+    // distance ≤ 2, candidates generated by a BLOCKING key (the noun —
+    // last token) so the join is an equi-join on the block, never an
+    // all-pairs cartesian. The 100 TB shape: names are deduped FIRST
+    // (the distinct-name set is tiny relative to the row count — the
+    // classic entity-resolution reduction), per-name row counts ride
+    // along from the same aggregate, and levenshtein runs only inside
+    // blocks. Edit distance is exact integer DP — identical in any
+    // engine.
     "t18_fuzzy_match" -> ((s, dir) => {
       import s.implicits._
       val names = Tables.load(s, dir, "part")

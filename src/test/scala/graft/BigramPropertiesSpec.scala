@@ -17,6 +17,11 @@ object BigramPropertiesSpec {
   /** `bigram_counts` flushing its table every `maxPairs` distinct pairs. */
   def capped(c: Column, maxPairs: Int): Column =
     ColumnBridge.column(BigramCounts(ColumnBridge.expression(c), maxPairs))
+
+  /** t23's kernel: each token with its next 3 and on its own, as
+    * `(w1, w2, count)`, flushing once another token could pass `maxPairs`. */
+  def window3(c: Column, maxPairs: Int = BigramCounts.MaxPairs): Column =
+    ColumnBridge.column(BigramCounts(ColumnBridge.expression(c), maxPairs, window = 3, unigrams = true))
 }
 
 /** Property-based invariants from SURVEY.md §5.3 over arbitrary
@@ -25,7 +30,7 @@ object BigramPropertiesSpec {
   * artifact isn't available offline.) */
 class BigramPropertiesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
-  import BigramPropertiesSpec.capped
+  import BigramPropertiesSpec.{capped, window3}
 
   private val recordGen: Gen[String] = for {
     n <- Gen.choose(0, 12)
@@ -135,6 +140,57 @@ class BigramPropertiesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val got = agg.as[(String, Long)].collect().toMap
     assert(got == explodeCounts(df))
     assert(got("the+cat") == 18L)
+    val coalesced = collect(agg.queryExecution.executedPlan) { case c: CoalesceExec => c }
+    assert(coalesced.map(_.numPartitions) == Seq(1))
+    assert(coalesced.head.child.isInstanceOf[GenerateExec], coalesced.head.treeString)
+    assert(df.rdd.getNumPartitions == 3)
+  }
+
+  /** The per-occurrence SQL t23 counted with before the kernel: each
+    * token as `(w, NULL)`, then each token with each of its next 3, from
+    * a nested `transform` over the token array, exploded and counted. */
+  private def transformCounts(df: DataFrame): Map[(String, String), Long] =
+    df.select(tokenize($"value").as("t"))
+      .select(explode(expr(
+        """concat(
+          |  transform(t, w -> struct(w AS w1, CAST(NULL AS STRING) AS w2)),
+          |  CASE WHEN size(t) < 2
+          |  THEN CAST(array() AS ARRAY<STRUCT<w1: STRING, w2: STRING>>)
+          |  ELSE flatten(transform(sequence(1, size(t) - 1),
+          |    i -> transform(sequence(i + 1, least(i + 3, size(t))),
+          |      j -> struct(element_at(t, i) AS w1, element_at(t, j) AS w2))))
+          |  END)""".stripMargin)).as("p"))
+      .groupBy($"p.w1", $"p.w2").count()
+      .as[(String, String, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
+
+  private def windowSummed(df: DataFrame): Map[(String, String), Long] =
+    df.groupBy("w1", "w2").agg(sum("count"))
+      .as[(String, String, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
+
+  test("window 3 with unigrams equals the nested-transform SQL, per (w1, w2)") {
+    assert(stressors.exists(r => r != null && r.length > 600 * 1024))
+    assert(stressors.count(r => r != null && r.split("[^A-Za-z0-9]+").count(_.nonEmpty) == 1) >= 2)
+    for (df <- corpusDfs) assert(windowSummed(df.select(window3($"value"))) == transformCounts(df))
+  }
+
+  test("window 3 flushing every 3 keys re-interns the ring and gives the same counts") {
+    for (df <- corpusDfs) {
+      val flushed = df.select(window3($"value", maxPairs = 3))
+      val (rows, sums) = (flushed.count(), windowSummed(flushed))
+      assert(sums == transformCounts(df))
+      assert(rows > sums.size, "the cap never flushed")
+    }
+  }
+
+  test("window 3 resets per partition: Generate below coalesce(1) over 3 partitions") {
+    val records = stressors.filter(_ != null).take(12) ++
+      Seq.fill(9)("the cat sat on the mat the cat")
+    val df = records.toDF("value").repartition(3)
+    val agg = df.select(window3($"value")).coalesce(1)
+      .groupBy("w1", "w2").agg(sum("count"))
+    val got = agg.as[(String, String, Long)].collect().map { case (a, b, c) => (a, b) -> c }.toMap
+    assert(got == transformCounts(df))
+    assert(got(("the", "cat")) == 27L && got(("the", null)) == 27L)
     val coalesced = collect(agg.queryExecution.executedPlan) { case c: CoalesceExec => c }
     assert(coalesced.map(_.numPartitions) == Seq(1))
     assert(coalesced.head.child.isInstanceOf[GenerateExec], coalesced.head.treeString)

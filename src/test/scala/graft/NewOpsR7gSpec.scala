@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Graphs
 
 /** Round-7 additions part g: streaming exact distinct-per-window
-  * (e18), windowed co-occurrence lift (t23), and a randomized
-  * property test for k-core peeling. */
+  * (e18), the d11 threshold curve, and randomized property tests for
+  * k-core peeling and partition modularity. */
 class NewOpsR7gSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,44 +42,6 @@ class NewOpsR7gSpec extends SparkSpec {
       .agg(countDistinct($"user_id").as("n"))
       .orderBy($"w").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == batch.toSeq)
-  }
-
-  test("t23 matches a sequential window-pair reference at sf0.001") {
-    // the one materialized counts table must hold the unigram rows and
-    // only the pairs its consumers read (c >= 30), not the whole pair table
-    var checkpointed = Seq.empty[(Long, Long, Long)]
-    graft.operators.Checkpoints.faultHook.set { df =>
-      checkpointed :+= ((df.filter($"w2".isNull).count(),
-        df.filter($"w2".isNotNull && $"c" >= 30).count(),
-        df.filter($"w2".isNotNull && $"c" < 30).count()))
-    }
-    val got = try SparkEntry.queries("t23_window_pmi")(spark, sfDir).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        ((r.getLong(2), r.getLong(3)))).toMap
-    finally graft.operators.Checkpoints.faultHook.set((_: org.apache.spark.sql.DataFrame) => ())
-    assert(checkpointed.size == 1, s"t23 materialized ${checkpointed.size} frames")
-    val (uniRows, keptPairs, thinPairs) = checkpointed.head
-    assert(uniRows > 0 && keptPairs == got.size.toLong)
-    assert(thinPairs == 0, s"checkpoint holds $thinPairs pairs below the c >= 30 threshold")
-    val pos = Tables.load(spark, sfDir, "documents")
-      .select($"doc_id", posexplode(graft.functions.TextFunctions.tokenize($"text"))
-        .as(Seq("i", "w")))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    val byDoc = pos.groupBy(_._1)
-    val pairCounts = scala.collection.mutable.Map.empty[(String, String), Long]
-    byDoc.values.foreach { rows =>
-      val arr = rows.sortBy(_._2).map(_._3)
-      for (i <- arr.indices; j <- (i + 1) to math.min(i + 3, arr.length - 1))
-        pairCounts((arr(i), arr(j))) =
-          pairCounts.getOrElse((arr(i), arr(j)), 0L) + 1L
-    }
-    val uni = pos.groupBy(_._3).map { case (w, o) => w -> o.size.toLong }
-    val ntok = pos.length.toLong
-    val ref = pairCounts.filter(_._2 >= 30).map { case ((w1, w2), c12) =>
-      (w1, w2) -> ((c12, c12 * 1000000L * ntok / (uni(w1) * uni(w2))))
-    }.toMap
-    assert(got.keySet == ref.keySet)
-    ref.foreach { case (k, v) => assert(got(k) == v, s"pair $k") }
   }
 
   test("partitionModularity matches a sequential reference on random graphs") {

@@ -76,11 +76,4 @@ class TextFunctionsSpec extends SparkSpec {
       assert(native == builtin, s"n=$n toks=$ts")
     }
   }
-
-  test("charShingles") {
-    val sh = Seq("abcd").toDF("v").select(charShingles($"v", 3)).as[Seq[String]].head()
-    assert(sh == Seq("abc", "bcd"))
-    val short = Seq("ab").toDF("v").select(charShingles($"v", 3)).as[Seq[String]].head()
-    assert(short == Seq.empty)
-  }
 }
