@@ -14,10 +14,10 @@ import org.apache.spark.sql.SparkSession
   * driver (or a later stage) reads them back. Driver-local tmp only
   * satisfies that in local mode, where both are one machine — on a
   * real cluster it silently yields partial reads. Hence the
-  * precedence: explicit conf, then the streaming-scoped legacy key,
-  * then the session's streaming checkpoint location (already required
-  * to be shared storage), then — in local mode ONLY — tmpdir. Off
-  * local mode with nothing configured, refuse loudly.
+  * precedence: explicit conf, then the session's streaming checkpoint
+  * location (already required to be shared storage), then — in local
+  * mode ONLY — tmpdir. Off local mode with nothing configured, refuse
+  * loudly.
   */
 object WorkDirs {
 
@@ -26,14 +26,9 @@ object WorkDirs {
     * Hadoop-resolvable URI (`hdfs://…`, `s3a://…`, `file:/…`). */
   val WorkDirKey = "spark.graft.workDir"
 
-  /** Streaming-scoped key, kept for compatibility — [[WorkDirKey]]
-    * wins when both are set. */
-  val StreamingWorkDirKey = "spark.graft.streaming.workDir"
-
   /** The scratch root under the documented precedence. */
   def root(s: SparkSession): String =
     s.conf.getOption(WorkDirKey)
-      .orElse(s.conf.getOption(StreamingWorkDirKey))
       .orElse(s.conf.getOption("spark.sql.streaming.checkpointLocation"))
       .getOrElse {
         require(s.sparkContext.isLocal,

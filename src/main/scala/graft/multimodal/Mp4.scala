@@ -15,8 +15,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * `hdlr`, `stbl/stsz|stts`). This is exactly the metadata layer a
   * demuxer library (e.g. jcodec's MP4 demuxer) provides; only the
   * CODED SAMPLES inside `mdat` (H.264/AAC bitstreams) genuinely need
-  * an external decoder, and for those [[Multimodal.FakeCodec]] remains
-  * the honest stand-in.
+  * an external decoder, and no query decodes them.
   *
   * The walker is corpus-hardened: every size is bounds-checked, v0/v1
   * full-box layouts both parse, unknown boxes are skipped by their
@@ -24,11 +23,6 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * container is data, not a task death.
   */
 object Mp4 {
-
-  /** One track's metadata; `handler` is the `hdlr` 4cc ("vide",
-    * "soun", …), dims come from `tkhd` (0 for non-visual tracks),
-    * `nSamples` from `stsz` (falling back to the `stts` sum). */
-  final case class Track(handler: String, width: Int, height: Int, nSamples: Long)
 
   /** Whole-file metadata: `ftyp` major brand, movie duration from
     * `mvhd`, and the FIRST video track's dimensions + sample (frame)

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions._
   * kernel (m04). [[AudioCodec]] is REAL too (`javax.sound.sampled`):
   * PCM WAV encode/decode with exact sample round trips (m05).
   * [[VideoCodec]] handles REAL MJPEG elementary streams (marker-scan
-  * frame recovery + per-frame JPEG header decode — m02). Every driver
-  * query therefore moves genuine bytes; [[FakeCodec]] remains only as
-  * the contract test double for compressed containers outside the JDK
-  * (MP4/H.264, Opus, …) — swapping such a codec in changes only the
-  * codec object, not the plumbing.
+  * frame recovery + per-frame JPEG header decode — m02). [[GifCodec]]
+  * and [[Mp4]] cover animated GIF and the MP4 container structure.
+  * Every m-family query therefore moves genuine bytes. Compressed
+  * payloads the JDK cannot decode (H.264, Opus, …) would need a codec
+  * object of their own; the batched plumbing stays the same.
   *
   * Scale posture: decode runs in `mapPartitions` over batches, so at
   * 100 TB each task amortizes codec init across its batch (the Scala
@@ -39,85 +39,11 @@ object Multimodal {
   // object before any nested one is touched.
   javax.imageio.ImageIO.setUseCache(false)
 
-  val Magic: Int = 0x47524654 // "GRFT"
-
-  sealed abstract class Kind(val code: Byte)
-  object Kind {
-    case object Image extends Kind(0)
-    case object Audio extends Kind(1)
-    case object Video extends Kind(2)
-    def of(code: Byte): Kind = code match {
-      case 0 => Image
-      case 1 => Audio
-      case _ => Video
-    }
-  }
-
-  case class MediaMeta(kind: String, width: Int, height: Int, nFrames: Int,
-                       payloadBytes: Long)
-
-  /** The stub codec: header = magic(4) kind(1) width(4) height(4) frames(4). */
-  object FakeCodec {
-    val HeaderLen: Int = 17
-
-    def encode(kind: Kind, width: Int, height: Int, nFrames: Int,
-               payload: Array[Byte]): Array[Byte] = {
-      val buf = ByteBuffer.allocate(HeaderLen + payload.length).order(ByteOrder.BIG_ENDIAN)
-      buf.putInt(Magic).put(kind.code).putInt(width).putInt(height).putInt(nFrames)
-      buf.put(payload)
-      buf.array()
-    }
-
-    def decodeMeta(bytes: Array[Byte]): Option[MediaMeta] = {
-      if (bytes == null || bytes.length < HeaderLen) return None
-      val buf = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
-      if (buf.getInt() != Magic) return None
-      val kind = Kind.of(buf.get())
-      Some(MediaMeta(kind.getClass.getSimpleName.stripSuffix("$").toLowerCase,
-        buf.getInt(), buf.getInt(), buf.getInt(), bytes.length.toLong - HeaderLen))
-    }
-
-    /** Pixel decode STUB — a real build would inflate the payload here. */
-    def decodePixels(bytes: Array[Byte]): Option[Array[Byte]] =
-      decodeMeta(bytes).map(_ => bytes.drop(HeaderLen))
-  }
-
-  /** Deterministic synthetic media for tests/fixtures: dimensions and
-    * payload derive from the seed alone. */
-  def synthesize(seed: Long, kind: Kind = Kind.Image): Array[Byte] = {
-    val width = (64 + math.floorMod(seed * 7919L, 1216L)).toInt
-    val height = (64 + math.floorMod(seed * 104729L, 656L)).toInt
-    val nFrames = if (kind == Kind.Video) (1 + math.floorMod(seed, 120L)).toInt else 1
-    val payload = new Array[Byte](16)
-    var x = seed
-    for (i <- payload.indices) { x = x * 6364136223846793005L + 1442695040888963407L; payload(i) = (x >>> 56).toByte }
-    FakeCodec.encode(kind, width, height, nFrames, payload)
-  }
-
-  /** Batched metadata extraction: `(id, media)` → `(id, kind, width,
-    * height, n_frames, payload_bytes)`. Batch-shaped decode inside
-    * mapPartitions — codec state initializes once per batch. */
-  def extractMeta(ds: Dataset[(Long, Array[Byte])], batchSize: Int = 256): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // per-batch codec init would go here (real codecs are stateful)
-        batch.iterator.map { case (id, bytes) =>
-          val m = FakeCodec.decodeMeta(bytes)
-          (id, m.map(_.kind).orNull, m.map(_.width).getOrElse(-1),
-            m.map(_.height).getOrElse(-1), m.map(_.nFrames).getOrElse(-1),
-            m.map(_.payloadBytes).getOrElse(-1L))
-        }
-      }
-    }.toDF("id", "kind", "width", "height", "n_frames", "payload_bytes")
-  }
-
   /** REAL image codec: PNG/BMP via `javax.imageio` (JDK-built-in, zero
     * new dependencies). PNG is lossless, so an encode→decode round trip
     * reproduces pixels exactly — which makes decoded-pixel aggregates
     * oracle-checkable when the source pixels are deterministic
-    * arithmetic. [[FakeCodec]] remains the stand-in for codecs this
-    * container genuinely lacks (JPEG quality loss, audio, video). */
+    * arithmetic. */
   object ImageCodec {
     import java.awt.image.BufferedImage
     import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -228,9 +154,8 @@ object Multimodal {
     * (JDK-built-in, zero new dependencies). PCM is lossless, so an
     * encode→decode round trip reproduces samples exactly — decoded
     * aggregates are oracle-checkable when the samples are
-    * deterministic arithmetic. [[FakeCodec]] keeps standing in for
-    * COMPRESSED formats the JDK genuinely lacks (Opus/MP3 audio,
-    * MP4/H.264 video). */
+    * deterministic arithmetic. Compressed audio (Opus, MP3) is
+    * outside the JDK and not decoded. */
   object AudioCodec {
     import java.io.{BufferedInputStream, ByteArrayInputStream}
     import javax.sound.sampled.AudioSystem
@@ -394,8 +319,8 @@ object Multimodal {
     * embedded EOI inside an APP1 payload cannot split a frame early —
     * and entropy-coded data after SOS is scanned with the FF-escape
     * rule (FF00 = literal, FFD0–D7 = restart, anything else = marker).
-    * Compressed MP4/H.264 containers remain outside the JDK —
-    * [[FakeCodec]] still stands in for those. */
+    * H.264 samples inside MP4 are outside the JDK; [[Mp4]] reads
+    * only the container structure. */
   object VideoCodec {
 
     /** Concatenate JPEG frames into an MJPEG elementary stream. */
@@ -594,8 +519,8 @@ object Multimodal {
   }
 
   /** Batched header-only metadata over REAL image bytes: `(id, bytes)`
-    * → `(id, format, width, height, n_bytes)`. Same mapPartitions
-    * batch shape as [[extractMeta]]; no pixel decode happens. */
+    * → `(id, format, width, height, n_bytes)`, decoded in batches
+    * inside mapPartitions; no pixel decode happens. */
   def extractImageMeta(ds: Dataset[(Long, Array[Byte])], batchSize: Int = 256): DataFrame = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
@@ -658,7 +583,7 @@ object Multimodal {
 
   /** Distributed real-codec decode: `(id, image_bytes)` → dimensions +
     * per-channel pixel sums. Same batched mapPartitions shape as
-    * [[extractMeta]]; ImageIO reader instances stay task-local. */
+    * [[extractImageMeta]]; ImageIO reader instances stay task-local. */
   def decodeImageStats(ds: Dataset[(Long, Array[Byte])], batchSize: Int = 256): DataFrame = {
     import ds.sparkSession.implicits._
     ds.mapPartitions { it =>
@@ -711,33 +636,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Resize plumbing for the STUB header format (audio/video stand-in):
-    * rewrites header dims by `scale`, payload untouched. Real image
-    * resampling lives in [[resizeImageNearest]]. */
-  def resize(ds: Dataset[(Long, Array[Byte])], scale: Double): Dataset[(Long, Array[Byte])] = {
-    import ds.sparkSession.implicits._
-    ds.map { case (id, bytes) =>
-      FakeCodec.decodeMeta(bytes) match {
-        case Some(m) =>
-          val payload = bytes.drop(FakeCodec.HeaderLen)
-          (id, FakeCodec.encode(Kind.of(bytes(4)),
-            math.max(1, (m.width * scale).toInt),
-            math.max(1, (m.height * scale).toInt), m.nFrames, payload))
-        case None => (id, bytes)
-      }
-    }
-  }
-
-  /** Frame-sample plumbing for video-like media: indices of every k-th
-    * frame — `(id, frame_idx)` rows, one per sampled frame. */
-  def frameSample(ds: Dataset[(Long, Array[Byte])], everyK: Int): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.flatMap { case (id, bytes) =>
-      FakeCodec.decodeMeta(bytes).toSeq.flatMap(m => 0 until m.nFrames by everyK)
-        .map(idx => (id, idx))
-    }.toDF("id", "frame_idx")
   }
 
   /** REAL animated-GIF codec through `javax.imageio` (JDK-built-in,

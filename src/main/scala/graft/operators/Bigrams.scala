@@ -95,11 +95,10 @@ object Bigrams {
     * (`WordCountV2.java:51-53`): `key \t value` lines, `part-*` files +
     * `_SUCCESS`, keys sorted within each partition (MapReduce's shuffle
     * sort made that implicit; here it is explicit and only at the sink). */
-  def writeTsv(df: DataFrame, outDir: String, numPartitions: Int = 32,
-               sortCols: Seq[String] = Seq("bigram")): Unit = {
+  def writeTsv(df: DataFrame, outDir: String, numPartitions: Int = 32): Unit = {
     val cols = df.columns.map(col)
-    df.repartition(numPartitions, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
+    df.repartition(numPartitions, col("bigram"))
+      .sortWithinPartitions(col("bigram"))
       .select(concat_ws("\t", cols: _*).as("value"))
       .write.mode(SaveMode.Overwrite).text(outDir)
   }

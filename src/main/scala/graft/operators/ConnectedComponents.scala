@@ -27,14 +27,6 @@ import org.apache.spark.sql.functions._
   * default, reliable shared-FS files when `spark.graft.checkpointDir`
   * is set), or each round re-executes the whole upstream
   * plan — including whatever expensive self-join produced the edges.
-  * For adversarial diameters (long chains at
-  * billions of edges) use [[components(edges*]]'s sibling
-  * [[componentsStar]]: alternating large-star/small-star contraction
-  * bounds rounds by O(log² n) regardless of diameter (spec: a
-  * 600-node path converges in ≤15 alternations where min-label would
-  * need 599 rounds). Min-label stays the default for near-dup
-  * graphs — shallow clusters converge in single-digit rounds with
-  * half the per-round shuffles.
   */
 object ConnectedComponents {
 
@@ -123,97 +115,6 @@ object ConnectedComponents {
       .join(labels.withColumnRenamed("u", idCol), Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("label"), col(idCol)).as("component"))
-  }
-
-  /** Connected components by ALTERNATING STAR CONTRACTION — the
-    * adversarial-diameter variant. Min-label propagation (above) runs
-    * `diameter` rounds: right for shallow near-dup graphs, ruinous
-    * for a million-node chain. The alternating algorithm from the
-    * MapReduce-components literature instead rewires the edge set
-    * itself each round:
-    *
-    *  - LARGE-STAR (on the symmetrized adjacency of u): point every
-    *    neighbor LARGER than u at `m = min(Γ(u) ∪ {u})`;
-    *  - SMALL-STAR (edges keyed by their larger endpoint): point every
-    *    smaller neighbor — and u itself — at the minimum.
-    *
-    * Each pass at least halves long chains, so the edge set collapses
-    * to a star forest (every edge `(node, component-min)`) in
-    * O(log² n) rounds regardless of diameter. Per round: two grouped
-    * aggregations + two joins, all hash-partitioned on node id; the
-    * working set only shrinks. Same output contract as
-    * [[components]]; pick THIS one when the pair graph's diameter is
-    * not known to be small. */
-  def componentsStar(edges: DataFrame, aCol: String, bCol: String,
-                     vertices: DataFrame, idCol: String,
-                     maxIter: Int = 50): DataFrame =
-    componentsStarWithRounds(edges, aCol, bCol, vertices, idCol, maxIter)._1
-
-  /** [[componentsStar]] + the number of alternating rounds it ran —
-    * exposed so tests can assert the logarithmic bound. */
-  private[graft] def componentsStarWithRounds(
-      edges: DataFrame, aCol: String, bCol: String,
-      vertices: DataFrame, idCol: String,
-      maxIter: Int = 50): (DataFrame, Int) = {
-    require(maxIter >= 1)
-    // canonical undirected start: (larger, smaller), no self-loops
-    var e = edges
-      .select(greatest(col(aCol), col(bCol)).as("u"),
-        least(col(aCol), col(bCol)).as("v"))
-      .filter(col("u") =!= col("v") && col("u").isNotNull && col("v").isNotNull)
-      .distinct()
-      .transform(Checkpoints.materialize)
-    var converged = e.isEmpty
-    var iter = 0
-    var checksum = starChecksum(e)
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR: m = min over the full neighborhood (and u); every
-      // neighbor above u re-points at m. Checkpointed: both small-star
-      // branches (the min agg and the join) read it.
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy(col("u"))
-        .agg(least(min(col("v")), col("u")).as("m"))
-      val ls = sym.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .transform(Checkpoints.materialize)
-      // SMALL-STAR: edges already point large→small; every small
-      // neighbor and u itself re-point at the neighborhood min
-      val mins2 = ls.groupBy(col("u"))
-        .agg(min(col("v")).as("m"))
-      val ss = ls.join(mins2, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins2.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .transform(Checkpoints.materialize)
-      val next = starChecksum(ss)
-      converged = next == checksum
-      checksum = next
-      unpersistOf(ls)
-      unpersistOf(e)
-      e = ss
-      iter += 1
-    }
-    // at the fixpoint e IS the star forest: (node, component-min)
-    val out = vertices.select(col(idCol))
-      .join(e.select(col("u").as(idCol), col("v").as("component")),
-        Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("component"), col(idCol)).as("component"))
-    (out, iter)
-  }
-
-  /** Order-independent edge-set fingerprint: (count, sum of per-edge
-    * hashes as decimal — ANSI-safe against long overflow). Equal
-    * fingerprints across rounds = the star passes changed nothing. */
-  private def starChecksum(e: DataFrame): (Long, BigDecimal) = {
-    val row = e.agg(count(lit(1)),
-      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-        lit(BigDecimal(0)))).head()
-    (row.getLong(0), BigDecimal(row.getDecimal(1)))
   }
 
   private def unpersistOf(df: DataFrame): Unit = Checkpoints.free(df)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Multi-dimensional data layout: Z-order (Morton) clustering so that
   * parquet min/max statistics prune on EVERY clustered column, not
@@ -24,33 +25,21 @@ object Layout {
 
   /** The Morton key for `cols` (each a non-negative integral column
     * using at most `bits` low bits; higher bits are masked off). */
-  def zValue(cols: Seq[Column], bits: Int = 16): Column = {
-    require(cols.nonEmpty, "zValue: no columns")
-    require(bits >= 1 && cols.size * bits <= 63,
-      s"zValue: ${cols.size} cols x $bits bits must fit in a positive Long")
-    val k = cols.size
-    val terms = for {
-      (c, ci) <- cols.zipWithIndex
-      i <- 0 until bits
-    } yield shiftleft(
-      shiftright(c.cast("long"), i).bitwiseAND(lit(1L)),
-      i * k + (k - 1 - ci))
-    terms.reduce(_ + _)
-  }
+  def zValue(cols: Seq[Column], bits: Int = 16): Column =
+    ColumnBridge.column(zValueExpr(cols.map(ColumnBridge.expression), bits))
 
-  /** Catalyst-expression twin of [[zValue]], for registration in a
-    * FunctionRegistry (the SQL `zorder_key` path) — the registry hands
-    * over raw child Expressions, where a ColumnNode-backed Column
-    * composition would reach codegen unresolved. Same bit placement
-    * as [[zValue]], concrete nodes only. */
+  /** [[zValue]] over raw Catalyst expressions — the form the SQL
+    * `zorder_key` registration needs, since a FunctionRegistry hands
+    * over child Expressions. Bit `i` of input `c` lands at
+    * `i*k + (k-1-c)`, concrete nodes only. */
   private[graft] def zValueExpr(
       es: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       bits: Int): org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types.LongType
-    require(es.nonEmpty, "zValueExpr: no columns")
+    require(es.nonEmpty, "zValue: no columns")
     require(bits >= 1 && es.size * bits <= 63,
-      s"zValueExpr: ${es.size} cols x $bits bits must fit in a positive Long")
+      s"zValue: ${es.size} cols x $bits bits must fit in a positive Long")
     val k = es.size
     val terms = for {
       (e, ci) <- es.zipWithIndex

@@ -49,18 +49,12 @@ object Mixing {
   private def coin(key: Column, salt: String): Column =
     substring(md5(concat(key.cast("string"), lit(":" + salt)).cast("binary")), 1, 8)
 
-  /** Uniform deterministic sample: keep each row iff its coin lands
-    * under `rate`. */
-  def sampleUniform(df: DataFrame, keyCol: String, rate: Double,
-                    salt: String = "graft"): DataFrame =
-    df.filter(coin(col(keyCol), salt) < lit(rateThreshold(rate)))
-
   /** Quality-WEIGHTED deterministic sample: keep each row iff its coin
     * lands under a PER-ROW acceptance rate (any Column in [0,1] —
     * typically a quality score), the curation move that keeps
     * high-quality documents with certainty and down-samples the tail
     * proportionally instead of applying one blunt corpus-wide rate.
-    * Deterministic and content-addressed like [[sampleUniform]]: the
+    * Deterministic and content-addressed like [[sampleStratified]]: the
     * same row under the same salt always gets the same verdict, so
     * re-runs and incremental extensions are stable, and the filter is
     * map-side codegen over the scan — zero shuffle at any corpus size.
@@ -103,9 +97,10 @@ object Mixing {
     * Skew note: a quota cap means only the first `quota` rows per
     * source survive, but the SORT still sees every row of the hottest
     * source in one partition. At real scale pre-filter with
-    * [[sampleUniform]] at a rate that overshoots the quota by a safe
-    * margin (e.g. 2× quota / est_count) before ranking — the coin is
-    * shared, so pre-filtering never changes which rows win. */
+    * [[sampleStratified]] (same salt) at a rate that overshoots the
+    * quota by a safe margin (e.g. 2× quota / est_count) before
+    * ranking — the coin is shared, so pre-filtering never changes
+    * which rows win. */
   def mixSources(df: DataFrame, keyCol: String, sourceCol: String,
                  quotas: Map[String, Long], defaultQuota: Long = 0L,
                  salt: String = "graft"): DataFrame = {

@@ -3,81 +3,16 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Banded range join — for every left row, the right rows of the same
-  * key whose time falls in `[leftTime + lowerUs, leftTime + upperUs]`
-  * (inclusive). The temporal primitive behind "views in the hour
-  * before each purchase", "readings within ±5 min of each alarm".
-  *
-  * Plan shape: time is bucketed to the window width W = upper − lower,
-  * the right side lands in exactly ONE bucket per row, and each left
-  * row's window spans at most TWO adjacent buckets — so the join is a
-  * plain equi-join on `(keys…, bucket)` with the exact band applied as
-  * the join's residual condition. Candidates per left row are only the
-  * right rows in its two buckets, i.e. O(rows actually near it in
-  * time).
-  *
-  * The naive composition (equi-join on key + band filter afterwards)
-  * pairs EVERY left×right of a key before filtering: a power user with
-  * 10⁵ views × 10³ purchases materializes 10⁸ candidate rows where
-  * this shape builds only the views in each purchase's two hour
-  * buckets. That hot-key quadratic is the same trap [[AsOf]] escapes
-  * with its union+window pass; a range join genuinely needs pairs, so
-  * bucketing is the scale-safe way to bound them.
-  *
-  * Semantics: INNER — left rows with no right row in range (and rows
-  * with NULL time on either side) produce nothing. Outer shapes
-  * compose: aggregate this result and join back on the left spine
-  * (see a02 in [[graft.queries.AdvancedQueries]]).
+/** Interval joins. A POINT-in-band join (`r.t BETWEEN l.t + lo AND
+  * l.t + hi`) needs no operator: written as a plain inner join, it is
+  * bucketed by [[graft.plans.BandJoinRewrite]] (a02 is one).
   */
 object RangeJoin {
 
-  /** `left` and `right` must share exactly `keys` as common columns;
-    * right non-key columns (including `rightTime`) are appended to the
-    * left row, one output row per matched pair. Time columns are
-    * epoch-comparable integral numerics (e.g. µs). */
-  def rangeJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-                leftTime: String, rightTime: String,
-                lowerUs: Long, upperUs: Long): DataFrame = {
-    require(upperUs >= lowerUs,
-      s"rangeJoin: empty band [$lowerUs, $upperUs]")
-    val overlap = (left.columns.toSet & right.columns.toSet) -- keys
-    require(overlap.isEmpty,
-      s"rangeJoin: non-key columns appear on both sides: $overlap — rename first")
-    val clash = (left.columns.toSet ++ right.columns.toSet) & Set("_bucket", "_bkts")
-    require(clash.isEmpty,
-      "rangeJoin: column names _bucket/_bkts collide with internal working columns — rename first")
-
-    // bucket width = window width (min 1 for a point band). floorDiv
-    // spelled as pmod-then-div: the numerator is an exact multiple of
-    // w, so truncating `div` equals floor even for negative times.
-    val w = math.max(upperUs - lowerUs, 1L)
-    def bucketOf(e: String) = expr(s"(($e) - pmod(($e), ${w}L)) div ${w}L")
-
-    // a window exactly w wide spans at most two adjacent buckets;
-    // array_distinct collapses the point-band case. NULL left times
-    // yield a NULL bucket that the equi-join drops (inner semantics).
-    val l = left
-      .withColumn("_bkts", array_distinct(array(
-        bucketOf(s"`$leftTime` + (${lowerUs}L)"),
-        bucketOf(s"`$leftTime` + (${upperUs}L)"))))
-      .withColumn("_bucket", explode(col("_bkts"))).drop("_bkts")
-    val r = right.withColumn("_bucket", bucketOf(s"`$rightTime`"))
-
-    // right rows live in ONE bucket and the left buckets are distinct,
-    // so no matched pair can appear twice — no dedup pass needed
-    l.join(r, keys :+ "_bucket")
-      .filter(col(rightTime) >= col(leftTime) + lowerUs &&
-        col(rightTime) <= col(leftTime) + upperUs)
-      .drop("_bucket")
-      .select((left.columns.map(col) ++
-        right.columns.filterNot(keys.contains).map(col)).toSeq: _*)
-  }
-
   /** Interval OVERLAP join — one row per (left, right) pair of the
     * same key whose closed intervals `[lStart, lEnd]` and
-    * `[rStart, rEnd]` intersect. The interval×interval sibling of
-    * [[rangeJoin]] (which is point-in-band): sessions × incident
-    * windows, availability × booking spans.
+    * `[rStart, rEnd]` intersect: sessions × incident windows,
+    * availability × booking spans.
     *
     * Plan shape: both sides explode to the `bucketUs`-wide buckets
     * their interval covers and the join is a plain equi-join on

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *  - a broadcast-infeasible join whose *build* side is small enough to
   *    replicate `saltBuckets`× but whose probe side has heavy-hitter
   *    keys ([[saltedJoin]]);
-  *  - high-cardinality-accumulator aggregations (e.g. collect_set,
-  *    count distinct) where one hot group overwhelms a single reducer
-  *    ([[twoPhaseDistinctCount]]).
+  *  - distribution windows (rank, ntile, cume_dist) over a
+  *    low-cardinality key, where one key's rows would fill a single
+  *    task's window buffer ([[distributionRanks]], [[ntileFromRank]]).
   */
 object Skew {
 
@@ -154,17 +154,5 @@ object Skew {
     when(rank <= headRows, idiv(rank - 1L, base + lit(1L)) + lit(1L))
       .otherwise(rem + idiv(rank - headRows - 1L, greatest(base, lit(1L))) +
         lit(1L))
-  }
-
-  /** count(DISTINCT valueCol) per group, two-phase: first collapse
-    * (group, value) pairs — spreading a hot group across reducers by
-    * the value hash — then count per group. */
-  def twoPhaseDistinctCount(df: DataFrame, groupCols: Seq[String],
-                            valueCol: String): DataFrame = {
-    val g = groupCols.map(col)
-    df.select((groupCols :+ valueCol).map(col): _*)
-      .distinct() // shuffles on (group, value): hot groups spread by value
-      .groupBy(g: _*)
-      .agg(count(lit(1)).as(s"nd_$valueCol"))
   }
 }

@@ -58,14 +58,6 @@ object TextAnalysis {
   /** Whitespace-ish token count after sanitization. */
   def tokenCount(text: Column): Column = size(tokenize(text)).cast("long")
 
-  /** BPE-ish subword count: word chunks of ≤4 chars + digit runs —
-    * a deterministic proxy for tokenizer cost accounting. (Uses Java's
-    * \G anchor, so it carries no SQL oracle; [[bpeTokenCount]] is the
-    * oracle-portable variant.) */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(text), "(?<=\\G.{4})|[^a-z0-9]+"), t => t =!= lit("")))
-      .cast("long")
-
   /** GPT-2-style pre-tokenization classes: letter runs, SINGLE digits,
     * punctuation runs. Deliberately restricted to constructs Java
     * regex and RE2 interpret identically, so the count carries an
@@ -321,47 +313,24 @@ object TextAnalysis {
         sum(col("cb")).as("_sn"), sum(col("cp")).as("_sd"))
   }
 
-  /** CCNet-style quality-bucket assignment: every document (with ≥1
-    * bigram) lands in `head` / `middle` / `tail` by its corpus-LM
+  /** CCNet-style quality buckets, the decision stage of the
+    * perplexity-filter pipeline, in three pieces: [[lmScored]] →
+    * [[decileBounds]] → [[assignQualityBuckets]] (t24 composes them,
+    * memoizing the boundary table per corpus). Every document with ≥1
+    * bigram lands in `head` / `middle` / `tail` by its corpus-LM
     * fluency percentile WITHIN ITS LANGUAGE, plus the sampling weight
-    * a mixing pass would apply per bucket — the decision stage of the
-    * perplexity-filter pipeline (CCNet buckets by per-language LM
-    * perplexity terciles; here deciles 9–10 = head, 5–8 = middle).
+    * a mixing pass would apply per bucket (CCNet buckets by
+    * per-language LM perplexity terciles; here deciles 9–10 = head,
+    * 5–8 = middle). Docs with fewer than 2 tokens have no bigrams,
+    * hence no fluency evidence, and are absent (same contract as
+    * [[bigramLmScores]]).
     *
     * Scale shape — exact quantiles WITHOUT a per-language sort: a
     * per-language `ntile` window would collapse each language onto one
-    * task (the classic 100 TB bottleneck). Instead the score becomes
-    * an integer surrogate `score_ppm = (sn·10⁶) div sd` (exact
-    * integer arithmetic; headroom to sn ≈ 9e12 bigram occurrences),
-    * the corpus aggregates to a BOUNDED `(lang, score_ppm)` histogram
-    * (≤ 10⁶ rows per language by construction), the cumulative
-    * distribution is a window over that bounded stats frame — the
-    * d12/vocabGrowth pattern: windows run over outputs, never over
-    * the corpus — and documents get their decile back through a
-    * broadcast join on `(lang, score_ppm)`. Ties share a ppm value
-    * and therefore a decile (cume_dist semantics: the group's upper
-    * rank decides), which keeps the assignment deterministic and
-    * engine-independent — `ceil(10·cum/n)` in pure integer math.
-    * Docs with fewer than 2 tokens have no bigrams, hence no fluency
-    * evidence, and are absent (same contract as [[bigramLmScores]]).
-    *
-    * What ships back to the corpus is the decile BOUNDARY table
-    * (`(lang, decile, lo_ppm, hi_ppm)` — ≤ 10 rows per language), not
-    * the full ppm histogram: the broadcast stays dimension-sized no
-    * matter how many languages the corpus carries (the histogram form
-    * is bounded at ~1e6 rows PER LANGUAGE, which a high-cardinality
-    * lang column multiplies past any sane broadcast — ADVICE r09). */
-  def qualityBuckets(docs: DataFrame, idCol: String, textCol: String,
-                     langCol: String): DataFrame = {
-    val scored = lmScored(docs, idCol, textCol, langCol)
-    assignQualityBuckets(scored, idCol, langCol,
-      decileBounds(scored, langCol))
-  }
-
-  /** Per-doc integer fluency surrogate: `(id, lang, n_bg, score_ppm)`
-    * with `score_ppm = (sn·10⁶) div sd` — [[qualityBuckets]]'s corpus
-    * pass, exposed so callers can memoize the (tiny) decile-boundary
-    * table separately from this per-invocation scan. */
+    * task (the classic 100 TB bottleneck). Instead this pass turns the
+    * score into an integer surrogate `score_ppm = (sn·10⁶) div sd`
+    * (exact integer arithmetic; headroom to sn ≈ 9e12 bigram
+    * occurrences): `(id, lang, n_bg, score_ppm)`. */
   def lmScored(docs: DataFrame, idCol: String, textCol: String,
                langCol: String): DataFrame =
     bigramLmRaw(docs, idCol, textCol)
@@ -375,7 +344,14 @@ object TextAnalysis {
     * cumulative distribution is a window over THAT stats frame (never
     * the corpus), and `ceil(10·cum/n)` ranges aggregate to one row per
     * decile. Every observed ppm value falls in exactly one boundary
-    * range, so range assignment reproduces the per-value decile map. */
+    * range, so range assignment reproduces the per-value decile map.
+    * The histogram is bounded (≤ 10⁶ rows per language by
+    * construction) and the window runs over it — the d12/vocabGrowth
+    * pattern: windows run over outputs, never over the corpus. Ties
+    * share a ppm value and therefore a decile (cume_dist semantics:
+    * the group's upper rank decides), which keeps the assignment
+    * deterministic and engine-independent — `ceil(10·cum/n)` in pure
+    * integer math. */
   def decileBounds(scored: DataFrame, langCol: String): DataFrame = {
     val hist = scored.groupBy(col(langCol), col("score_ppm"))
       .agg(count(lit(1)).as("cnt"))
@@ -393,7 +369,11 @@ object TextAnalysis {
   /** Bucket assignment from a precomputed boundary table: broadcast
     * hash join on the language key with the ppm range as the join
     * residual — each scored row matches exactly one of its language's
-    * ≤ 10 boundary rows. */
+    * ≤ 10 boundary rows. What ships back to the corpus is that
+    * boundary table, not the ppm histogram: the broadcast stays
+    * dimension-sized however many languages the corpus carries (the
+    * histogram is bounded at ~1e6 rows PER LANGUAGE, which a
+    * high-cardinality lang column multiplies past any sane broadcast). */
   def assignQualityBuckets(scored: DataFrame, idCol: String, langCol: String,
                            bounds: DataFrame): DataFrame = {
     val s = scored.alias("s")

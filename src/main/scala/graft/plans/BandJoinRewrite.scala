@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.LongType
 
 /** Optimizer rule: rewrite naive BAND joins into the bucketed
   * range-join shape, so users who write the obvious condition get the
-  * scale-safe plan [[graft.operators.RangeJoin]] builds by hand.
+  * scale-safe plan. It is the engine's one band-join implementation
+  * (a02 is written as the plain join and planned here).
   *
   * The obvious spelling —
   *
@@ -36,9 +37,9 @@ import org.apache.spark.sql.types.LongType
   *
   * Fences: inner joins only; both times LongType (the engine's
   * epoch-µs convention — timestamp bands belong to the streaming
-  * range join's watermark machinery); skips joins already bucketed
-  * (a `_bucket`/`_graft_bucket` attribute in the condition — also
-  * what makes the rule idempotent under fixpoint); skips streaming
+  * range join's watermark machinery); skips joins it already
+  * bucketed (a `_graft_bucket` attribute in the condition — what
+  * makes the rule idempotent under fixpoint); skips streaming
   * plans; arithmetic that would overflow a Long abandons the rewrite
   * rather than corrupt it.
   *
@@ -113,8 +114,7 @@ object BandJoinRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, Inner, Some(cond), hint)
         if !j.isStreaming &&
-          !cond.references.exists(a =>
-            a.name == "_bucket" || a.name.startsWith("_graft_bucket")) =>
+          !cond.references.exists(_.name.startsWith("_graft_bucket")) =>
       val found = try {
         val bounds = splitConjuncts(cond)
           .flatMap(boundOf(_, left.outputSet, right.outputSet))

@@ -170,12 +170,13 @@ object AdvancedQueries {
     }),
 
     // Range join: views of the same user within the hour before each
-    // purchase, via the library operator ([[graft.operators.RangeJoin]]):
-    // hour-bucketed equi-join on (user_id, bucket), so a hot user's
-    // candidates are the views in each purchase's TWO buckets — never
-    // the O(purchases × views) blowup of join-then-band-filter. The
-    // left-outer shape (purchases with zero views kept at 0) composes
-    // as aggregate + join back on the purchase spine.
+    // purchase, written as the plain band join. [[graft.plans.BandJoinRewrite]]
+    // plans it as an hour-bucketed equi-join on (user_id, bucket), so a
+    // hot user's candidates are the views in each purchase's TWO
+    // buckets — never the O(purchases × views) blowup of
+    // join-then-band-filter. The left-outer shape (purchases with zero
+    // views kept at 0) composes as aggregate + join back on the
+    // purchase spine.
     "a02_range_join" -> ((s, dir) => {
       import s.implicits._
       val e = ev(s, dir).select($"user_id", $"event_id", $"event_type",
@@ -183,10 +184,9 @@ object AdvancedQueries {
       val p = e.filter($"event_type" === "purchase")
         .select($"user_id", $"event_id".as("purchase_id"), $"tus".as("ptus"))
       val v = e.filter($"event_type" === "view")
-        .select($"user_id", $"event_id".as("view_id"), $"tus".as("vtus"))
-      val pairs = graft.operators.RangeJoin.rangeJoin(p, v, Seq("user_id"),
-        leftTime = "ptus", rightTime = "vtus",
-        lowerUs = -3600000000L, upperUs = 0L)
+        .select($"user_id".as("vuser"), $"event_id".as("view_id"), $"tus".as("vtus"))
+      val pairs = p.join(v, $"user_id" === $"vuser" &&
+        $"vtus" >= $"ptus" - 3600000000L && $"vtus" <= $"ptus")
       val counts = pairs.groupBy($"purchase_id")
         .agg(count($"view_id").as("n_views_1h"))
       p.select($"purchase_id")

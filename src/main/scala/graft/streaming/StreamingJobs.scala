@@ -34,22 +34,14 @@ import graft.streaming.StreamingSessionize.Event
   * written. All per-invocation scratch (sentinels, checkpoint, sink)
   * lives under one work dir that is wiped and rebuilt per run, so the
   * query is a deterministic replay. The work dir comes from
-  * configuration ([[WorkDirKey]]) and is addressed through the Hadoop
-  * filesystem API, so on a real cluster it can point at HDFS/S3/NFS —
+  * configuration ([[graft.WorkDirs.WorkDirKey]]) and is addressed
+  * through the Hadoop filesystem API, so on a real cluster it can
+  * point at HDFS/S3/NFS —
   * storage the driver AND every executor can reach. Driver-local tmp
   * is only the fallback in local mode, where driver and executors
   * share one machine.
   */
 object StreamingJobs {
-
-  /** Conf key: shared-filesystem root for per-run streaming scratch
-    * (sentinel source, checkpoint, sink). Any Hadoop-resolvable URI
-    * (`hdfs://…`, `s3a://…`, `file:/…`). Precedence: this key, then
-    * the session's `spark.sql.streaming.checkpointLocation`, then —
-    * in local mode ONLY — the JVM temp dir. Off local mode with
-    * neither conf set, the drains refuse to run rather than write
-    * scratch executors cannot see. */
-  val WorkDirKey: String = graft.WorkDirs.StreamingWorkDirKey
 
   /** Shuffle/state partitions inside the drains. A streaming state
     * store commits EVERY partition in EVERY micro-batch regardless of
@@ -78,9 +70,8 @@ object StreamingJobs {
   private val SentinelSpacingUs: Long = 50L * 365 * 24 * 3600 * 1000000
 
   /** Per-run scratch dir for `job` over corpus `dir`, resolved by the
-    * shared [[graft.WorkDirs]] precedence (workDir conf → this
-    * object's [[WorkDirKey]] → checkpoint location → local-mode-only
-    * tmp). */
+    * shared [[graft.WorkDirs]] precedence (workDir conf → checkpoint
+    * location → local-mode-only tmp). */
   private[streaming] def workRoot(s: SparkSession, job: String, dir: String): HPath =
     graft.WorkDirs.scratch(s, job, dir)
 

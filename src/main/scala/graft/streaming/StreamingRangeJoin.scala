@@ -3,10 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Stream-stream banded range join — the streaming twin of
-  * [[graft.operators.RangeJoin]]: pairs of left/right rows sharing
-  * `keys` whose times fall within `[leftTime + lowerUs, leftTime +
-  * upperUs]`, both sides UNBOUNDED streams.
+/** Stream-stream banded range join — the streaming twin of the batch
+  * band join that [[graft.plans.BandJoinRewrite]] plans: pairs of
+  * left/right rows sharing `keys` whose times fall within `[leftTime +
+  * lowerUs, leftTime + upperUs]`, both sides UNBOUNDED streams.
   *
   * Spark's stream-stream join buffers both sides in state; the
   * event-time watermarks plus the time-range join condition are what

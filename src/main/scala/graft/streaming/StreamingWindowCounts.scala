@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Watermarked tumbling-window aggregation — the streaming twin of the
-  * batch `e03_hourly` query.
+/** Watermarked window aggregation — the streaming twin of the batch
+  * `e03_hourly` query.
   *
   * Append-mode semantics: a window's row is emitted exactly once, when
   * the watermark passes `window.end + delay`; state held per
@@ -14,16 +14,12 @@ import org.apache.spark.sql.functions._
   */
 object StreamingWindowCounts {
 
-  /** events must carry `tus: long` (epoch µs). */
-  def tumblingCounts(events: DataFrame, windowLen: String = "1 hour",
-                     watermarkDelay: String = "1 hour"): DataFrame =
-    slidingCounts(events, windowLen, windowLen, watermarkDelay)
-
-  /** SLIDING variant: each event lands in `windowLen/slide` overlapping
-    * windows (the generator is a codegen explode, state still per
-    * (window × type)); `slide == windowLen` degenerates to tumbling.
-    * Emission stays append-mode once-per-window — overlapping windows
-    * close in slide-step order as the watermark advances. */
+  /** Per-(window, event_type) counts over `events` carrying `tus:
+    * long` (epoch µs). Each event lands in `windowLen/slide`
+    * overlapping windows (the generator is a codegen explode, state
+    * still per (window × type)); `slide == windowLen` is the tumbling
+    * case. Emission stays append-mode once-per-window — overlapping
+    * windows close in slide-step order as the watermark advances. */
   def slidingCounts(events: DataFrame, windowLen: String = "1 hour",
                     slide: String = "30 minutes",
                     watermarkDelay: String = "1 hour"): DataFrame =

@@ -68,20 +68,6 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
-  test("star-contraction components match across media too") {
-    val chain = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
-    val vs = (1L to 25L).toDF("id")
-    val local = ConnectedComponents
-      .componentsStar(chain, "a", "b", vs, "id")
-      .orderBy("id").collect().toSeq
-    withReliable { _ =>
-      val reliable = ConnectedComponents
-        .componentsStar(chain, "a", "b", vs, "id")
-        .orderBy("id").collect().toSeq
-      assert(reliable == local)
-    }
-  }
-
   /** Simulated executor loss: drop EVERY persisted RDD's blocks,
     * blocking so the removal lands before the next iteration round
     * reads them — what a dead executor does to everything it cached

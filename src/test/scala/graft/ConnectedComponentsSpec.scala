@@ -87,53 +87,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(seen.head == 7, s"sym width ${seen.head} != pinned 7 (all: $seen)")
   }
 
-  private def runStar(edges: Seq[(Long, Long)], vertices: Seq[Long],
-                      maxIter: Int = 50): (Map[Long, Long], Int) = {
-    val (df, rounds) = ConnectedComponents.componentsStarWithRounds(
-      edges.toDF("a", "b"), "a", "b", vertices.toDF("id"), "id", maxIter)
-    (df.as[(Long, Long)].collect().toMap, rounds)
-  }
-
-  test("star contraction agrees with min-label and union-find on varied graphs") {
-    val fixtures = Seq(
-      // chain + cycle + self-loop + isolated
-      ((1L to 9L).toSeq, Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 6L),
-        (6L, 7L), (7L, 5L), (8L, 8L))),
-      // empty graph
-      ((1L to 4L).toSeq, Seq.empty[(Long, Long)]),
-      // two merged stars
-      ((0L to 10L).toSeq, Seq((0L, 5L), (1L, 5L), (2L, 5L), (6L, 10L),
-        (7L, 10L), (5L, 10L)))
-    )
-    fixtures.foreach { case (vs, es) =>
-      val (got, _) = runStar(es, vs)
-      assert(got === brute(es, vs), s"fixture $es")
-      assert(got === run(es, vs))
-    }
-    // random graphs vs union-find
-    var x = 3L
-    def nxt(m: Long): Long = {
-      x = x * 6364136223846793005L + 1442695040888963407L; math.floorMod(x, m)
-    }
-    (1 to 5).foreach { _ =>
-      val vs = (0L until 80L).toSeq
-      val es = Seq.fill(60)((nxt(80), nxt(80)))
-      assert(runStar(es, vs)._1 === brute(es, vs))
-    }
-  }
-
-  test("star contraction converges logarithmically on a long path") {
-    // a 600-node path has diameter 599: min-label needs ~599 rounds
-    // (it would NOT converge inside maxIter = 50), star contraction
-    // collapses it in O(log n) alternations
-    val n = 600L
-    val vertices = (1L to n).toSeq
-    val edges = (1L until n).map(i => (i, i + 1))
-    val (got, rounds) = runStar(edges, vertices, maxIter = 50)
-    assert(got.values.toSet === Set(1L), s"path did not converge: $rounds rounds")
-    assert(rounds <= 15, s"star contraction took $rounds rounds on a ${n}-path")
-  }
-
   test("leaves no persisted blocks behind (localCheckpoint is bounded)") {
     // localCheckpoint truncates lineage with executor-stored blocks;
     // ContextCleaner reclaims them once unreferenced — but the

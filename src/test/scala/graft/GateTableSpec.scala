@@ -32,7 +32,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * share live in `PartitionSizing` alone, and no pin parameter spells
   * "leave it to AQE" as 0. And it guards the streaming drains: the
   * far-future sentinel events are built on one line of
-  * `StreamingJobs`, and the drain width is no conf key.
+  * `StreamingJobs`, and the drain width is no conf key. And it guards
+  * the library packages against dead variants: every public or
+  * `private[graft]` member of `operators`, `functions`, `multimodal`
+  * and `streaming` is named somewhere in `src/main` or `perfbench`
+  * code other than its own definition (the `*Builtin` reference twins
+  * that tests compare against are exempt).
   */
 class GateTableSpec extends AnyFunSuite {
 
@@ -110,6 +115,81 @@ class GateTableSpec extends AnyFunSuite {
     val knob = filesMatching(
       java.util.regex.Pattern.quote("spark.graft.streaming.drainPartitions").r)
     assert(knob.isEmpty, s"the drain width is a constant, not a conf key: ${knob.mkString(", ")}")
+  }
+
+  /** `src` with comments dropped and plain string literals emptied;
+    * interpolated strings stay whole, since their `$name`s are code. */
+  private def codeOnly(src: String): String = {
+    val out = new StringBuilder
+    val n = src.length
+    var i = 0
+    def interpolated = i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_')
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        val j = src.indexOf('\n', i)
+        i = if (j < 0) n else j
+      } else if (src.startsWith("/*", i)) {
+        var depth = 0
+        var open = true
+        while (i < n && open) {
+          if (src.startsWith("/*", i)) { depth += 1; i += 2 }
+          else if (src.startsWith("*/", i)) { depth -= 1; i += 2; open = depth > 0 }
+          else i += 1
+        }
+        out.append(' ')
+      } else if (src.startsWith("\"\"\"", i)) {
+        var j = src.indexOf("\"\"\"", i + 3)
+        if (j < 0) j = n - 3
+        while (j + 3 < n && src(j + 3) == '"') j += 1
+        out.append(if (interpolated) src.substring(i, j + 3) else "\"\"")
+        i = j + 3
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
+        out.append(if (interpolated) src.substring(i, math.min(j + 1, n)) else "\"\"")
+        i = j + 1
+      } else if (src(i) == '\'' && i + 2 < n && (src(i + 1) == '\\' || src(i + 2) == '\'')) {
+        // a char literal, so a quoted '"' opens no string
+        val j = src.indexOf('\'', if (src(i + 1) == '\\') i + 3 else i + 2)
+        i = if (j < 0) n else j + 1
+      } else {
+        out.append(src(i))
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  test("operators, functions, multimodal and streaming members are all referenced") {
+    val decl = ("(?m)^[ \\t]*((?:(?:final|implicit|lazy|sealed|abstract|case|override|" +
+      "private|protected)(?:\\[\\w+\\])?\\s+)*)(def|val|var|object|class|trait|type)" +
+      "\\s+([A-Za-z_]\\w*)").r
+    val hidden = """\bprivate\b(?!\[graft\])|\bprotected\b|\boverride\b""".r
+    val calledImplicitly = Set("apply", "unapply", "unapplySeq", "update", "main")
+    val sources = {
+      val stream = Files.walk(Paths.get("perfbench", "src"))
+      try mainSources ++ stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      finally stream.close()
+    }
+    val code = sources.map(p => p -> codeOnly(Files.readString(p))).toMap
+    val uses = code.values.flatMap("[A-Za-z_]\\w*".r.findAllIn(_))
+      .toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val defs = code.values.flatMap(decl.findAllMatchIn(_).map(_.group(3)))
+      .toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val libraries = Seq("operators", "functions", "multimodal", "streaming")
+      .map(d => Paths.get("src", "main", "scala", "graft", d))
+    val unreferenced = for {
+      (path, text) <- code.toSeq
+      if libraries.exists(path.startsWith)
+      m <- decl.findAllMatchIn(text)
+      name = m.group(3)
+      if hidden.findFirstIn(m.group(1)).isEmpty
+      if !calledImplicitly(name) && !name.endsWith("Builtin")
+      if uses(name) <= defs(name)
+    } yield s"${path.getFileName}: ${m.group(2)} $name"
+    assert(unreferenced.isEmpty,
+      "members nothing in src/main or perfbench uses (delete them, or call them):\n" +
+        unreferenced.sorted.mkString("\n"))
   }
 
   test("gate-table markers present exactly once") {

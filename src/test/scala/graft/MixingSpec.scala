@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Mixing
@@ -51,27 +52,27 @@ class MixingSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"weighted sample shuffled:\n$p")
   }
 
-  test("sampleUniform is deterministic, rate-accurate, and repartition-stable") {
-    val ids = spark.range(0, 20000).toDF("id")
-    val kept = Mixing.sampleUniform(ids, "id", 0.25, salt = "t")
+  test("sampleStratified is deterministic, rate-accurate, and repartition-stable") {
+    // one stratum, so the default rate never applies
+    val ids = spark.range(0, 20000).toDF("id").withColumn("s", lit("all"))
+    def sample(df: DataFrame, rate: Double) =
+      Mixing.sampleStratified(df, "id", "s", Map("all" -> rate), salt = "t")
+    val kept = sample(ids, 0.25)
     val n = kept.count()
     // binomial(20000, 0.25): mean 5000, sd ~61 — 5 sd of slack
     assert(math.abs(n - 5000) < 310, s"kept $n of 20000 at rate 0.25")
     // identical membership on a differently-partitioned copy
-    val kept2 = Mixing.sampleUniform(ids.repartition(13), "id", 0.25, salt = "t")
+    val kept2 = sample(ids.repartition(13), 0.25)
     assert(kept2.count() === n)
     assert(kept.join(kept2, Seq("id"), "left_anti").count() === 0)
-    // rate edges
-    assert(Mixing.sampleUniform(ids, "id", 1.0, "t").count() === 20000)
-    assert(Mixing.sampleUniform(ids, "id", 0.0, "t").count() === 0)
   }
 
   test("nested sample rates compose: the 0.125 sample is a subset of the 0.25 sample") {
     // same salt → the coin is shared → lower rates nest inside higher
     // ones (the property that makes staged down-sampling reproducible)
-    val ids = spark.range(0, 5000).toDF("id")
-    val small = Mixing.sampleUniform(ids, "id", 0.125, "t")
-    val big = Mixing.sampleUniform(ids, "id", 0.25, "t")
+    val ids = spark.range(0, 5000).toDF("id").withColumn("s", lit("all"))
+    val small = Mixing.sampleStratified(ids, "id", "s", Map("all" -> 0.125), salt = "t")
+    val big = Mixing.sampleStratified(ids, "id", "s", Map("all" -> 0.25), salt = "t")
     assert(small.join(big, Seq("id"), "left_anti").count() === 0)
   }
 
@@ -115,12 +116,14 @@ class MixingSpec extends SparkSpec {
   }
 
   test("pre-filtering with the shared coin never changes mix winners") {
-    // the Skew note on mixSources: sampleUniform at an overshooting
-    // rate is a safe pre-filter because coin order is preserved
+    // the Skew note on mixSources: the shared coin under an
+    // overshooting rate is a safe pre-filter because coin order is
+    // preserved
     val d = docs
     val direct = Mixing.mixSources(d, "doc_id", "source",
       Map.empty, defaultQuota = 5L, salt = "q")
-    val pre = Mixing.sampleUniform(d, "doc_id", 0.9, salt = "q")
+    val pre = Mixing.sampleStratified(d, "doc_id", "source",
+      Map("src0" -> 0.9), defaultRate = 0.9, salt = "q")
     val staged = Mixing.mixSources(pre, "doc_id", "source",
       Map.empty, defaultQuota = 5L, salt = "q")
     // winners whose coin survived the pre-filter are identical ranks;

@@ -1,51 +1,9 @@
 package graft
 
 import graft.multimodal.Multimodal
-import graft.multimodal.Multimodal.{FakeCodec, Kind}
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
-
-  test("codec roundtrip: header survives encode/decode, payload intact") {
-    val payload = Array[Byte](1, 2, 3, 4, 5)
-    val bytes = FakeCodec.encode(Kind.Video, 640, 480, 42, payload)
-    val meta = FakeCodec.decodeMeta(bytes).get
-    assert(meta == Multimodal.MediaMeta("video", 640, 480, 42, 5L))
-    assert(FakeCodec.decodePixels(bytes).get.toSeq == payload.toSeq)
-  }
-
-  test("decodeMeta rejects garbage and truncated input") {
-    assert(FakeCodec.decodeMeta(Array[Byte](1, 2, 3)).isEmpty)
-    assert(FakeCodec.decodeMeta("not media at all!!".getBytes).isEmpty)
-    assert(FakeCodec.decodeMeta(null).isEmpty)
-  }
-
-  test("extractMeta: batched decode over a Dataset") {
-    val ds = spark.range(0, 100).as[Long].map(i => (i, Multimodal.synthesize(i)))
-    val meta = Multimodal.extractMeta(ds, batchSize = 16)
-    val rows = meta.collect()
-    assert(rows.length == 100)
-    assert(rows.forall(_.getAs[String]("kind") == "image"))
-    val r7 = rows.find(_.getAs[Long]("id") == 7L).get
-    assert(r7.getAs[Int]("width") == 64 + (7 * 7919 % 1216))
-    assert(r7.getAs[Int]("height") == 64 + (7 * 104729 % 656))
-  }
-
-  test("resize scales dimensions, preserves kind and payload") {
-    val ds = Seq((1L, FakeCodec.encode(Kind.Audio, 100, 50, 3, Array[Byte](9, 9)))).toDS()
-    val out = Multimodal.resize(ds, 0.5).collect().head
-    val meta = FakeCodec.decodeMeta(out._2).get
-    assert(meta.kind == "audio")
-    assert(meta.width == 50 && meta.height == 25 && meta.nFrames == 3)
-    assert(FakeCodec.decodePixels(out._2).get.toSeq == Seq[Byte](9, 9))
-  }
-
-  test("frameSample emits every k-th frame index") {
-    val ds = Seq((5L, FakeCodec.encode(Kind.Video, 10, 10, 25, Array.empty[Byte]))).toDS()
-    val idx = Multimodal.frameSample(ds, everyK = 10).collect()
-      .map(r => r.getAs[Int]("frame_idx")).sorted.toSeq
-    assert(idx == Seq(0, 10, 20))
-  }
 
   test("ImageCodec: real PNG and BMP bytes round-trip pixels exactly") {
     import Multimodal.ImageCodec

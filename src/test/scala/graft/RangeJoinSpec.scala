@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.RangeJoin
@@ -19,14 +20,27 @@ class RangeJoinSpec extends SparkSpec {
         rt >= lt + lower && rt <= lt + upper
     } yield (lk, lid, rid, rt.longValue)).toSet
 
+  /** The plain band join, as a02 writes it; SparkSpec's session
+    * carries [[graft.plans.BandJoinRewrite]], which buckets it. */
+  private def bandJoin(left: Seq[(Long, Long, java.lang.Long)],
+                       right: Seq[(Long, Long, java.lang.Long)],
+                       lower: Long, upper: Long): DataFrame = {
+    val l = left.toDF("k", "lid", "lt")
+    val r = right.toDF("k", "rid", "rt")
+    l.join(r, l("k") === r("k") &&
+        r("rt") >= l("lt") + lower && r("rt") <= l("lt") + upper)
+      .select(l("k"), $"lid", $"rid", $"rt")
+  }
+
   private def run(left: Seq[(Long, Long, java.lang.Long)],
                   right: Seq[(Long, Long, java.lang.Long)],
                   lower: Long, upper: Long): Set[(Long, Long, Long, Long)] = {
-    val l = left.toDF("k", "lid", "lt")
-    val r = right.toDF("k", "rid", "rt")
-    RangeJoin.rangeJoin(l, r, Seq("k"), "lt", "rt", lower, upper)
-      .select($"k", $"lid", $"rid", $"rt")
-      .as[(Long, Long, Long, Long)].collect().toSet
+    val df = bandJoin(left, right, lower, upper)
+    val plan = df.queryExecution.optimizedPlan.toString
+    if (upper >= lower)
+      assert(plan.contains("_graft_bucket_l"), s"band [$lower, $upper] not bucketed")
+    else assert(!plan.contains("_graft_bucket"), s"empty band [$lower, $upper] bucketed")
+    df.as[(Long, Long, Long, Long)].collect().toSet
   }
 
   test("matches brute force on deterministic fuzz incl. nulls and negatives") {
@@ -54,19 +68,8 @@ class RangeJoinSpec extends SparkSpec {
     val r = Seq((1L, 2L, java.lang.Long.valueOf(Hour)),
                 (1L, 3L, java.lang.Long.valueOf(Hour + 1)))
     assert(run(l, r, 0L, 0L) == Set((1L, 1L, 2L, Hour)))
-    intercept[IllegalArgumentException](
-      RangeJoin.rangeJoin(l.toDF("k", "lid", "lt"), r.toDF("k", "rid", "rt"),
-        Seq("k"), "lt", "rt", 0L, -1L))
-  }
-
-  test("rejects overlapping non-key columns and reserved names") {
-    val l = Seq((1L, 1L)).toDF("k", "t")
-    intercept[IllegalArgumentException](
-      RangeJoin.rangeJoin(l, l, Seq("k"), "t", "t", -1L, 0L))
-    val lb = Seq((1L, 1L, 2L)).toDF("k", "lt", "_bucket")
-    val rb = Seq((1L, 1L)).toDF("k", "rt")
-    intercept[IllegalArgumentException](
-      RangeJoin.rangeJoin(lb, rb, Seq("k"), "lt", "rt", -1L, 0L))
+    // an empty band is left to the planner and matches nothing
+    assert(run(l, r, 0L, -1L).isEmpty)
   }
 
   test("hot key: candidates stay bounded by bucket occupancy, not |L|x|R|") {
@@ -83,8 +86,13 @@ class RangeJoinSpec extends SparkSpec {
     // result is exact
     assert(run(purchases, views, -Hour, 0L) ==
       brute(purchases, views, -Hour, 0L))
+    // and the executed join hashes on the bucket, not on k alone
+    val executed = bandJoin(purchases, views, -Hour, 0L)
+      .queryExecution.executedPlan.toString
+    assert(executed.linesIterator.exists(l => l.contains("Join") && l.contains("_graft_bucket")),
+      s"bucket missing from the join keys:\n${executed.take(800)}")
 
-    // candidate bound: replicate the operator's bucket math and count
+    // candidate bound: replicate the rule's bucket math and count
     // equi-join matches BEFORE the band filter — the rows a worker
     // actually materializes
     def bucket(c: String) = expr(s"(($c) - pmod(($c), ${Hour}L)) div ${Hour}L")

@@ -73,7 +73,8 @@ class RateSourceStreamingSpec extends SparkSpec {
         concat(lit("type_"), (col("value") % 3).cast("string")).as("event_type"),
         (col("value") % 7).cast("double").as("value"))
     val q = StreamingWindowCounts
-      .tumblingCounts(events, windowLen = "2 seconds", watermarkDelay = "1 second")
+      .slidingCounts(events, windowLen = "2 seconds", slide = "2 seconds",
+        watermarkDelay = "1 second")
       .writeStream.format("memory").queryName("rate_windows")
       .outputMode("append").start()
     try {

@@ -171,15 +171,6 @@ class SkewAndBucketingSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("twoPhaseDistinctCount matches countDistinct") {
-    val df = (1 to 1000).map(i => (i % 3, s"v${i % 37}")).toDF("g", "v")
-    val expected = df.groupBy($"g").agg(countDistinct($"v").as("nd_v"))
-      .as[(Int, Long)].collect().toMap
-    val got = Skew.twoPhaseDistinctCount(df, Seq("g"), "v")
-      .as[(Int, Long)].collect().toMap
-    assert(got == expected)
-  }
-
   test("bucketed tables join without a shuffle exchange") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val o = spark.read.parquet(s"$sfDir/orders.parquet")

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, WorkDirs}
 
 /** The drains' scratch-dir contract: configurable shared-FS root
   * (cluster-safe), full-digest per-corpus tags (collision-proof), and
@@ -17,14 +17,14 @@ class StreamingJobsSpec extends SparkSpec {
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   test("workRoot honors the graft workDir conf over everything else") {
-    spark.conf.set(StreamingJobs.WorkDirKey, "/shared/graft-work")
+    spark.conf.set(WorkDirs.WorkDirKey, "/shared/graft-work")
     spark.conf.set("spark.sql.streaming.checkpointLocation", "/other/ckpt")
     try {
       val p = StreamingJobs.workRoot(spark, "e05", "/data/corpusA")
       assert(p.toString ==
         s"/shared/graft-work/graft_e05_${md5hex("/data/corpusA")}")
     } finally {
-      spark.conf.unset(StreamingJobs.WorkDirKey)
+      spark.conf.unset(WorkDirs.WorkDirKey)
       spark.conf.unset("spark.sql.streaming.checkpointLocation")
     }
   }
@@ -69,7 +69,7 @@ class StreamingJobsSpec extends SparkSpec {
     Files.move(part, corpus.resolve("events.parquet"))
 
     val workOverride = Files.createTempDirectory("graft-jobs-work")
-    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    spark.conf.set(WorkDirs.WorkDirKey, workOverride.toString)
     try {
       val got = StreamingJobs
         .sessionizeAvailableNow(spark, corpus.toString, gapUs = 30 * Min)
@@ -88,7 +88,7 @@ class StreamingJobsSpec extends SparkSpec {
       assert(!Files.exists(tmpStray), "drain wrote to tmp despite the override")
       // the drain partition override must not leak into the session
       assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+    } finally spark.conf.unset(WorkDirs.WorkDirKey)
   }
 
   test("incremental re-drain: unchanged inputs re-serve; any change re-drains") {
@@ -110,7 +110,7 @@ class StreamingJobsSpec extends SparkSpec {
       (1L, 2L, (base + 10 * Min) * 1000, "click", 0.0)))
 
     val workOverride = Files.createTempDirectory("graft-reuse-work")
-    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    spark.conf.set(WorkDirs.WorkDirKey, workOverride.toString)
     try {
       def drain(gapUs: Long = 30 * Min) = StreamingJobs
         .sessionizeAvailableNow(spark, corpus.toString, gapUs)
@@ -144,7 +144,7 @@ class StreamingJobsSpec extends SparkSpec {
         (1L, 1L, base, base + 10 * Min, 2L),
         (2L, 1L, base + 5 * Min, base + 5 * Min, 1L)),
         "modified source must invalidate the drain signature")
-    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+    } finally spark.conf.unset(WorkDirs.WorkDirKey)
   }
 
   test("a sink committed by other drain code misses and re-drains") {
@@ -159,7 +159,7 @@ class StreamingJobsSpec extends SparkSpec {
       .findFirst().get(), corpus.resolve("events.parquet"))
 
     val workOverride = Files.createTempDirectory("graft-code-work")
-    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    spark.conf.set(WorkDirs.WorkDirKey, workOverride.toString)
     try {
       def drain() = StreamingJobs.sessionizeAvailableNow(spark, corpus.toString)
         .as[(Long, Long, Long, Long, Long)].collect().toSet
@@ -179,7 +179,7 @@ class StreamingJobsSpec extends SparkSpec {
       assert(drain() == first)
       assert(Files.readString(sig) == ours, "the re-drain must re-sign with this build's digest")
       assert(!Files.exists(marker), "a sink signed by other code was re-served")
-    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+    } finally spark.conf.unset(WorkDirs.WorkDirKey)
   }
 
   test("directory-layout corpus: drains stream part files, signature tracks the listing") {
@@ -199,7 +199,7 @@ class StreamingJobsSpec extends SparkSpec {
       .repartition(2).write.parquet(corpus.resolve("events.parquet").toString)
 
     val workOverride = Files.createTempDirectory("graft-dirlayout-work")
-    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    spark.conf.set(WorkDirs.WorkDirKey, workOverride.toString)
     try {
       def drain() = StreamingJobs
         .sessionizeAvailableNow(spark, corpus.toString, gapUs = 30 * Min)
@@ -226,7 +226,7 @@ class StreamingJobsSpec extends SparkSpec {
       assert(drain() == expected +
         ((3L, 1L, base + 7 * Min, base + 7 * Min, 1L)),
         "rewritten directory must invalidate the drain signature")
-    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+    } finally spark.conf.unset(WorkDirs.WorkDirKey)
   }
 
   test("sentinel drains over an empty events table return their non-empty shape") {
@@ -261,7 +261,7 @@ class StreamingJobsSpec extends SparkSpec {
       "e17" -> (StreamingJobs.zoneMapsAvailableNow(spark, _)),
       "e18" -> (StreamingJobs.windowUsersAvailableNow(spark, _)))
     val workOverride = Files.createTempDirectory("graft-empty-work")
-    spark.conf.set(StreamingJobs.WorkDirKey, workOverride.toString)
+    spark.conf.set(WorkDirs.WorkDirKey, workOverride.toString)
     try drains.foreach { case (job, drain) =>
       def shape(df: org.apache.spark.sql.DataFrame) =
         df.schema.fields.map(f => (f.name, f.dataType)).toSeq
@@ -276,6 +276,6 @@ class StreamingJobsSpec extends SparkSpec {
       // the empty branch is really taken: no sink was drained for it
       assert(!Files.exists(workOverride
         .resolve(s"graft_${job}_${md5hex(empty)}").resolve("drain-sig")))
-    } finally spark.conf.unset(StreamingJobs.WorkDirKey)
+    } finally spark.conf.unset(WorkDirs.WorkDirKey)
   }
 }

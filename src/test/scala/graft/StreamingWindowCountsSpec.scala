@@ -15,7 +15,7 @@ class StreamingWindowCountsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Double)] // (tus, event_type, value)
     val events = input.toDS().toDF("tus", "event_type", "value")
-    val counts = StreamingWindowCounts.tumblingCounts(events)
+    val counts = StreamingWindowCounts.slidingCounts(events, "1 hour", "1 hour")
     val query = counts.writeStream.format("memory").queryName("win_test")
       .outputMode("append").start()
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.operators.TextAnalysis
@@ -50,8 +51,8 @@ class TextAnalysisSpec extends SparkSpec {
   test("token and subword counting") {
     val df = Seq("internationalization 42 ok").toDF("text")
     assert(df.select(TextAnalysis.tokenCount($"text")).as[Long].head() == 3L)
-    // internationalization → 5 chunks of ≤4, "42" → 1, "ok" → 1
-    assert(df.select(TextAnalysis.subwordCount($"text")).as[Long].head() == 7L)
+    // GPT-2 classes: one letter run, two SINGLE digits, one letter run
+    assert(df.select(TextAnalysis.bpeTokenCount($"text")).as[Long].head() == 4L)
   }
 
   test("redactPii scrubs emails and IPs; piiCount matches") {
@@ -140,6 +141,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(single.count() === 0)
   }
 
+  /** t24's composition: score, fit the decile boundaries, assign. */
+  private def qualityBuckets(d: DataFrame): DataFrame = {
+    val scored = TextAnalysis.lmScored(d, "doc_id", "text", "lang")
+    TextAnalysis.assignQualityBuckets(scored, "doc_id", "lang",
+      TextAnalysis.decileBounds(scored, "lang"))
+  }
+
   test("qualityBuckets: per-language deciles via the bounded histogram, all integer") {
     // lang "en": 10 docs with strictly increasing fluency — doc k
     // (k = 1..10) repeats "a b" k times then appends a unique garble
@@ -152,7 +160,7 @@ class TextAnalysisSpec extends SparkSpec {
     }
     val fr = Seq((21L, "x y x y x y", "fr"), (22L, "y q x z", "fr"))
     val d = (en ++ fr).toDF("doc_id", "text", "lang")
-    val got = TextAnalysis.qualityBuckets(d, "doc_id", "text", "lang")
+    val got = qualityBuckets(d)
       .select($"doc_id", $"lang", $"decile", $"bucket", $"weight_permille")
       .as[(Long, String, Long, String, Long)].collect()
       .map(r => r._1 -> r).toMap
@@ -170,9 +178,8 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got(21L)._3 === 10L && got(21L)._4 === "head")
     // ties share a ppm value and must share a decile: two identical
     // docs in a 2-doc language both land decile 10 (cume upper rank)
-    val tied = TextAnalysis.qualityBuckets(
-      Seq((1L, "a b c", "de"), (2L, "a b c", "de")).toDF("doc_id", "text", "lang"),
-      "doc_id", "text", "lang")
+    val tied = qualityBuckets(
+      Seq((1L, "a b c", "de"), (2L, "a b c", "de")).toDF("doc_id", "text", "lang"))
       .select($"decile").as[Long].collect().toSeq
     assert(tied === Seq(10L, 10L))
   }

@@ -33,17 +33,13 @@ class WorkDirsSpec extends SparkSpec {
     }
   }
 
-  test("general key wins over streaming key; streaming key wins over checkpoint location") {
+  test("workDir key wins over the checkpoint location") {
     val a = Files.createTempDirectory("graft-wa").toString
-    val b = Files.createTempDirectory("graft-wb").toString
     val c = Files.createTempDirectory("graft-wc").toString
     withConf("spark.sql.streaming.checkpointLocation", c) {
       assert(WorkDirs.root(spark) == c)
-      withConf(WorkDirs.StreamingWorkDirKey, b) {
-        assert(WorkDirs.root(spark) == b)
-        withConf(WorkDirs.WorkDirKey, a) {
-          assert(WorkDirs.root(spark) == a)
-        }
+      withConf(WorkDirs.WorkDirKey, a) {
+        assert(WorkDirs.root(spark) == a)
       }
     }
   }
